@@ -198,7 +198,7 @@ def main() -> None:
     # "reuse" — the timed metric (min-of-3 steady state) is unchanged.
     # The four warm-up queries above are pre-filled by design, so
     # their first sample is already steady-state; they are reported
-    # as-is and footnoted in OPTIMIZATION_r17.md.
+    # as-is.
     timings: dict[str, float] = {}
     cold_first_iter: dict[str, float] = {}
     for _ in range(3):

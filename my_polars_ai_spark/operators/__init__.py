@@ -1463,10 +1463,7 @@ def all_ops() -> dict[str, Op]:
 
     merged: dict[str, Op] = {}
     for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(f"my_polars_ai_spark.operators.{mod_name}")
-        except ModuleNotFoundError:
-            continue  # module not written yet (incremental build)
+        mod = importlib.import_module(f"my_polars_ai_spark.operators.{mod_name}")
         for name, op_ in mod.OPS.items():
             if name in merged:
                 raise ValueError(f"duplicate op {name!r} from {mod_name}")

@@ -15,6 +15,8 @@ schema + order-insensitive value hash, so:
 
 from __future__ import annotations
 
+import functools
+import inspect
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -102,22 +104,89 @@ def make_registrar(ops: dict[str, Op]):
     return op
 
 
-def evict_stopped_sessions(memo: dict) -> None:
+# Every @session_memo wrapper, in definition order (the memo tests
+# enumerate it), and the dependency lists of the fills in progress,
+# innermost last.
+SESSION_MEMOS: list = []
+_FILLING: list = []
+
+
+@dataclass(eq=False)
+class _MemoEntry:
+    value: object
+    cached: tuple  # the frames the fill .cache()d
+    deps: list  # the entries of the memos the fill called
+
+
+def session_memo(build):
+    """Memoize a session artifact builder.
+
+    ``build(spark, sf_dir, *params)`` returns ``(value, cached_frames)``;
+    the memo returns ``value``, keyed on ``(spark, sf_dir, *params)``
+    with defaults applied, so every consumer in a long-lived session
+    resolves the SAME DataFrames and shares their cache fills (a fresh
+    build would ``.cache()`` brand-new lineage objects whose fills are
+    never reused). Each call first evicts entries of stopped sessions.
+
+    A hit re-arms the ``.cache()`` marks of the entry and, first, of
+    every memo its fill called: an external
+    ``spark.catalog.clearCache()`` (bench.py's isolated re-measure, a
+    user resetting the session) unregisters the plans without the memo
+    knowing, and every later action would otherwise recompute the full
+    lineage (the LSH diamond re-ran its signature subtree per self-join
+    side: 12.7s vs 1.1s at sf0.1). ``df.storageLevel`` is a pure
+    CacheManager lookup (no job), and re-``cache()`` re-registers the
+    identical plan so the next action refills it once; upstream marks
+    go first so the downstream refill reads their caches."""
+    sig = inspect.signature(build)
+    entries: dict = {}
+
+    @functools.wraps(build)
+    def memo(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        key = tuple(bound.arguments.values())
+        _evict_stopped_sessions(entries)
+        entry = entries.get(key)
+        if entry is None:
+            _FILLING.append([])
+            try:
+                value, cached = build(*args, **kwargs)
+            finally:
+                deps = _FILLING.pop()
+            entry = entries[key] = _MemoEntry(value, cached, deps)
+        else:
+            _rearm(entry)
+        if _FILLING and entry not in _FILLING[-1]:
+            _FILLING[-1].append(entry)
+        return entry.value
+
+    memo.entries = entries
+    SESSION_MEMOS.append(memo)
+    return memo
+
+
+def _rearm(entry: _MemoEntry) -> None:
+    for dep in entry.deps:
+        _rearm(dep)
+    for f in entry.cached:
+        lvl = f.storageLevel
+        if not (lvl.useMemory or lvl.useDisk):
+            f.cache()
+
+
+def _evict_stopped_sessions(entries: dict) -> None:
     """Drop memo entries keyed by a stopped SparkSession.
 
-    Every session memo (``similarity._ANN_FRAMES``,
-    ``dedup._LSH_PAIRED``, ``classic_ml._QGD_XY`` /
-    ``_QGD_ARTIFACTS``) keys on ``(spark, ...)`` with a STRONG
-    reference to the session, so in a long-lived process that churns
-    sessions each stopped session's entry pins its JVM-backed
-    DataFrames (including cache-marked subtrees) forever — the r13
-    advice leak. Called at the top of every memo getter: the entries
-    are few (one per session x sf_dir), the liveness probe is a pure
-    driver-side attribute check (no job), and evicting on access
-    cannot change behavior for live sessions — a dead session's
-    frames are unusable anyway."""
+    Keys hold a STRONG reference to the session, so in a long-lived
+    process that churns sessions each stopped session's entry would pin
+    its JVM-backed DataFrames (including cache-marked subtrees)
+    forever. The entries are few (one per session x sf_dir x params),
+    the liveness probe is a pure driver-side attribute check (no job),
+    and evicting on access cannot change behavior for live sessions —
+    a dead session's frames are unusable anyway."""
     dead = []
-    for key in memo:
+    for key in entries:
         spark = key[0]
         try:
             stopped = spark.sparkContext._jsc is None
@@ -126,18 +195,16 @@ def evict_stopped_sessions(memo: dict) -> None:
             # Spark Connect session raises PySparkNotImplementedError
             # (a NotImplementedError subclass) on every sparkContext
             # access, and evicting it here would silently disable
-            # memoization — every getter call would re-register fresh
-            # .cache() frames without unpersisting the prior ones (the
-            # r14 advice). Fall back to the session's own is_stopped
-            # probe — in its own try/except (r15 advice): a Connect
-            # is_stopped property that itself raises (dropped client
-            # connection) must read as stopped/unreachable, not escape
-            # and break the getter; and a session with NO is_stopped
-            # at all has no liveness signal left, so it is evicted
-            # like any dead context (assume-live only for objects that
-            # actually expose the probe — otherwise a raising-
-            # sparkContext-but-probe-less class would pin its frames
-            # forever, the r13 leak reintroduced).
+            # memoization — every call would re-register fresh
+            # .cache() frames without unpersisting the prior ones.
+            # Fall back to the session's own is_stopped probe, in its
+            # own try/except: a Connect is_stopped property that itself
+            # raises (dropped client connection) must read as
+            # stopped/unreachable, not escape and break the memo; and a
+            # session with NO is_stopped at all has no liveness signal
+            # left, so it is evicted like any dead context (otherwise a
+            # raising-sparkContext-but-probe-less class would pin its
+            # frames forever).
             try:
                 probe = getattr(spark, "is_stopped", None)
                 stopped = True if probe is None else bool(probe)
@@ -148,28 +215,7 @@ def evict_stopped_sessions(memo: dict) -> None:
         if stopped:
             dead.append(key)
     for key in dead:
-        del memo[key]
-
-
-def rearm_cached(frames: "tuple[DataFrame, ...]") -> None:
-    """Re-register the ``.cache()`` marks on memoized DataFrames.
-
-    Session-memoized pipelines (``dedup._LSH_PAIRED``,
-    ``classic_ml._QGD_XY``) hand out the SAME DataFrame objects across
-    calls so their cache fills are shared. But an external
-    ``spark.catalog.clearCache()`` (bench.py's isolated re-measure, a
-    user resetting the session) unregisters the plans from the
-    CacheManager WITHOUT the memo knowing — after that, every execution
-    of the memoized frame silently recomputes its full lineage (the LSH
-    diamond re-executes the signature subtree once per self-join side:
-    measured 12.7s vs 1.1s at sf0.1). Calling this on every memo hit
-    makes the memo self-healing: ``df.storageLevel`` is a pure
-    CacheManager lookup (no job), and re-``cache()`` re-registers the
-    identical plan so the next action refills it once."""
-    for f in frames:
-        lvl = f.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            f.cache()
+        del entries[key]
 
 
 def signed_ratio_round(num, den, scale: int = ROUND_RATIO):

@@ -24,13 +24,12 @@ from pyspark.sql import functions as F
 
 from my_polars_ai_spark.operators.base import (
     Op,
-    evict_stopped_sessions,
     exact_floor_div,
     make_registrar,
     oracle_ratio_round,
     oracle_signed_ratio_round,
     ratio_round,
-    rearm_cached,
+    session_memo,
     signed_ratio_round,
 )
 from my_polars_ai_spark.operators.text import _EN_MARKERS, _MARKERS_SQL
@@ -276,45 +275,35 @@ _NB_SQL = """
 """
 
 
-# Scan splits at or above this use the shared-aggregate training pass
-# (one corpus explode); below it, the four concurrent single-task
-# subtrees win (see the op docstring). 8 ~ "the scan actually
-# parallelizes" — any healthy multi-row-group table clears it, every
-# single-row-group local fixture stays under it.
+# Scan partitions at or above this use the shared-aggregate training
+# pass (one corpus explode); below it, the four concurrent single-task
+# subtrees win (see the op docstring). getNumPartitions counts the
+# scan's byte-range splits (file size / maxSplitBytes, packed per
+# openCostInBytes), not row groups: 8 ~ "the scan actually
+# parallelizes" on a multi-file or large table.
 _NB_SPLITTABLE_MIN = 8
 
-# Memoized per (session, sf_dir) like the other diamond caches: the
-# (doc, lang, tok, m) training aggregate feeds tokm/tl/lt/v — four
-# consumers in one plan — so uncached the scan+explode lineage would
-# run four times (the exact duplication the shared shape removes).
-_NB_TOKM3: dict = {}
 
-# The branch probe (df.rdd.getNumPartitions()) plans the scan RDD on
-# the driver — a per-call cost worth paying once, not per action, so
-# the decision is memoized per (session, sf_dir) alongside the caches.
-_NB_SPLITTABLE: dict = {}
-
-
-def _nb_input_splittable(spark: SparkSession, sf_dir: str) -> bool:
-    evict_stopped_sessions(_NB_SPLITTABLE)
-    key = (spark, sf_dir)
-    if key not in _NB_SPLITTABLE:
-        d = _t(spark, sf_dir, "documents")
-        _NB_SPLITTABLE[key] = d.rdd.getNumPartitions() >= _NB_SPLITTABLE_MIN
-    return _NB_SPLITTABLE[key]
+def _nb_input_splittable(d: DataFrame) -> bool:
+    """The branch probe: plans the scan RDD on the driver (no job;
+    ~37 ms at sf0.1 on 4 cores), per call so a changed split conf
+    takes effect. Spark Connect has no RDD API; it gets the
+    concurrent branch."""
+    try:
+        return d.rdd.getNumPartitions() >= _NB_SPLITTABLE_MIN
+    except NotImplementedError:
+        return False
 
 
-def _nb_tokm3(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo
+def _nb_tokm3(spark: SparkSession, sf_dir: str):
     """naive_bayes_langid's shared training aggregate: token
     multiplicity per (doc_id, lang, tok). doc -> lang is functional,
     so the grain equals (doc_id, tok) and every training statistic is
     a small reduce over it: tl = sum(m) by (tok, lang), lt = sum(m)
-    by lang, v = countDistinct(tok), tokm = the table itself."""
-    evict_stopped_sessions(_NB_TOKM3)
-    key = (spark, sf_dir)
-    if key in _NB_TOKM3:
-        rearm_cached((_NB_TOKM3[key],))
-        return _NB_TOKM3[key]
+    by lang, v = countDistinct(tok), tokm = the table itself. Cached
+    and session-memoized: it feeds four consumers in one plan, so
+    uncached the scan+explode lineage would run four times."""
     d = _t(spark, sf_dir, "documents")
     tokm3 = (
         d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
@@ -323,8 +312,7 @@ def _nb_tokm3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("m"))
         .cache()
     )
-    _NB_TOKM3[key] = tokm3
-    return tokm3
+    return tokm3, (tokm3,)
 
 
 @op("naive_bayes_langid", oracle=_NB_SQL, tags=("ml", "text", "classifier"))
@@ -358,7 +346,7 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     concurrent shape. Both branches produce identical results
     (parity-tested on the split fixture)."""
     d = _t(spark, sf_dir, "documents")
-    if _nb_input_splittable(spark, sf_dir):
+    if _nb_input_splittable(d):
         tokm3 = _nb_tokm3(spark, sf_dir)
         tokm = tokm3.select("doc_id", "tok", "m")
         tl = tokm3.groupBy("tok", "lang").agg(F.sum("m").alias("c"))
@@ -587,16 +575,8 @@ def item_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Memoized per (session, sf_dir), the _QGD_XY pattern (r17, the r16
-# judge's What's-wrong 4): the r16 per-call .cache() on po/pairs
-# registered a FRESH CacheManager entry per call and never unpersisted
-# the previous one — the leak class the r14 memo families fixed. The
-# memo hands out the SAME cached frames; rearm_cached self-heals
-# after an external clearCache.
-_CF_SCORED: dict = {}
-
-
-def _cf_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo
+def _cf_scored_pairs(spark: SparkSession, sf_dir: str):
     """item_item_cf_topk's cached scored-pair table: each (pa < pb)
     co-purchase pair with its support n_ab, both degrees attached and
     the rounded cosine computed. Degree-join fold (r17, the r16
@@ -611,12 +591,9 @@ def _cf_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the degree reduce AND both sides of the pair join (a three-way
     diamond — uncached the scan+distinct subtree executes three
     times, measured 2.4s -> ~1.5s at sf0.1 in r16); the pair
-    self-join on ord is the op's dominant cost (guide §2.4)."""
-    evict_stopped_sessions(_CF_SCORED)
-    key = (spark, sf_dir)
-    if key in _CF_SCORED:
-        rearm_cached(_CF_SCORED[key])
-        return _CF_SCORED[key][1]
+    self-join on ord is the op's dominant cost (guide §2.4).
+    Session-memoized so repeated calls do not each register fresh
+    CacheManager entries."""
     po = (
         _t(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").alias("part"), F.col("l_orderkey").alias("ord"))
@@ -656,8 +633,7 @@ def _cf_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _CF_SCORED[key] = (po, scored_pairs)
-    return scored_pairs
+    return scored_pairs, (po, scored_pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -2627,35 +2603,19 @@ _QGD_TRAINED_SQL = f"""
 """
 
 
-# Memoized per (session, sf_dir): every consumer in a long-lived
-# session (the driver runs convergence + trained-scores back to back;
-# bench re-runs the scorer min-of-N) must reuse the SAME cached x/y
-# DataFrames — a fresh call would .cache() brand-new lineage objects,
-# so the old entries' fills are never reused and each call re-pays the
-# corpus split (the r10 bench measured the scorer at 4.75s in-bench vs
-# 2.5s warm purely from this).
-_QGD_XY: dict = {}
-_QGD_ARTIFACTS: dict = {}
-
-
-def _qgd_xy(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, DataFrame]":
+@session_memo
+def _qgd_xy(spark: SparkSession, sf_dir: str):
     """The classifier's two corpus-derived tables, built and cached
-    once per (session, sf_dir): the (doc, bucket, cnt) hashed feature
-    table ``x`` and the weak-label table ``y``. Both the trainer
+    once per session: the (doc, bucket, cnt) hashed feature table
+    ``x`` and the weak-label table ``y``. Both the trainer
     (`qgd_train_artifacts`) and the convergence report derive from
     these SAME cached frames — each unrolled GD step's broadcast job
     re-resolves their lineage, so uncached (or rebuilt per consumer)
-    the full corpus text gets re-split per step."""
+    the full corpus text gets re-split per step (the r10 bench
+    measured the scorer at 4.75s in-bench vs 2.5s warm purely from
+    rebuilding them)."""
     from my_polars_ai_spark.operators.dedup import portable_hash60
 
-    evict_stopped_sessions(_QGD_XY)
-    key = (spark, sf_dir)
-    if key in _QGD_XY:
-        # self-heal after an external clearCache(): re-register the
-        # cache marks so the next action refills them once instead of
-        # re-splitting the corpus per GD step forever after
-        rearm_cached(_QGD_XY[key])
-        return _QGD_XY[key]
     d = _t(spark, sf_dir, "documents")
     ts = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
     base = d.select("doc_id", ts.alias("ts")).filter(F.size("ts") > 0)
@@ -2693,13 +2653,11 @@ def _qgd_xy(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, DataFrame]":
         .repartition("doc_id")
         .cache()
     )
-    _QGD_XY[key] = (x, y)
-    return x, y
+    return (x, y), (x, y)
 
 
-def qgd_train_artifacts(
-    spark: SparkSession, sf_dir: str
-) -> "tuple[DataFrame, DataFrame, DataFrame]":
+@session_memo
+def qgd_train_artifacts(spark: SparkSession, sf_dir: str):
     """Train the hashed quality classifier (QGD_STEPS unrolled
     full-batch GD updates) and return the three artifacts a consumer
     needs: the cached (doc, bucket, cnt) feature table ``x``, the
@@ -2710,16 +2668,6 @@ def qgd_train_artifacts(
     definition, and memoized so one session trains exactly once per
     sf_dir (deterministic plan — a rebuild would be identical)."""
     from my_polars_ai_spark.operators.dedup import portable_hash60
-
-    evict_stopped_sessions(_QGD_ARTIFACTS)
-    key = (spark, sf_dir)
-    if key in _QGD_ARTIFACTS:
-        # route through _qgd_xy so its rearm_cached self-heal runs even
-        # on an artifact-memo hit (w derives from the cached x/y), and
-        # re-arm the cached weight table itself (r16)
-        _qgd_xy(spark, sf_dir)
-        rearm_cached((_QGD_ARTIFACTS[key][2],))
-        return _QGD_ARTIFACTS[key]
 
     x, y = _qgd_xy(spark, sf_dir)
     spine = spark.range(QGD_DIM).select(F.col("id").cast("bigint").alias("b"))
@@ -2782,10 +2730,9 @@ def qgd_train_artifacts(
     # chain runs once at fill and each consumer broadcasts 32 rows
     # from cache (r16, guide §5 "caching is worth it when reused and
     # recomputation is expensive"). clearCache() self-heals through
-    # the rearm on the memo-hit path like x/y.
+    # the memo's re-arm like x/y.
     w = w.cache()
-    _QGD_ARTIFACTS[key] = (x, y, w)
-    return x, y, w
+    return (x, y, w), (w,)
 
 
 def _qgd_p(z):

@@ -22,13 +22,12 @@ from my_polars_ai_spark.operators.base import (
     RDZV_SHARDS,
     ROUND_RATIO,
     Op,
-    evict_stopped_sessions,
     exact_floor_div,
     make_registrar,
     oracle_ratio_round,
     oracle_signed_ratio_round,
     ratio_round,
-    rearm_cached,
+    session_memo,
     signed_ratio_round,
 )
 from my_polars_ai_spark.sources.tables import load_table as _t
@@ -295,24 +294,11 @@ def minhash_lsh_pairs(
     subtrees ARE the pipeline's cost, and every consumer in a
     long-lived session (the dedup canary, the triplet miner and its
     export manifest, the cross-shard report, the cluster ops) must
-    resolve the SAME cache entries — a fresh call would .cache()
-    brand-new lineage objects whose fills are never reused (the same
-    re-pay-per-call artifact the GD trainer had, classic_ml._qgd_xy).
-    rearm_cached makes the memo survive an external clearCache() —
-    without it the LSH diamond recomputes its signature subtree per
-    self-join side forever after (measured 12.7s vs 1.1s at sf0.1
-    under bench.py's clearCache-then-warm isolated pass).
+    resolve the SAME cache entries.
     """
-    evict_stopped_sessions(_LSH_PAIRED)
-    key = (spark, sf_dir, n_perms, n_bands, threshold, min_band_matches)
-    entry = _LSH_PAIRED.get(key)
-    if entry is None:
-        entry = _build_lsh_paired(
-            spark, sf_dir, n_perms, n_bands, threshold, min_band_matches
-        )
-        _LSH_PAIRED[key] = entry
-    paired, cached_subtrees = entry
-    rearm_cached(cached_subtrees)
+    paired = _build_lsh_paired(
+        spark, sf_dir, n_perms, n_bands, threshold, min_band_matches
+    )
     ni = F.size(F.array_intersect("toks_a", "toks_b"))
     jac = ni / (F.col("na") + F.col("nb") - ni)
     if with_verdict:
@@ -329,22 +315,19 @@ def minhash_lsh_pairs(
     )
 
 
-_LSH_PAIRED: dict = {}
-
-
+@session_memo
 def _build_lsh_paired(
     spark: SparkSession,
     sf_dir: str,
-    n_perms: int,
-    n_bands: int,
-    threshold: float,
-    min_band_matches: int,
-) -> "tuple[DataFrame, tuple[DataFrame, ...]]":
+    n_perms: int = N_PERMS,
+    n_bands: int = N_BANDS,
+    threshold: float = MINHASH_THRESHOLD,
+    min_band_matches: int = 1,
+):
     """The LSH pipeline through the verify join's input (candidates
     with both token arrays attached), plus its two cached subtrees
-    (bands, token arrays) so the memo can rearm them after an external
-    clearCache() — see minhash_lsh_pairs, which memoizes this pair and
-    applies the verdict/filter tail."""
+    (bands, token arrays) — see minhash_lsh_pairs, which applies the
+    verdict/filter tail."""
     toks = _doc_tokens(spark, sf_dir)
     rows_per_band = n_perms // n_bands
     # Hash each DISTINCT token once per permutation, as n_perms WIDE
@@ -2151,28 +2134,15 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TRIPLET_NEG_K = 3
 
-_TRIPLET_SYM: dict = {}
-
-
-def _triplet_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo
+def _triplet_sym(spark: SparkSession, sf_dir: str):
     """The symmetrized verified-candidate table (anchor, partner,
     jaccard, is_dup) — the triplet family's shared mining artifact,
     cached (it feeds the positive AND negative ranking branches) and
-    memoized per (session, sf_dir): a fresh call would re-run the
-    exact-Jaccard verify over every size-prefiltered candidate and
-    re-fill a brand-new cache entry per consumer action (the miner and
-    its export manifest both consume it — the `_QGD_ARTIFACTS`
-    re-pay-per-call pattern). On a memo hit the call still routes
-    through minhash_lsh_pairs so the underlying band/token-array cache
-    marks self-heal before any refill of this frame re-executes their
-    lineage, then re-arms this frame's own mark (rearm_cached)."""
-    evict_stopped_sessions(_TRIPLET_SYM)
-    key = (spark, sf_dir)
-    entry = _TRIPLET_SYM.get(key)
-    if entry is not None:
-        minhash_lsh_pairs(spark, sf_dir, with_verdict=True)
-        rearm_cached((entry,))
-        return entry
+    session-memoized: a fresh call would re-run the exact-Jaccard
+    verify over every size-prefiltered candidate and re-fill a
+    brand-new cache entry per consumer action (the miner and its
+    export manifest both consume it)."""
     cands = minhash_lsh_pairs(spark, sf_dir, with_verdict=True)
     sym = (
         cands.select(
@@ -2200,8 +2170,7 @@ def _triplet_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sortWithinPartitions("anchor_id", F.col("jaccard").desc(), "partner")
         .cache()
     )
-    _TRIPLET_SYM[key] = sym
-    return sym
+    return sym, (sym,)
 
 
 _TRIPLET_SQL = f"""

@@ -23,11 +23,10 @@ from my_polars_ai_spark.operators.base import (
     RDZV_SHARDS,
     ROUND_RATIO,
     Op,
-    evict_stopped_sessions,
     make_registrar,
     oracle_ratio_round,
     ratio_round,
-    rearm_cached,
+    session_memo,
 )
 from my_polars_ai_spark.sources.tables import load_table as _t
 
@@ -562,8 +561,8 @@ def audio_vad_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     integrity audit both consume it verbatim, and each call used to
     re-run the full synth+decode mapInPandas chain per ACTION. It is
     chunk-grain (bounded per doc by clip length — a manifest-sized
-    table, never the PCM payload), so it is cached and memoized per
-    (session, sf_dir); at 100 TB the written manifest parquet is the
+    table, never the PCM payload), so it is cached and session-memoized;
+    at 100 TB the written manifest parquet is the
     serve path (round-trip pinned by test) and this memo is exactly
     the in-session twin of reading that artifact back.
 
@@ -571,24 +570,13 @@ def audio_vad_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and the segment-ordinal ranking all reuse the same
     doc_id partitioning (one exchange after the decode). Per-doc state
     is bounded by clip length, never corpus size."""
-    evict_stopped_sessions(_VAD_CHUNKS)
-    key = (spark, sf_dir)
-    entry = _VAD_CHUNKS.get(key)
-    if entry is not None:
-        rearm_cached((entry,))
-        return entry
-    chunks = _vad_chunk_plan(spark, sf_dir).cache()
-    _VAD_CHUNKS[key] = chunks
-    return chunks
+    return _vad_chunks(spark, sf_dir)
 
 
-_VAD_CHUNKS: dict = {}
-
-
-def _vad_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo
+def _vad_chunks(spark: SparkSession, sf_dir: str):
     """The chunker's one-pass plan (decode -> voiced frames -> chunk
-    aggregate -> segment-ordinal rank), unmemoized — `audio_vad_chunks`
-    wraps it in the session memo."""
+    aggregate -> segment-ordinal rank), cached."""
     vf = _vad_voiced_frames(spark, sf_dir)
     chunk_idx = F.floor(
         (F.col("frame_idx") - F.col("start_frame")) / VAD_CHUNK_FRAMES
@@ -610,7 +598,7 @@ def _vad_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_start = F.col("start_frame") + F.col("chunk_idx") * VAD_CHUNK_FRAMES
     c_end = F.least(F.col("end_frame"), c_start + VAD_CHUNK_FRAMES - 1)
     ws = Window.partitionBy("doc_id").orderBy("start_frame")
-    return per_chunk.select(
+    chunks = per_chunk.select(
         "doc_id",
         # islands have unique start_frames per doc, so dense_rank over
         # chunk-grain rows == row_number over segment-grain rows
@@ -620,7 +608,8 @@ def _vad_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         c_end.cast("int").alias("chunk_end"),
         "n_frames",
         "energy",
-    )
+    ).cache()
+    return chunks, (chunks,)
 
 
 # PCM16-LE geometry for the export byte ranges: 2 bytes per sample.

@@ -24,13 +24,12 @@ from my_polars_ai_spark.operators.base import (
     Op,
     RDZV_SHARDS,
     ROUND_RATIO,
-    evict_stopped_sessions,
     exact_floor_div,
     make_registrar,
     oracle_ratio_round,
     oracle_signed_ratio_round,
     ratio_round,
-    rearm_cached,
+    session_memo,
     signed_ratio_round,
 )
 from my_polars_ai_spark.sources.tables import load_table as _t
@@ -1034,12 +1033,10 @@ _ANN_INDEX_SQL = f"""
 """
 
 
-def _ann_index_frames(
-    spark: SparkSession, sf_dir: str
-) -> "tuple[DataFrame, DataFrame, Column, DataFrame, DataFrame]":
+@session_memo
+def _ann_index_frames(spark: SparkSession, sf_dir: str):
     """ANN index family frames: (manifest, corpus, ranked_cells,
-    ncorpus, cdist), memoized per (session, sf_dir) — the
-    `dedup._LSH_PAIRED` discipline. `ann_index_manifest` ships the
+    ncorpus, cdist), session-memoized. `ann_index_manifest` ships the
     first; `ann_manifest_query_topk` consumes the manifest AND reuses
     the other frames for query routing / the LUT. The memo means the
     eager driver-side codebook materializations (the N_CELLS IVF seed
@@ -1050,8 +1047,7 @@ def _ann_index_frames(
     ~corpus x M bytes — the artifact production writes to storage and
     serving reads back; NOT the corpus x M x K cdist frame, which
     stays lazy) is cached once and every consumer resolves the same
-    cache entry. rearm_cached makes the memo survive an external
-    clearCache() (bench.py's isolated pass).
+    cache entry.
 
     Documented trade-off (r13 advice): a lone IVF or PQ call in a
     fresh session pays the FULL family build (both driver-side seed
@@ -1061,23 +1057,6 @@ def _ann_index_frames(
     single-sub-family session ever matters, split the memo into
     lazily-built IVF-side and PQ-side entries; until then one shared
     entry keeps the serve path and the round-trip test simple."""
-    evict_stopped_sessions(_ANN_FRAMES)
-    key = (spark, sf_dir)
-    entry = _ANN_FRAMES.get(key)
-    if entry is None:
-        entry = _build_ann_index_frames(spark, sf_dir)
-        _ANN_FRAMES[key] = entry
-    frames, cached_subtrees = entry
-    rearm_cached(cached_subtrees)
-    return frames
-
-
-_ANN_FRAMES: dict = {}
-
-
-def _build_ann_index_frames(
-    spark: SparkSession, sf_dir: str
-) -> "tuple[tuple[DataFrame, DataFrame, Column, DataFrame, DataFrame], tuple[DataFrame, ...]]":
     from my_polars_ai_spark.operators.dedup import portable_hash60
 
     corpus, ranked_cells = _ivf_ranked_cells(spark, sf_dir)
@@ -2748,25 +2727,14 @@ def pca_power_iteration_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Memoized per (session, sf_dir), the _ANN_FRAMES pattern (r17, the
-# r16 judge's What's-wrong 4): the r16 per-call .cache() on v1
-# registered a FRESH CacheManager entry per call and never
-# unpersisted the previous one. The memo hands out the SAME cached
-# frame; rearm_cached self-heals after an external clearCache.
-_PCA_V1: dict = {}
-
-
-def _pca_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo
+def _pca_v1(spark: SparkSession, sf_dir: str):
     """The DIM-bounded (64-row) un-normalized power-iteration result
     ``v1`` — it feeds BOTH the max-|component| normalizer aggregate
     and the final projection; uncached, the crossJoin(broadcast(m))
     diamond duplicated the FULL matvec chain (24 embeddings scans in
-    one static plan, r16 — guide §2.4/§5)."""
-    evict_stopped_sessions(_PCA_V1)
-    key = (spark, sf_dir)
-    if key in _PCA_V1:
-        rearm_cached((_PCA_V1[key],))
-        return _PCA_V1[key]
+    one static plan, r16 — guide §2.4/§5). Session-memoized so repeated
+    calls do not each register a fresh CacheManager entry."""
     e = _t(spark, sf_dir, "embeddings")
     pos = e.select(
         "vec_id", F.posexplode(F.col("embedding")).alias("p", "x")
@@ -2811,8 +2779,7 @@ def _pca_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("dim", (F.col("n") * F.col("tv") - F.col("sa") * F.col("uu")).alias("w"))
         .cache()
     )
-    _PCA_V1[key] = v1
-    return v1
+    return v1, (v1,)
 
 
 # Semantic decontamination: corpus vectors too close to the held-out
@@ -3111,26 +3078,15 @@ def semdedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SD_SKETCH: dict = {}
-
-
-def _semdedup_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo
+def _semdedup_sketch(spark: SparkSession, sf_dir: str):
     """Shared SemDeDup front end: md5-seeded K-cluster assignment plus
     the 6-plane sign-sketch bucket, cached (it feeds both sides of the
-    candidate self-join) and memoized per (session, sf_dir) — the
-    assignment sketch is the family's shared index artifact (keep-list
-    AND threshold sweep consume it), and a fresh call would re-collect
-    the codebook seeds and re-fill a brand-new cache entry per action
-    (the same re-pay-per-call artifact `_LSH_PAIRED` / `_QGD_XY`
-    memoize away; measured 1.95s -> 0.78s per isolated action at
-    sf0.1). rearm_cached makes the memo survive an external
-    clearCache()."""
-    evict_stopped_sessions(_SD_SKETCH)
-    key = (spark, sf_dir)
-    entry = _SD_SKETCH.get(key)
-    if entry is not None:
-        rearm_cached((entry,))
-        return entry
+    candidate self-join) and session-memoized — the assignment sketch
+    is the family's shared index artifact (keep-list AND threshold
+    sweep consume it), and a fresh call would re-collect the codebook
+    seeds and re-fill a brand-new cache entry per action (measured
+    1.95s -> 0.78s per isolated action at sf0.1)."""
     e = _t(spark, sf_dir, "embeddings")
     corpus = e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     seeds = (
@@ -3175,8 +3131,7 @@ def _semdedup_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked[0]["cosc"].alias("cosc"),
         bucket.alias("bucket"),
     ).cache()
-    _SD_SKETCH[key] = sk
-    return sk
+    return sk, (sk,)
 
 
 def _semdedup_dominating(sk: DataFrame) -> DataFrame:

@@ -16,13 +16,12 @@ from my_polars_ai_spark.operators.base import (
     ROUND_RATIO,
     RDZV_SHARDS,
     Op,
-    evict_stopped_sessions,
     exact_floor_div,
     make_registrar,
-    rearm_cached,
     oracle_ratio_round,
     oracle_signed_ratio_round,
     ratio_round,
+    session_memo,
     signed_ratio_round,
 )
 from my_polars_ai_spark.sources.tables import load_table as _t
@@ -46,7 +45,7 @@ def _census_attach(rows: DataFrame, key: str, out: str) -> DataFrame:
     ``key``) — measured latency-neutral at sf0.1 (the r15 shape, and
     the r17 salted-window hybrid measured 2.2x WORSE locally: it pays
     this same census branch plus a (key, salt) exchange+sort of every
-    row — see OPTIMIZATION_r17.md)."""
+    row)."""
     census = rows.groupBy(key).agg(F.count(F.lit(1)).alias(out))
     return rows.join(census, key)
 
@@ -890,9 +889,9 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-nats, then all aggregation is exact integer summation — so a
     transcendental-function score still hash-matches across engines
     (same trick as `pagerank_near_dup`'s micro-units). The unigram
-    table rides a broadcast here (toy vocabulary); at real vocabulary
-    sizes the same plan works as a hash equi-join on tok — AQE picks
-    the strategy, nothing else changes."""
+    table join carries no hint: AQE broadcasts it at a toy vocabulary
+    and keeps a hash equi-join on tok at real vocabulary sizes, where
+    a forced broadcast would risk a driver OOM."""
     toks = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
@@ -906,7 +905,7 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lp_micro")
     )
     scored = (
-        toks.join(F.broadcast(counts), "tok")
+        toks.join(counts, "tok")
         .crossJoin(F.broadcast(n))
         .select("doc_id", lp_micro)
     )
@@ -4193,30 +4192,17 @@ def winnowing_fingerprint_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# Memoized per (session, sf_dir), the _DOMEX pattern (r17, guide §5 /
-# the r16 judge's What's-wrong 4): winnowing's cached fingerprint
-# diamond used to be a FRESH .cache() per call, so a long-lived
-# session accumulated one CacheManager entry per call until LRU churn
-# — the leak class the r14 memo families fixed. The memo hands out
-# the SAME cached frame; rearm_cached self-heals after an external
-# clearCache.
-_WINNOW_E2: dict = {}
-
-
-def _winnow_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
+@session_memo
+def _winnow_e2(spark: SparkSession, sf_dir: str):
     """The capped winnowed fingerprint posting table (doc_id, fph) —
     feeds BOTH sides of the overlap self-join. cache(): uncached, the
     k-gram md5 + winnowed-min chain executed once per join side (two
     Generate+Window subtrees in the r16 before-plan, guide §2.4); the
     cached relation is the winnowed ~2/(W+1)-density fingerprint
-    table, far smaller than the corpus positions it derives from."""
+    table, far smaller than the corpus positions it derives from.
+    Session-memoized so repeated calls do not each register a fresh
+    CacheManager entry."""
     from my_polars_ai_spark.operators.dedup import portable_hash60
-
-    evict_stopped_sessions(_WINNOW_E2)
-    key = (spark, sf_dir)
-    if key in _WINNOW_E2:
-        rearm_cached((_WINNOW_E2[key],))
-        return _WINNOW_E2[key]
 
     d = _t(spark, sf_dir, "documents")
     base = d.select("doc_id", F.split("text", " ").alias("l")).filter(
@@ -4258,8 +4244,7 @@ def _winnow_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("posting_len")
         .cache()
     )
-    _WINNOW_E2[key] = e2
-    return e2
+    return e2, (e2,)
 
 
 # Repeated-span detection: token k-gram width (the minimum span the
@@ -5960,28 +5945,18 @@ def domain_excess_loss_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Memoized per (session, sf_dir), the _QGD_XY pattern: ``e`` is a
-# bounded source-grain table whose lineage is a full corpus token pass;
-# its consumers reference it several times per plan (bu / sp / t / the
-# final join in doremi_sampling_manifest), so uncached each reference
-# re-ran the corpus explode — 138 exchanges in the r16 before-plan.
-_DOMEX: dict = {}
-
-
-def _domain_excess(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, DataFrame]":
+@session_memo
+def _domain_excess(spark: SparkSession, sf_dir: str):
     """The per-source excess-NLL table ``e`` (source, n_tokens,
     avg_nll_micro, excess_micro) and its 1-row total ``t`` — the
     shared core of `domain_excess_loss_weights` and the sampling
     consumer `doremi_sampling_manifest` (one definition, like the
     oracle side's _DOMAIN_EXCESS_CTES prefix). ``e`` is cached (a few
-    source-grain rows) and memoized per (session, sf_dir) so every
-    consumer reference resolves the SAME cached frame instead of
-    re-running the corpus token pass per reference (r16, guide §2.4)."""
-    evict_stopped_sessions(_DOMEX)
-    key = (spark, sf_dir)
-    if key in _DOMEX:
-        rearm_cached((_DOMEX[key][0],))
-        return _DOMEX[key]
+    source-grain rows) and session-memoized so every consumer
+    reference (bu / sp / t / the final join in
+    doremi_sampling_manifest) resolves the SAME cached frame instead of
+    re-running the corpus token pass per reference — 138 exchanges in
+    the r16 before-plan (guide §2.4)."""
     d = _t(spark, sf_dir, "documents")
     dp = _t(
         spark,
@@ -6030,8 +6005,7 @@ def _domain_excess(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, DataFr
         .cache()
     )
     t = e.agg(F.sum("excess_micro").alias("tot"))
-    _DOMEX[key] = (e, t)
-    return e, t
+    return (e, t), (e,)
 
 
 # ---------------------------------------------------------------------------

@@ -1,20 +1,48 @@
-"""Session-memo self-healing after an external spark.catalog.clearCache().
+"""The ``@session_memo`` contract, checked on every decorated memo.
 
-The LSH candidate pipeline (dedup._LSH_PAIRED) and the GD trainer's
-corpus tables (classic_ml._QGD_XY) are memoized per (session, sf_dir)
-so every consumer in a long-lived session shares ONE set of cache
-fills. An external clearCache() (bench.py's isolated re-measure, a
-user resetting the session) unregisters those plans from the
-CacheManager without the memo knowing; before rearm_cached, every
-subsequent execution recomputed the full lineage — the LSH diamond
-re-executed its signature subtree once per self-join side (measured
-12.7s vs 1.1s at sf0.1 in BENCH terms). These tests pin the
-self-heal: after clearCache, one memo-hit call re-registers the cache
-marks (storageLevel lookup is a CacheManager probe, no job) and the
-results stay identical.
+Session memos hand out the SAME DataFrames for (session, sf_dir,
+params) so every consumer in a long-lived session shares one set of
+cache fills. An external spark.catalog.clearCache() (bench.py's
+isolated re-measure, a user resetting the session) unregisters those
+plans from the CacheManager without the memo knowing; a memo hit must
+re-register them — its own marks and those of every memo its fill
+called — or each later action recomputes the full lineage (the LSH
+diamond: 12.7s vs 1.1s at sf0.1). Stopped-session entries must be
+evicted so they cannot pin JVM-backed frames forever.
 """
 
 from __future__ import annotations
+
+import inspect
+
+import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+
+def _memos() -> list:
+    from my_polars_ai_spark.operators import all_ops
+    from my_polars_ai_spark.operators.base import SESSION_MEMOS
+
+    all_ops()  # imports every operator module, registering its memos
+    return list(SESSION_MEMOS)
+
+
+def _memo_id(memo) -> str:
+    return f"{memo.__module__.rsplit('.', 1)[-1]}.{memo.__name__}"
+
+
+# memo -> the memos its fill calls, whose marks a hit must re-arm first
+_UPSTREAM = {
+    "dedup._triplet_sym": {"dedup._build_lsh_paired"},
+    "classic_ml.qgd_train_artifacts": {"classic_ml._qgd_xy"},
+}
+
+
+def _key(memo, spark, sf_dir) -> tuple:
+    bound = inspect.signature(memo).bind(spark, sf_dir)
+    bound.apply_defaults()
+    return tuple(bound.arguments.values())
 
 
 def _is_registered(df) -> bool:
@@ -22,24 +50,58 @@ def _is_registered(df) -> bool:
     return bool(lvl.useMemory or lvl.useDisk)
 
 
-def test_lsh_memo_rearms_after_clearcache(spark, sf_dir):
-    from my_polars_ai_spark.operators import dedup
+def _all_cached(entry) -> list:
+    return [*entry.cached, *(f for dep in entry.deps for f in _all_cached(dep))]
 
-    before = dedup.minhash_lsh_pairs(spark, sf_dir)
-    n_before = before.count()
 
-    key = next(k for k in dedup._LSH_PAIRED if k[0] is spark and k[1] == sf_dir)
-    _, cached_subtrees = dedup._LSH_PAIRED[key]
-    assert all(_is_registered(f) for f in cached_subtrees)
+def _cache_entry_count(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
 
+
+def _fingerprint(value) -> list:
+    """Row count plus an order-insensitive hash sum of every frame."""
+    frames = [value] if isinstance(value, DataFrame) else value
+    return [
+        df.agg(F.count(F.lit(1)), F.sum(F.hash(*df.columns))).first()
+        for df in frames
+        if isinstance(df, DataFrame)
+    ]
+
+
+@pytest.mark.parametrize("memo", _memos(), ids=_memo_id)
+def test_session_memo_contract(spark, sf_dir, memo):
+    key = _key(memo, spark, sf_dir)
     spark.catalog.clearCache()
-    assert not any(_is_registered(f) for f in cached_subtrees)
+    memo.entries.pop(key, None)
 
-    after = dedup.minhash_lsh_pairs(spark, sf_dir)
-    # the memo hit must have re-registered the cache marks...
-    assert all(_is_registered(f) for f in cached_subtrees)
-    # ...and the op's result is unchanged
-    assert after.count() == n_before
+    # the fill registers its cache marks (and re-arms its upstream's)
+    value = memo(spark, sf_dir)
+    entry = memo.entries[key]
+    assert entry.cached and all(_is_registered(f) for f in _all_cached(entry))
+    by_id = {_memo_id(m): m for m in _memos()}
+    upstream = {by_id[n].entries[_key(by_id[n], spark, sf_dir)]
+                for n in _UPSTREAM.get(_memo_id(memo), ())}
+    assert set(entry.deps) == upstream
+
+    # a hit returns the same object and does not grow the CacheManager
+    n_cached = _cache_entry_count(spark)
+    fingerprint = _fingerprint(value)
+    for _ in range(3):
+        assert memo(spark, sf_dir) is value
+    assert _cache_entry_count(spark) == n_cached
+
+    # clearCache() then a hit re-arms its own and its upstream marks
+    spark.catalog.clearCache()
+    assert not any(_is_registered(f) for f in _all_cached(entry))
+    assert memo(spark, sf_dir) is value
+    assert all(_is_registered(f) for f in _all_cached(entry))
+    assert _fingerprint(value) == fingerprint
+
+    # a dead-session entry is evicted on the next call; the live one stays
+    dead = (_DeadSession(), *key[1:])
+    memo.entries[dead] = None
+    memo(spark, sf_dir)
+    assert dead not in memo.entries and memo.entries[key] is entry
 
 
 def test_qgd_memo_rearms_after_clearcache(spark, sf_dir):
@@ -52,12 +114,12 @@ def test_qgd_memo_rearms_after_clearcache(spark, sf_dir):
     spark.catalog.clearCache()
     assert not _is_registered(x) and not _is_registered(y)
 
-    # an artifact-memo hit routes through _qgd_xy, so even the trainer
-    # entry point self-heals
+    # an artifact-memo hit re-arms the _qgd_xy marks its fill depended
+    # on, so even the trainer entry point self-heals
     classic_ml.qgd_train_artifacts(spark, sf_dir)
+    assert _is_registered(x) and _is_registered(y)
     x2, y2 = classic_ml._qgd_xy(spark, sf_dir)
     assert x2 is x and y2 is y
-    assert _is_registered(x) and _is_registered(y)
     assert x.count() == n_x
 
 
@@ -121,7 +183,7 @@ class _ProbelessRaisingSession:
 
 
 def test_evict_stopped_sessions_drops_dead_keys_keeps_live(spark):
-    from my_polars_ai_spark.operators.base import evict_stopped_sessions
+    from my_polars_ai_spark.operators.base import _evict_stopped_sessions
 
     live_connect = _ConnectLikeSession(stopped=False)
     memo = {
@@ -133,30 +195,5 @@ def test_evict_stopped_sessions_drops_dead_keys_keeps_live(spark):
         (_BrokenProbeSession(), "/sf"): "broken-probe",
         (_ProbelessRaisingSession(), "/sf"): "probe-less",
     }
-    evict_stopped_sessions(memo)
+    _evict_stopped_sessions(memo)
     assert list(memo.values()) == ["live", "live-connect"]
-
-
-def test_memo_getters_evict_dead_session_entries(spark, sf_dir):
-    """Every session-memo getter evicts stopped-session entries on
-    access (r13 advice: a stopped session's entry pins JVM-backed
-    DataFrames — including cache-marked subtrees — forever in a
-    long-lived multi-session process)."""
-    from my_polars_ai_spark.operators import classic_ml, dedup, similarity
-
-    dead_keys = [
-        (similarity._ANN_FRAMES, (_DeadSession(), "/dead/sf")),
-        (dedup._LSH_PAIRED, (_DeadSession(), "/dead/sf", 64, 16, 0.95, 1)),
-        (classic_ml._QGD_XY, (_DeadSession(), "/dead/sf")),
-        (classic_ml._QGD_ARTIFACTS, (_DeadSession(), "/dead/sf")),
-    ]
-    for memo, key in dead_keys:
-        memo[key] = ("sentinel",)
-    # touch each getter with the live session; the dead entry must go
-    similarity._ann_index_frames(spark, sf_dir)
-    dedup.minhash_lsh_pairs(spark, sf_dir)
-    classic_ml.qgd_train_artifacts(spark, sf_dir)
-    for memo, key in dead_keys:
-        assert key not in memo, key
-        # the live session's entry survives the eviction pass
-        assert any(k[0] is spark for k in memo), memo.keys()

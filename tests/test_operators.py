@@ -24,6 +24,16 @@ def test_registry_integrity():
             assert "SELECT" in op_.oracle.upper()
 
 
+def test_all_ops_raises_on_unimportable_module(monkeypatch):
+    """A module that fails to import must fail the registry, not
+    silently drop its ops."""
+    from my_polars_ai_spark import operators
+
+    monkeypatch.setattr(operators, "_MODULES", (*operators._MODULES, "no_such_module"))
+    with pytest.raises(ModuleNotFoundError):
+        operators.all_ops()
+
+
 def test_registry_prefix_window_matches_rotation_contract():
     """The driver's CORRECTNESS gate verifies a 50-entry prefix of the
     registry. Since the r3 rotation, the window is _PRIORITY verbatim:

@@ -1,9 +1,9 @@
 """Plan-shape pins for the round-16 optimization rewrites.
 
 Each test asserts the STRUCTURAL property the optimization bought —
-single decode chain, census-without-join, cached weight table — so a
-regression that quietly re-introduces the second corpus pass fails
-loudly. (Structural assertions against Spark's plan rendering; refresh
+single decode chain, census-without-join, codes decoded from the
+manifest — so a regression that quietly re-introduces the second
+corpus pass fails loudly. (Structural assertions against Spark's plan rendering; refresh
 on a Spark upgrade, keep the counts.)
 """
 
@@ -62,61 +62,6 @@ def test_trained_weight_table_is_cached_and_memo_stable(spark, sf_dir):
     assert lvl.useMemory or lvl.useDisk, lvl
 
 
-def test_semdedup_sketch_is_cached_and_memo_stable(spark, sf_dir):
-    """_semdedup_sketch memoizes the cluster+bucket assignment sketch
-    per (session, sf_dir) with an active cache mark, hands back the
-    SAME frame across calls (keep-list and threshold sweep resolve one
-    fill), and re-arms the mark after an external clearCache."""
-    from my_polars_ai_spark.operators.similarity import _semdedup_sketch
-
-    s1 = _semdedup_sketch(spark, sf_dir)
-    lvl = s1.storageLevel
-    assert lvl.useMemory or lvl.useDisk, lvl
-    s2 = _semdedup_sketch(spark, sf_dir)
-    assert s1 is s2
-    spark.catalog.clearCache()
-    s3 = _semdedup_sketch(spark, sf_dir)
-    lvl = s3.storageLevel
-    assert lvl.useMemory or lvl.useDisk, lvl
-
-
-def test_triplet_sym_is_cached_and_memo_stable(spark, sf_dir):
-    """_triplet_sym memoizes the symmetrized verified-candidate table
-    per (session, sf_dir) with an active cache mark — the miner and its
-    export manifest resolve ONE verify pass — and survives an external
-    clearCache (re-armed mark, LSH band caches re-armed en route)."""
-    from my_polars_ai_spark.operators.dedup import _triplet_sym
-
-    t1 = _triplet_sym(spark, sf_dir)
-    lvl = t1.storageLevel
-    assert lvl.useMemory or lvl.useDisk, lvl
-    t2 = _triplet_sym(spark, sf_dir)
-    assert t1 is t2
-    spark.catalog.clearCache()
-    t3 = _triplet_sym(spark, sf_dir)
-    lvl = t3.storageLevel
-    assert lvl.useMemory or lvl.useDisk, lvl
-
-
-def test_audio_chunk_table_is_cached_and_memo_stable(spark, sf_dir):
-    """audio_vad_chunks memoizes the chunk-grain table per (session,
-    sf_dir) with an active cache mark — the export manifest and the
-    integrity audit resolve ONE synth+decode fill instead of re-running
-    the mapInPandas chain per action — and re-arms the mark after an
-    external clearCache."""
-    from my_polars_ai_spark.operators.multimodal import audio_vad_chunks
-
-    c1 = audio_vad_chunks(spark, sf_dir)
-    lvl = c1.storageLevel
-    assert lvl.useMemory or lvl.useDisk, lvl
-    c2 = audio_vad_chunks(spark, sf_dir)
-    assert c1 is c2
-    spark.catalog.clearCache()
-    c3 = audio_vad_chunks(spark, sf_dir)
-    lvl = c3.storageLevel
-    assert lvl.useMemory or lvl.useDisk, lvl
-
-
 def test_pq_adc_decodes_codes_from_manifest(spark, sf_dir):
     """pq_adc_topk reads its corpus code table from the cached
     manifest's packed pq_codes (the serve op's posexplode(split(...))
@@ -140,16 +85,3 @@ def test_pq_adc_decodes_codes_from_manifest(spark, sf_dir):
     )
     assert decoded.exceptAll(direct).count() == 0
     assert direct.exceptAll(decoded).count() == 0
-
-
-def test_domain_excess_memo_returns_cached_source_table(spark, sf_dir):
-    """_domain_excess memoizes the bounded source-grain excess table
-    with an active cache mark (its consumers reference it several
-    times per plan)."""
-    from my_polars_ai_spark.operators.text import _domain_excess
-
-    e1, t1 = _domain_excess(spark, sf_dir)
-    lvl = e1.storageLevel
-    assert lvl.useMemory or lvl.useDisk, lvl
-    e2, _ = _domain_excess(spark, sf_dir)
-    assert e1 is e2

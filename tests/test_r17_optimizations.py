@@ -4,59 +4,18 @@ The r16 judge's What's-wrong 4: the intra-plan diamond caches added in
 round 16 (winnowing's fingerprint table, item-item CF's po/pairs, PCA's
 v1) registered a FRESH CacheManager entry per call and never
 unpersisted the previous one — in a long-lived session repeated calls
-grew the CacheManager until LRU eviction churned. They are now
-session-memoized like their r14-era siblings: the memo hands out the
-SAME cached frame (one CacheManager entry per (session, sf_dir)), and
-rearm_cached self-heals after an external clearCache. These tests
-mirror test_memo_rearm.py plus a direct bounded-entry-count check.
+grew the CacheManager until LRU eviction churned. They are now session
+memos (test_memo_rearm.py checks every memo's contract); the
+bounded-entry-count check below pins the leak at the op level.
 """
 
 from __future__ import annotations
 
-
-def _is_registered(df) -> bool:
-    lvl = df.storageLevel
-    return bool(lvl.useMemory or lvl.useDisk)
+import contextlib
 
 
 def _cache_entry_count(spark) -> int:
     return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
-
-
-def test_winnow_e2_is_cached_and_memo_stable(spark, sf_dir):
-    from my_polars_ai_spark.operators.text import _winnow_e2
-
-    e1 = _winnow_e2(spark, sf_dir)
-    assert _is_registered(e1)
-    e2 = _winnow_e2(spark, sf_dir)
-    assert e1 is e2
-    spark.catalog.clearCache()
-    e3 = _winnow_e2(spark, sf_dir)
-    assert _is_registered(e3)
-
-
-def test_cf_scored_pairs_is_cached_and_memo_stable(spark, sf_dir):
-    from my_polars_ai_spark.operators.classic_ml import _cf_scored_pairs
-
-    sp1 = _cf_scored_pairs(spark, sf_dir)
-    assert _is_registered(sp1)
-    sp2 = _cf_scored_pairs(spark, sf_dir)
-    assert sp1 is sp2
-    spark.catalog.clearCache()
-    sp3 = _cf_scored_pairs(spark, sf_dir)
-    assert _is_registered(sp3)
-
-
-def test_pca_v1_is_cached_and_memo_stable(spark, sf_dir):
-    from my_polars_ai_spark.operators.similarity import _pca_v1
-
-    v1 = _pca_v1(spark, sf_dir)
-    assert _is_registered(v1)
-    v2 = _pca_v1(spark, sf_dir)
-    assert v1 is v2
-    spark.catalog.clearCache()
-    v3 = _pca_v1(spark, sf_dir)
-    assert _is_registered(v3)
 
 
 def test_repeated_calls_do_not_accumulate_cache_entries(spark, sf_dir):
@@ -95,19 +54,34 @@ def test_census_is_aggregate_not_window(spark, sf_dir):
         assert "windowspecdefinition(tok" not in plan, name
 
 
+@contextlib.contextmanager
+def _split_confs(spark, nbytes: int):
+    """Pin the file-split sizing (max split and per-file open cost)."""
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(k) for k in keys]
+    for k in keys:
+        spark.conf.set(k, str(nbytes))
+    try:
+        yield
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
+
+
 def test_naive_bayes_branches_agree_on_splittable_input(spark, sf_dir, tmp_path):
     """naive_bayes_langid picks its training-pass shape from the scan
     split count (r17): >= _NB_SPLITTABLE_MIN splits -> one shared
     cached (doc, lang, tok, m) aggregate; below -> four concurrent
     explode subtrees. Splitting the same documents table into 8 files
     must flip the branch without changing a single output row."""
-    import glob
-    import shutil
-
     import pyarrow.parquet as pq
 
     from my_polars_ai_spark.operators import classic_ml
-    from my_polars_ai_spark.operators.classic_ml import _NB_SPLITTABLE_MIN
+    from my_polars_ai_spark.operators.classic_ml import (
+        _NB_SPLITTABLE_MIN,
+        _nb_input_splittable,
+    )
+    from my_polars_ai_spark.sources.tables import load_table
 
     split_dir = tmp_path / "sf_split"
     doc_dir = split_dir / "documents.parquet"
@@ -120,26 +94,31 @@ def test_naive_bayes_branches_agree_on_splittable_input(spark, sf_dir, tmp_path)
         pq.write_table(t.slice(lo, hi - lo), str(doc_dir / f"part-{i:04d}.parquet"))
 
     fn = classic_ml.OPS["naive_bayes_langid"].fn
-    single = {tuple(r) for r in fn(spark, sf_dir).collect()}
-    # pin the file-split sizing so the 8 tiny files actually plan as 8
-    # scan splits regardless of the session's core count (file packing
-    # would otherwise coalesce them below the branch threshold)
-    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    old_open = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
-    spark.conf.set("spark.sql.files.openCostInBytes", "65536")
-    try:
+    # 1 GiB splits keep the single file in one split at any fixture
+    # size and core count; 64 KiB splits with a 64 KiB per-file open
+    # cost plan each of the 8 files as its own split (or more)
+    with _split_confs(spark, 1 << 30):
+        assert not _nb_input_splittable(load_table(spark, sf_dir, "documents"))
+        single = {tuple(r) for r in fn(spark, sf_dir).collect()}
+    with _split_confs(spark, 1 << 16):
+        assert _nb_input_splittable(load_table(spark, str(split_dir), "documents"))
         split = {tuple(r) for r in fn(spark, str(split_dir)).collect()}
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-        spark.conf.set("spark.sql.files.openCostInBytes", old_open)
     assert split == single
-    # and the shared aggregate really was the branch taken: the memo
-    # now holds an entry for the split dir but not for the single-file
-    # fixture dir
-    keys = {sfd for (_s, sfd) in classic_ml._NB_TOKM3}
-    assert str(split_dir) in keys
-    assert sf_dir not in keys
+    assert (spark, str(split_dir)) in classic_ml._nb_tokm3.entries
+
+
+def test_unigram_table_join_is_broadcast_by_aqe(spark, sf_dir):
+    """unigram_logprob_score's (tok, count) table join carries no
+    broadcast hint (a forced broadcast risks a driver OOM at a real
+    vocabulary); at fixture scale the executed adaptive plan still
+    broadcasts it."""
+    from my_polars_ai_spark.operators import text
+
+    df = text.OPS["unigram_logprob_score"].fn(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
 
 
 def test_item_item_deg_join_folds_before_union(spark, sf_dir):

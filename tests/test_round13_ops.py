@@ -8,35 +8,20 @@ parquet write partitioned by (shard, cell)."""
 from __future__ import annotations
 
 
-def _is_registered(df) -> bool:
-    lvl = df.storageLevel
-    return bool(lvl.useMemory or lvl.useDisk)
-
-
 def test_ann_frames_memoized_and_rearm_after_clearcache(spark, sf_dir):
-    from my_polars_ai_spark.operators import similarity
+    """The build op serves the memoized manifest: after an external
+    clearCache, calling it re-arms the manifest's cache mark and
+    returns the memo's rows (the memo contract itself is checked for
+    every memo in test_memo_rearm.py)."""
+    from my_polars_ai_spark.operators import all_ops, similarity
 
     m1 = similarity._ann_index_frames(spark, sf_dir)[0]
-    m1.count()
-    key = next(
-        k for k in similarity._ANN_FRAMES if k[0] is spark and k[1] == sf_dir
-    )
-    _, cached_subtrees = similarity._ANN_FRAMES[key]
-    assert all(_is_registered(f) for f in cached_subtrees)
-
-    # memo hit hands back the SAME frame objects (shared cache fills)
-    m2 = similarity._ann_index_frames(spark, sf_dir)[0]
-    assert m2 is m1
-
+    n1 = m1.count()
     spark.catalog.clearCache()
-    assert not any(_is_registered(f) for f in cached_subtrees)
-
-    # a build-op call routes through the memo and re-registers the marks
-    from my_polars_ai_spark.operators import all_ops
 
     n = all_ops()["ann_index_manifest"].fn(spark, sf_dir).count()
-    assert all(_is_registered(f) for f in cached_subtrees)
-    assert n == m1.count()
+    assert m1.storageLevel.useMemory or m1.storageLevel.useDisk
+    assert n == n1
 
 
 def test_ann_serve_round_trips_through_written_manifest(spark, sf_dir, tmp_path):
