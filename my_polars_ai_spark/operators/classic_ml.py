@@ -34,6 +34,7 @@ from my_polars_ai_spark.operators.base import (
 )
 from my_polars_ai_spark.operators.text import _EN_MARKERS, _MARKERS_SQL
 from my_polars_ai_spark.sources.tables import load_table as _t
+from my_polars_ai_spark.sources.tables import scan_partitions
 
 OPS: dict[str, Op] = {}
 op = make_registrar(OPS)
@@ -277,7 +278,7 @@ _NB_SQL = """
 
 # Scan partitions at or above this use the shared-aggregate training
 # pass (one corpus explode); below it, the four concurrent single-task
-# subtrees win (see the op docstring). getNumPartitions counts the
+# subtrees win (see the op docstring). scan_partitions counts the
 # scan's byte-range splits (file size / maxSplitBytes, packed per
 # openCostInBytes), not row groups: 8 ~ "the scan actually
 # parallelizes" on a multi-file or large table.
@@ -289,10 +290,8 @@ def _nb_input_splittable(d: DataFrame) -> bool:
     ~37 ms at sf0.1 on 4 cores), per call so a changed split conf
     takes effect. Spark Connect has no RDD API; it gets the
     concurrent branch."""
-    try:
-        return d.rdd.getNumPartitions() >= _NB_SPLITTABLE_MIN
-    except NotImplementedError:
-        return False
+    parts = scan_partitions(d)
+    return parts is not None and parts >= _NB_SPLITTABLE_MIN
 
 
 @session_memo
@@ -335,7 +334,7 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row/L-row broadcasts. No all-pairs anything.
 
     Corpus-pass shape is scan-split-adaptive (r17, the r16 judge's
-    item 5, same discipline as load_table's min_partitions guard): on
+    item 5, same discipline as load_table's spread guard): on
     a splittable input every training statistic (tokm/tl/lt/v) derives
     from ONE cached (doc, lang, tok, m) aggregate — one scan+explode
     instead of four, measured 0.83x on a 16-file variant of the sf0.1

@@ -1103,7 +1103,9 @@ def _ann_index_frames(spark: SparkSession, sf_dir: str):
             )
         ).alias("record_md5"),
     ).cache()
-    return (manifest, corpus, ranked_cells, ncorpus, cdist), (manifest, ncorpus)
+    # ncorpus first: a hit re-arms the marks in this order, so after an
+    # external clearCache the manifest's refill reads the ncorpus cache.
+    return (manifest, corpus, ranked_cells, ncorpus, cdist), (ncorpus, manifest)
 
 
 @op(

@@ -4314,12 +4314,7 @@ def repeated_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no suffix array materialization."""
     from my_polars_ai_spark.operators.dedup import portable_hash60
 
-    d = _t(
-        spark,
-        sf_dir,
-        "documents",
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    d = _t(spark, sf_dir, "documents", spread=True)
     base = d.select("doc_id", F.split("text", " ").alias("l")).filter(
         F.size("l") >= SPAN_K
     )
@@ -4441,12 +4436,7 @@ def repeated_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB nested list lambdas over the same gaps-and-islands."""
     from my_polars_ai_spark.operators.dedup import portable_hash60
 
-    d = _t(
-        spark,
-        sf_dir,
-        "documents",
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    d = _t(spark, sf_dir, "documents", spread=True)
     base = d.select("doc_id", F.split("text", " ").alias("l"))
     big = base.filter(F.size("l") >= SPAN_K)
     lcol = F.col("l")
@@ -5298,12 +5288,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens at any scale. Exact integer counts + half-up ratio."""
     from my_polars_ai_spark.operators.dedup import portable_hash60
 
-    d = _t(
-        spark,
-        sf_dir,
-        "documents",
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    d = _t(spark, sf_dir, "documents", spread=True)
     ts = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
     base = d.select("doc_id", ts.alias("ts")).filter(F.size("ts") >= NOVELTY_W)
     idx = F.sequence(F.lit(1), F.size("ts") - NOVELTY_W + 1)
@@ -5958,12 +5943,7 @@ def _domain_excess(spark: SparkSession, sf_dir: str):
     re-running the corpus token pass per reference — 138 exchanges in
     the r16 before-plan (guide §2.4)."""
     d = _t(spark, sf_dir, "documents")
-    dp = _t(
-        spark,
-        sf_dir,
-        "documents",
-        min_partitions=spark.sparkContext.defaultParallelism,
-    )
+    dp = _t(spark, sf_dir, "documents", spread=True)
     toks = dp.select(
         "source", F.explode(F.split("text", " ")).alias("tok")
     ).filter(F.col("tok") != "")

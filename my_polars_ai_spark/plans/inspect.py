@@ -53,3 +53,16 @@ def pushed_filters(df: DataFrame) -> list[str]:
 def read_schemas(df: DataFrame) -> list[str]:
     """ReadSchema of every parquet scan — verifies column pruning."""
     return re.findall(r"ReadSchema: (struct<[^>]*>)", explain_str(df))
+
+
+def plan_children(node) -> list:
+    """Children of a JVM physical plan node, looking through adaptive
+    plans and query stages. An InMemoryTableScan is a leaf: the cached
+    relation's own plan is not its child."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]

@@ -46,26 +46,28 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, min_partitions: int | None = None
-) -> DataFrame:
+def scan_partitions(df: DataFrame) -> int | None:
+    """Partitions the scan of ``df`` plans without running a job, or
+    ``None`` on Spark Connect, which has no RDD API."""
+    try:
+        return df.rdd.getNumPartitions()
+    except NotImplementedError:
+        return None
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     """Read one corpus table.
 
-    ``min_partitions``: the local fixture files are single-row-group
-    parquet (one input split — Spark can split a parquet file only at row
-    group boundaries), which caps every pre-shuffle stage at one task.
-    Pass a target to round-robin repartition after the scan when the
-    narrow phase dominates (UDF decode, per-row parsing, tokenize/md5
-    gram hashing). It costs one shuffle, so leave it off for ops whose
-    first step is a groupBy/join — AQE re-partitions there anyway.
-
-    Scale-adaptive (r16, guide §2.5 "input skew — repartition
-    immediately after the read"): the repartition is applied only when
-    the scan actually produces fewer partitions than requested, so on
-    a production table with healthy ~128 MB row groups the scan
-    already parallelizes and NO extra corpus shuffle is planned — the
-    knob self-disables at 100 TB and only fires on unsplittable
-    inputs, exactly the guide's prescription.
+    ``spread``: a parquet scan splits a file into byte ranges of at most
+    ``spark.sql.files.maxPartitionBytes``, so a small file is one input
+    split and caps every pre-shuffle stage at one task. With ``spread``,
+    a scan that plans fewer partitions than ``defaultParallelism`` is
+    round-robin repartitioned to it. Use it where the narrow phase
+    dominates (UDF decode, per-row parsing, tokenize/md5 gram hashing).
+    It costs one shuffle, so leave it off for ops whose first step is a
+    groupBy/join: AQE re-partitions there anyway. A scan that already
+    parallelizes gets no extra shuffle, and on Spark Connect, where the
+    scan cannot be probed, the table is returned as read.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -85,8 +87,10 @@ def load_table(
         df = normalize_events_ts(df)
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
+    if spread and (parts := scan_partitions(df)) is not None:
+        target = spark.sparkContext.defaultParallelism
+        if parts < target:
+            df = df.repartition(target)
     return df
 
 

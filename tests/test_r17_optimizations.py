@@ -142,3 +142,29 @@ def test_item_item_deg_join_folds_before_union(spark, sf_dir):
     join_idx = [i for i, ln in enumerate(lines) if "Join" in ln]
     assert union_idx and join_idx
     assert min(union_idx) < min(join_idx), plan[:2000]
+
+
+def test_triplet_windows_read_cache_layout_without_exchange_or_sort(spark, sf_dir):
+    """_triplet_sym caches the candidate table hash-partitioned by
+    anchor_id and sorted within partitions in the ranking order, so
+    both ranking windows (pos and neg) of contrastive_triplet_mining
+    read the cache with no Exchange and no Sort in between."""
+    from my_polars_ai_spark.operators import dedup
+    from my_polars_ai_spark.plans.inspect import plan_children
+
+    df = dedup.contrastive_triplet_mining(spark, sf_dir)
+    df.collect()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    windows = []
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "WindowExec":
+            windows.append(node)
+        stack.extend(plan_children(node))
+    assert len(windows) == 2
+    for node in windows:
+        path = []
+        while node.getClass().getSimpleName() != "InMemoryTableScanExec":
+            (node,) = plan_children(node)
+            path.append(node.getClass().getSimpleName())
+        assert not [n for n in path if "Exchange" in n or n == "SortExec"], path

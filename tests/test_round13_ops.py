@@ -12,16 +12,33 @@ def test_ann_frames_memoized_and_rearm_after_clearcache(spark, sf_dir):
     """The build op serves the memoized manifest: after an external
     clearCache, calling it re-arms the manifest's cache mark and
     returns the memo's rows (the memo contract itself is checked for
-    every memo in test_memo_rearm.py)."""
+    every memo in test_memo_rearm.py). ncorpus is re-armed before the
+    manifest, so the manifest's re-registered plan reads the ncorpus
+    cache instead of recomputing its lineage."""
     from my_polars_ai_spark.operators import all_ops, similarity
+    from my_polars_ai_spark.plans.inspect import plan_children
 
-    m1 = similarity._ann_index_frames(spark, sf_dir)[0]
+    m1, _, _, ncorpus, _ = similarity._ann_index_frames(spark, sf_dir)
     n1 = m1.count()
     spark.catalog.clearCache()
 
     n = all_ops()["ann_index_manifest"].fn(spark, sf_dir).count()
     assert m1.storageLevel.useMemory or m1.storageLevel.useDisk
     assert n == n1
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def cache_builder(df):
+        return cm.lookupCachedData(df._jdf).get().cachedRepresentation().cacheBuilder()
+
+    ncorpus_builder = cache_builder(ncorpus)
+    stack, reads_ncorpus = [cache_builder(m1).cachedPlan()], False
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "InMemoryTableScanExec":
+            reads_ncorpus |= node.relation().cacheBuilder().equals(ncorpus_builder)
+        stack.extend(plan_children(node))
+    assert reads_ncorpus
 
 
 def test_ann_serve_round_trips_through_written_manifest(spark, sf_dir, tmp_path):

@@ -279,3 +279,32 @@ def test_pandas_on_spark_interop(spark, sf_dir):
     want = {r.event_type: r.n for r in
             e.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert got == want and len(want) > 0
+
+
+def test_load_table_spread_skips_repartition_without_rdd_api(spark, sf_dir, monkeypatch):
+    """Spark Connect has no RDD API, so the scan-split probe gives None:
+    ``load_table(spread=True)`` then returns the scan as read, and naive
+    Bayes takes its concurrent branch. With the RDD API, the single-file
+    fixture is spread to defaultParallelism."""
+    from pyspark.errors import PySparkNotImplementedError
+
+    from my_polars_ai_spark.operators.classic_ml import _nb_input_splittable
+    from my_polars_ai_spark.sources.tables import load_table, scan_partitions
+
+    def logical_plan(df):
+        return df._jdf.queryExecution().logical().toString()
+
+    spread = load_table(spark, sf_dir, "documents", spread=True)
+    assert "Repartition" in logical_plan(spread)
+    assert scan_partitions(spread) == spark.sparkContext.defaultParallelism
+
+    def no_rdd(self):
+        raise PySparkNotImplementedError(
+            errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "rdd"}
+        )
+
+    monkeypatch.setattr(type(spread), "rdd", property(no_rdd))
+    read = load_table(spark, sf_dir, "documents", spread=True)
+    assert scan_partitions(read) is None
+    assert "Repartition" not in logical_plan(read)
+    assert _nb_input_splittable(read) is False
