@@ -137,7 +137,13 @@ def session_memo(build):
     side: 12.7s vs 1.1s at sf0.1). ``df.storageLevel`` is a pure
     CacheManager lookup (no job), and re-``cache()`` re-registers the
     identical plan so the next action refills it once; upstream marks
-    go first so the downstream refill reads their caches."""
+    go first so the downstream refill reads their caches.
+
+    A fill records as its dependencies only the entries that hold cache
+    marks, directly or through their own dependencies. An entry with
+    neither (a table handle from ``load_table``) has nothing to re-arm,
+    and recording it would tie every memo that reads a table to that
+    handle."""
     sig = inspect.signature(build)
     entries: dict = {}
 
@@ -157,7 +163,7 @@ def session_memo(build):
             entry = entries[key] = _MemoEntry(value, cached, deps)
         else:
             _rearm(entry)
-        if _FILLING and entry not in _FILLING[-1]:
+        if _FILLING and (entry.cached or entry.deps) and entry not in _FILLING[-1]:
             _FILLING[-1].append(entry)
         return entry.value
 

@@ -19,6 +19,8 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from my_polars_ai_spark.sources.tables import _file_stamp
+
 
 def _memos() -> list:
     from my_polars_ai_spark.operators import all_ops
@@ -39,8 +41,22 @@ _UPSTREAM = {
 }
 
 
+# memo -> its params after (spark, sf_dir), for memos that take any
+_PARAMS = {
+    "tables._table_handle": lambda sf_dir: ("nation", _file_stamp(f"{sf_dir}/nation.parquet")),
+}
+
+# memos whose fill caches nothing: a table handle is a plain read
+_UNMARKED = {"tables._table_handle"}
+
+
+def _args(memo, spark, sf_dir) -> tuple:
+    params = _PARAMS.get(_memo_id(memo))
+    return (spark, sf_dir, *(params(sf_dir) if params else ()))
+
+
 def _key(memo, spark, sf_dir) -> tuple:
-    bound = inspect.signature(memo).bind(spark, sf_dir)
+    bound = inspect.signature(memo).bind(*_args(memo, spark, sf_dir))
     bound.apply_defaults()
     return tuple(bound.arguments.values())
 
@@ -70,14 +86,18 @@ def _fingerprint(value) -> list:
 
 @pytest.mark.parametrize("memo", _memos(), ids=_memo_id)
 def test_session_memo_contract(spark, sf_dir, memo):
+    args = _args(memo, spark, sf_dir)
     key = _key(memo, spark, sf_dir)
     spark.catalog.clearCache()
     memo.entries.pop(key, None)
 
     # the fill registers its cache marks (and re-arms its upstream's)
-    value = memo(spark, sf_dir)
+    value = memo(*args)
     entry = memo.entries[key]
-    assert entry.cached and all(_is_registered(f) for f in _all_cached(entry))
+    if _memo_id(memo) in _UNMARKED:
+        assert entry.cached == ()
+    else:
+        assert entry.cached and all(_is_registered(f) for f in _all_cached(entry))
     by_id = {_memo_id(m): m for m in _memos()}
     upstream = {by_id[n].entries[_key(by_id[n], spark, sf_dir)]
                 for n in _UPSTREAM.get(_memo_id(memo), ())}
@@ -87,20 +107,21 @@ def test_session_memo_contract(spark, sf_dir, memo):
     n_cached = _cache_entry_count(spark)
     fingerprint = _fingerprint(value)
     for _ in range(3):
-        assert memo(spark, sf_dir) is value
+        assert memo(*args) is value
     assert _cache_entry_count(spark) == n_cached
 
     # clearCache() then a hit re-arms its own and its upstream marks
-    spark.catalog.clearCache()
-    assert not any(_is_registered(f) for f in _all_cached(entry))
-    assert memo(spark, sf_dir) is value
-    assert all(_is_registered(f) for f in _all_cached(entry))
-    assert _fingerprint(value) == fingerprint
+    if _memo_id(memo) not in _UNMARKED:
+        spark.catalog.clearCache()
+        assert not any(_is_registered(f) for f in _all_cached(entry))
+        assert memo(*args) is value
+        assert all(_is_registered(f) for f in _all_cached(entry))
+        assert _fingerprint(value) == fingerprint
 
     # a dead-session entry is evicted on the next call; the live one stays
     dead = (_DeadSession(), *key[1:])
     memo.entries[dead] = None
-    memo(spark, sf_dir)
+    memo(*args)
     assert dead not in memo.entries and memo.entries[key] is entry
 
 

@@ -55,12 +55,13 @@ def test_census_is_aggregate_not_window(spark, sf_dir):
 
 
 @contextlib.contextmanager
-def _split_confs(spark, nbytes: int):
-    """Pin the file-split sizing (max split and per-file open cost)."""
+def _split_confs(spark, nbytes: int, open_cost: int | None = None):
+    """Pin the file-split sizing (max split and per-file open cost,
+    which defaults to the max split)."""
     keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
     old = [spark.conf.get(k) for k in keys]
-    for k in keys:
-        spark.conf.set(k, str(nbytes))
+    for k, v in zip(keys, (nbytes, nbytes if open_cost is None else open_cost)):
+        spark.conf.set(k, str(v))
     try:
         yield
     finally:
@@ -168,3 +169,33 @@ def test_triplet_windows_read_cache_layout_without_exchange_or_sort(spark, sf_di
             (node,) = plan_children(node)
             path.append(node.getClass().getSimpleName())
         assert not [n for n in path if "Exchange" in n or n == "SortExec"], path
+
+
+def test_split_probe_follows_split_confs_on_a_reused_handle(spark, sf_dir, tmp_path):
+    """load_table hands out one memoized DataFrame per table, and
+    PySpark caches ``.rdd`` per DataFrame; the branch probe must still
+    re-plan the scan under the current split confs."""
+    import pyarrow.parquet as pq
+
+    from my_polars_ai_spark.operators.classic_ml import (
+        _NB_SPLITTABLE_MIN,
+        _nb_input_splittable,
+    )
+    from my_polars_ai_spark.sources.tables import load_table
+
+    doc_dir = tmp_path / "documents.parquet"
+    doc_dir.mkdir()
+    t = pq.read_table(f"{sf_dir}/documents.parquet")
+    k, n = _NB_SPLITTABLE_MIN, t.num_rows
+    for i in range(k):
+        lo, hi = i * n // k, (i + 1) * n // k
+        pq.write_table(t.slice(lo, hi - lo), str(doc_dir / f"part-{i:04d}.parquet"))
+
+    # a 1 GiB max split with a 1-byte open cost packs all 8 files into
+    # one split; 64 KiB for both plans each file as its own split
+    d = load_table(spark, str(tmp_path), "documents")
+    with _split_confs(spark, 1 << 30, open_cost=1):
+        assert not _nb_input_splittable(d)
+    with _split_confs(spark, 1 << 16):
+        assert load_table(spark, str(tmp_path), "documents") is d
+        assert _nb_input_splittable(d)

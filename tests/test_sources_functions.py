@@ -308,3 +308,131 @@ def test_load_table_spread_skips_repartition_without_rdd_api(spark, sf_dir, monk
     assert scan_partitions(read) is None
     assert "Repartition" not in logical_plan(read)
     assert _nb_input_splittable(read) is False
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs, from the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_one_handle_per_session(spark, tmp_path):
+    """An unchanged table is read once per session: the second call
+    returns the same DataFrame and starts no listing or schema job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from my_polars_ai_spark.sources.tables import load_table
+
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), str(tmp_path / "region.parquet"))
+    handles = []
+    assert _jobs_started(spark, lambda: handles.append(load_table(spark, str(tmp_path), "region"))) >= 1
+    assert _jobs_started(spark, lambda: handles.append(load_table(spark, str(tmp_path), "region"))) == 0
+    assert handles[1] is handles[0]
+
+
+def test_load_table_rereads_a_rewritten_or_extended_table(spark, tmp_path):
+    """The handle is keyed on the file stamp: an overwritten file and a
+    directory table with a new part file each get a fresh read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from my_polars_ai_spark.sources.tables import _table_handle, load_table
+
+    sf = str(tmp_path)
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), str(path))
+    assert load_table(spark, sf, "region").count() == 2
+    pq.write_table(pa.table({"r_regionkey": [5, 6, 7]}), str(path))
+    got = load_table(spark, sf, "region")
+    assert sorted(r.r_regionkey for r in got.collect()) == [5, 6, 7]
+    # the superseded handle is dropped, not kept beside the fresh one
+    assert sum(k[:3] == (spark, sf, "region") for k in _table_handle.entries) == 1
+
+    parts = tmp_path / "nation.parquet"
+    parts.mkdir()
+    pq.write_table(pa.table({"n_nationkey": [0, 1]}), str(parts / "part-0.parquet"))
+    assert load_table(spark, sf, "nation").count() == 2
+    pq.write_table(pa.table({"n_nationkey": [2]}), str(parts / "part-1.parquet"))
+    assert load_table(spark, sf, "nation").count() == 3
+
+
+def test_self_join_of_one_handle_matches_duckdb(spark, sf_dir):
+    """Ops that load a table twice now share one handle, so their joins
+    are self-joins of one relation: aliased sides keep their own
+    filters and columns (DuckDB's answer is 40 rows at any SF), and an
+    unaliased reference to the right side's columns, which Spark cannot
+    tell from the left side's, fails at analysis instead of answering
+    wrong."""
+    import duckdb
+    from pyspark.errors import AnalysisException
+
+    from my_polars_ai_spark.sources.tables import load_table
+
+    nation = load_table(spark, sf_dir, "nation")
+    assert load_table(spark, sf_dir, "nation") is nation
+    lo = nation.filter(F.col("n_nationkey") < 10)
+    hi = nation.filter(F.col("n_nationkey") >= 5)
+    got = sorted(
+        tuple(r)
+        for r in lo.alias("lo")
+        .join(hi.alias("hi"), F.col("lo.n_regionkey") == F.col("hi.n_regionkey"))
+        .select("lo.n_nationkey", "hi.n_nationkey")
+        .collect()
+    )
+    want = sorted(
+        duckdb.sql(
+            f"""SELECT a.n_nationkey, b.n_nationkey
+            FROM '{sf_dir}/nation.parquet' a JOIN '{sf_dir}/nation.parquet' b
+              ON a.n_regionkey = b.n_regionkey
+            WHERE a.n_nationkey < 10 AND b.n_nationkey >= 5"""
+        ).fetchall()
+    )
+    assert len(want) == 40 and got == want
+    with pytest.raises(AnalysisException, match="ambiguous"):
+        lo.join(hi, lo["n_regionkey"] == hi["n_regionkey"]).select(hi["n_nationkey"]).collect()
+
+
+def test_load_table_handles_of_a_stopped_session_are_evicted(sf_dir):
+    """After spark.stop() and a new session, the next load evicts the
+    stopped session's handles. Runs in its own process: stopping the
+    suite's shared session would break every later test."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import sys
+from pyspark.sql import SparkSession
+from my_polars_ai_spark.sources.tables import _table_handle, load_table
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.memory", "512m").getOrCreate())
+
+old = session()
+load_table(old, sys.argv[1], "nation")
+assert {k[0] for k in _table_handle.entries} == {old}
+old.stop()
+new = session()
+assert new is not old
+assert load_table(new, sys.argv[1], "nation").count() == 25
+assert {k[0] for k in _table_handle.entries} == {new}, _table_handle.entries
+print("evicted")
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(filter(None, (root, os.environ.get("PYTHONPATH"))))}
+    r = subprocess.run(
+        [sys.executable, "-c", script, sf_dir], capture_output=True, text=True, cwd=root, env=env, timeout=300
+    )
+    assert r.returncode == 0 and "evicted" in r.stdout, r.stdout + r.stderr[-3000:]
