@@ -8,9 +8,13 @@ distinct-score histogram, a calendar-grain series. Those are the right
 100-TB shapes; the warning is the linter being unable to see
 cardinality. This module is the attribution ledger the round-6 verdict
 asked for: every (op, warning-kind) pair that is ACCEPTED must appear
-here with the reason the flagged input is bounded, and
-``tools/lint_all.py`` fails on any warning with no entry — so a new op
-that introduces a real scale hazard cannot hide in the advisory noise.
+here with the reason the flagged input is bounded. The gate is the
+per-op case of ``tests/test_registry_sweep.py``: it lints each op's plan
+from a cold cache, before any action, and requires the set of warning
+kinds to equal the op's entries here — a warning with no entry fails
+(a new op cannot hide a real scale hazard in the advisory noise), and
+so does an entry whose warning no longer fires (a dead justification
+cannot hide a future regression of the same kind).
 
 Kinds: ``bnlj`` (BroadcastNestedLoopJoin), ``global-window`` (window
 with no PARTITION BY), ``cartesian`` (CartesianProduct), ``multi-smj``
@@ -176,8 +180,7 @@ _SMJ_OPS = (
     "qgd_weights_manifest",
     # r9: triangle counting joins the LSH-candidate edge list to itself
     # twice (wedge close) — both sides are the banded candidate set,
-    # never doc x doc; fires or not depending on which upstream frames
-    # are already cached when the plan is built (window-rotation order)
+    # never doc x doc
     "local_clustering_coefficient",
     # r9: 3 unrolled GD steps (2 doc-grain equi-joins each) + the final
     # trained-score join — SMJ count = steps*2 + 1, bounded by the
@@ -217,22 +220,6 @@ ALLOWLIST[("kendall_tau_nation_metrics", "cartesian")] = (
 ALLOWLIST[("row_udf_label", "python-udf")] = (
     "the deliberate labeled row-at-a-time UDF exhibit, kept as the "
     "contrast op for the pandas_udf fast path"
-)
-
-# Entries whose warning is CACHE-STATE-conditional: the plan contains
-# >= 3 sort-merge joins only when built against a cold cache — in a
-# warm sweep, upstream frames cached by earlier ops replace join
-# subtrees with InMemoryTableScan reuses and the SMJ count drops below
-# the linter's threshold. These entries are exempt from the not-firing
-# staleness gate in tools/lint_all.py, but the gate re-lints each of
-# them in ISOLATION after clearCache() and fails if the warning does
-# not fire cold — so a conditional entry cannot rot either (round-12
-# fix for the two entries the r11 verdict flagged as stale).
-CACHE_CONDITIONAL: frozenset[tuple[str, str]] = frozenset(
-    {
-        ("local_clustering_coefficient", "multi-smj"),
-        ("neardup_adamic_adar", "multi-smj"),
-    }
 )
 
 

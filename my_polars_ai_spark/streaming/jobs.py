@@ -622,17 +622,6 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents table (production: Kafka
-    topic of crawled docs with identical downstream code)."""
-    raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def stream_neardup_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of operators.dedup.dedup_incremental_minhash — the
     PRODUCTION shape of incremental corpus dedup: newly crawled

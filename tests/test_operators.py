@@ -1,7 +1,8 @@
 """Operator-layer tests: registry integrity, targeted invariants the
 DuckDB harness can't express (ANN recall, stub determinism, portable-hash
-parity), and reader round-trips. Full oracle comparison lives in
-tools/verify_local.py (mirrored by the driver at sf0.01)."""
+parity), and reader round-trips. Full oracle comparison of every op
+lives in Tier-1 in tests/test_registry_sweep.py (mirrored by the driver
+at sf0.01)."""
 
 from __future__ import annotations
 

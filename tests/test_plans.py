@@ -701,14 +701,32 @@ def test_winnowing_posting_cap_precedes_self_join(spark, sf_dir):
 
 def test_lint_allowlist_names_are_registered_ops():
     """Every (op, kind) pair in the lint allowlist must name a real
-    registry op — a rename would silently orphan its justification and
-    tools/lint_all.py would then fail the renamed op as unattributed."""
+    registry op. The per-op sweep (tests/test_registry_sweep.py, which
+    replaces tools/lint_all.py) visits registered ops only, so an entry
+    orphaned by a rename would never be reported stale there — only the
+    renamed op would fail, as unattributed."""
     from my_polars_ai_spark.plans.lint_allowlist import ALLOWLIST
 
     ops = set(all_ops())
     kinds = {"bnlj", "global-window", "cartesian", "multi-smj", "python-udf"}
     bad = [(n, k) for (n, k) in ALLOWLIST if n not in ops or k not in kinds]
     assert not bad, f"allowlist entries with unknown op or kind: {bad}"
+
+
+def test_package_import_does_not_load_duckdb():
+    """duckdb is a ``test`` extra: plans/oracle.py imports it inside
+    connect() only, so the package and its registry load without it."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys; import my_polars_ai_spark.plans.oracle; "
+        "from my_polars_ai_spark.operators import all_ops; all_ops(); "
+        "assert 'duckdb' not in sys.modules"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=root)
 
 
 def test_round7_curation_ops_plan_contracts(spark, sf_dir):
