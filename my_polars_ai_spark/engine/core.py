@@ -10,6 +10,21 @@ last expression is the answer, optionally rewritten conversationally.
 100 TB discipline (SURVEY.md §7 hard part #4): prompt metadata uses
 ``df.limit(5)`` for the sample and NEVER calls ``df.count()`` unless
 ``count_rows=True`` — a row count is a full-table action on Spark.
+
+The sample is taken once per DataFrame object, not once per question:
+``df.head()`` is free in Polars, but ``df.limit(5).toPandas()`` is a
+Spark job, and a session asks many questions (plus error-correction
+retries) about the same frames. The rendered metadata and the schema
+string are memoized per frame object and per ``(enforce_privacy,
+count_rows)`` in a weak-keyed map, so an entry lives exactly as long as
+its frame and no user frame is pinned. A DataFrame object's analyzed
+schema never changes, and ``sources.tables.load_table`` returns a new
+handle when a table's files change, so a rewritten table is sampled
+afresh.
+
+``SparkAI.last_run`` is a :class:`RunRecord` of the latest ``run`` (or
+direct ``run_code``): seconds per phase, whether the code cache hit,
+metadata memo hits and misses, and the exception class of each retry.
 """
 
 from __future__ import annotations
@@ -18,9 +33,12 @@ import ast
 import io
 import logging
 import re
+import threading
 import time
 import uuid
-from contextlib import redirect_stdout
+import weakref
+from contextlib import contextmanager, redirect_stdout
+from dataclasses import dataclass, field
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +59,57 @@ from my_polars_ai_spark.engine.sandbox import build_environment, clean_code
 from my_polars_ai_spark.engine.shortcuts import Shortcuts
 
 _LOGGER = logging.getLogger("my_polars_ai_spark")
+
+PHASES = ("metadata", "llm", "sanitize", "env", "exec", "lint", "conversational")
+
+
+@dataclass
+class RunRecord:
+    """Where one ``SparkAI.run`` (or a direct ``run_code``) spent its time.
+
+    ``phases`` maps each of :data:`PHASES` to seconds; ``cache_hit`` is
+    ``None`` when the code cache is off or the record is a ``run_code``
+    call's; ``metadata_hits``/``metadata_misses`` count frame-metadata
+    memo lookups (a miss is one ``limit(5)`` job); ``retries`` holds the
+    exception class name of each error-correction retry; ``error`` is
+    the class name of the exception that ended a failed run."""
+
+    phases: dict[str, float] = field(default_factory=lambda: dict.fromkeys(PHASES, 0.0))
+    cache_hit: bool | None = None
+    metadata_hits: int = 0
+    metadata_misses: int = 0
+    retries: list[str] = field(default_factory=list)
+    error: str | None = None
+    total_s: float = 0.0
+
+
+class _FrameInfo:
+    """What the prompt needs from one DataFrame object: its schema (one
+    py4j round trip, then fixed for the object's life) and its rendered
+    metadata per ``(enforce_privacy, count_rows)``."""
+
+    __slots__ = ("schema", "fingerprint", "rendered")
+
+    def __init__(self, df: DataFrame):
+        self.schema = df.schema
+        self.fingerprint = self.schema.simpleString()
+        self.rendered: dict[tuple[bool, bool], tuple[str, str, str]] = {}
+
+
+# Weak keys: an entry is dropped with its frame. PySpark DataFrames hash
+# by identity, so two objects over the same plan are two entries.
+_FRAMES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_FRAMES_LOCK = threading.Lock()
+
+
+def _frame_info(df: DataFrame) -> _FrameInfo:
+    with _FRAMES_LOCK:
+        info = _FRAMES.get(df)
+    if info is None:
+        fresh = _FrameInfo(df)
+        with _FRAMES_LOCK:
+            info = _FRAMES.setdefault(df, fresh)
+    return info
 
 
 class SparkAI(Shortcuts):
@@ -74,15 +143,28 @@ class SparkAI(Shortcuts):
         self.last_prompt_id: str | None = None
         self.last_code_generated: str | None = None
         self.last_code_executed: str | None = None
-        self.last_run_time: float | None = None
+        self.last_run: RunRecord | None = None
+        self._open: RunRecord | None = None
         if verbose:
             logging.basicConfig(level=logging.INFO)
 
     # -- metadata -----------------------------------------------------------
 
     def _frame_metadata(self, df: DataFrame) -> tuple[str, str, str]:
-        """(head_text, num_rows, num_columns) without full-table actions
-        unless count_rows=True.
+        """(head_text, num_rows, num_columns), memoized per frame object
+        (module docstring); a miss runs :meth:`_sample`."""
+        with self._phase("metadata"):
+            info = _frame_info(df)
+            key = (self._enforce_privacy, self._count_rows)
+            rendered = info.rendered.get(key)
+            if rendered is not None:
+                self._rec.metadata_hits += 1
+                return rendered
+            self._rec.metadata_misses += 1
+            return info.rendered.setdefault(key, self._sample(df, info.schema))
+
+    def _sample(self, df: DataFrame, schema) -> tuple[str, str, str]:
+        """The memo's fill: no full-table action unless count_rows=True.
 
         With enforce_privacy=True no cell values leave the cluster: the
         LLM sees only column names and types. (The reference accepted an
@@ -91,16 +173,16 @@ class SparkAI(Shortcuts):
         """
         if self._enforce_privacy:
             head = "Columns (values withheld for privacy):\n" + "\n".join(
-                f"  {f.name}: {f.dataType.simpleString()}" for f in df.schema.fields
+                f"  {f.name}: {f.dataType.simpleString()}" for f in schema.fields
             )
         else:
             head = df.limit(5).toPandas().to_string(index=False)
         num_rows = str(df.count()) if self._count_rows else "an unknown number of"
-        return head, num_rows, str(len(df.columns))
+        return head, num_rows, str(len(schema.fields))
 
     @staticmethod
     def _schema_fingerprint(dfs: list[DataFrame]) -> str:
-        return "|".join(d.schema.simpleString() for d in dfs)
+        return "|".join(_frame_info(d).fingerprint for d in dfs)
 
     def _render_frames(self, dfs: list[DataFrame]) -> str:
         parts = []
@@ -108,6 +190,44 @@ class SparkAI(Shortcuts):
             head, num_rows, num_cols = self._frame_metadata(df)
             parts.append(f"Dataframe df{i}, with {num_rows} rows and {num_cols} columns.\nMetadata (first rows):\n{head}")
         return "\n\n".join(parts)
+
+    # -- run record ----------------------------------------------------------
+
+    @property
+    def _rec(self) -> RunRecord:
+        """The open record; outside ``run``/``run_code``, a throwaway one."""
+        return self._open if self._open is not None else RunRecord()
+
+    @contextmanager
+    def _recording(self):
+        """Open a fresh ``last_run`` unless one is open (``run`` calls
+        ``run_code``, and the two share one record)."""
+        if self._open is not None:
+            yield self._open
+            return
+        self.last_run = self._open = rec = RunRecord()
+        start = time.perf_counter()
+        try:
+            yield rec
+        except Exception as exc:
+            rec.error = type(exc).__name__
+            raise
+        finally:
+            rec.total_s = time.perf_counter() - start
+            self._open = None
+
+    @contextmanager
+    def _phase(self, name: str):
+        rec, start = self._rec, time.perf_counter()
+        try:
+            yield
+        finally:
+            rec.phases[name] += time.perf_counter() - start
+
+    @property
+    def last_run_time(self) -> float | None:
+        """Seconds the latest run took (``last_run.total_s``)."""
+        return self.last_run.total_s if self.last_run else None
 
     # -- public API ----------------------------------------------------------
 
@@ -136,7 +256,8 @@ class SparkAI(Shortcuts):
         prompt = self._prompt_overrides.get(
             "generate_response", GenerateResponsePrompt(question=question, answer=answer)
         )
-        return self._llm.predict(str(prompt))
+        with self._phase("conversational"):
+            return self._llm.predict(str(prompt))
 
     def run(
         self,
@@ -146,80 +267,88 @@ class SparkAI(Shortcuts):
         show_code: bool = False,
         use_error_correction_framework: bool = True,
     ):
-        """The main NL -> answer pipeline."""
+        """The main NL -> answer pipeline. ``last_run`` records it."""
         if self._llm is None:
             raise LLMNotFoundError("SparkAI requires an llm; pass llm=... to the constructor")
-        start = time.time()
-        self.last_prompt_id = str(uuid.uuid4())
-        dfs = data_frame if isinstance(data_frame, list) else [data_frame]
-        self.log(f'Running SparkAI with {self._llm.type} LLM: "{prompt}"')
+        with self._recording() as rec:
+            try:
+                self.last_prompt_id = str(uuid.uuid4())
+                dfs = data_frame if isinstance(data_frame, list) else [data_frame]
+                self.log(f'Running SparkAI with {self._llm.type} LLM: "{prompt}"')
 
-        try:
-            fingerprint = self._schema_fingerprint(dfs)
-            code = self._cache.get(prompt, fingerprint) if self._cache else None
-            if code is None:
-                if len(dfs) == 1:
-                    head, num_rows, num_cols = self._frame_metadata(dfs[0])
-                    instruction = self._prompt_overrides.get(
-                        "generate_python_code",
-                        GeneratePySparkCodePrompt(
-                            prompt=prompt,
-                            df_head=head,
-                            num_rows=num_rows,
-                            num_columns=num_cols,
-                            today_date=date.today(),
-                        ),
-                    )
-                else:
-                    instruction = self._prompt_overrides.get(
-                        "multiple_dataframes",
-                        MultipleDataFramesPrompt(
-                            prompt=prompt,
-                            dataframes=self._render_frames(dfs),
-                            today_date=date.today(),
-                        ),
-                    )
-                code = self._llm.generate_code(instruction, prompt)
+                with self._phase("metadata"):
+                    fingerprint = self._schema_fingerprint(dfs)
+                cached = self._cache.get(prompt, fingerprint) if self._cache else None
                 if self._cache:
-                    self._cache.set(prompt, code, fingerprint)
-            self.last_code_generated = code
-            self.log(f"Code generated:\n{code}")
-            if show_code:
-                from my_polars_ai_spark.engine.notebook import show_code_in_new_cell
+                    rec.cache_hit = cached is not None
+                code = cached
+                if code is None:
+                    if len(dfs) == 1:
+                        head, num_rows, num_cols = self._frame_metadata(dfs[0])
+                        instruction = self._prompt_overrides.get(
+                            "generate_python_code",
+                            GeneratePySparkCodePrompt(
+                                prompt=prompt,
+                                df_head=head,
+                                num_rows=num_rows,
+                                num_columns=num_cols,
+                                today_date=date.today(),
+                            ),
+                        )
+                    else:
+                        instruction = self._prompt_overrides.get(
+                            "multiple_dataframes",
+                            MultipleDataFramesPrompt(
+                                prompt=prompt,
+                                dataframes=self._render_frames(dfs),
+                                today_date=date.today(),
+                            ),
+                        )
+                    with self._phase("llm"):
+                        code = self._llm.generate_code(instruction, prompt)
+                self.last_code_generated = code
+                self.log(f"Code generated:\n{code}")
+                if show_code:
+                    from my_polars_ai_spark.engine.notebook import show_code_in_new_cell
 
-                if not show_code_in_new_cell(code):
-                    print(code)
+                    if not show_code_in_new_cell(code):
+                        print(code)
 
-            answer = self.run_code(
-                code,
-                data_frame,
-                use_error_correction_framework=use_error_correction_framework,
-                prompt=prompt,
-            )
-            self.log(f"Answer: {answer}")
-            if isinstance(answer, DataFrame):
-                from my_polars_ai_spark.plans.guardrails import lint_plan
+                answer = self.run_code(
+                    code,
+                    data_frame,
+                    use_error_correction_framework=use_error_correction_framework,
+                    prompt=prompt,
+                )
+                # run_code moves last_code_generated to each corrected draft, so
+                # this caches the code that ran, never a draft that failed.
+                if self._cache and self.last_code_generated != cached:
+                    self._cache.set(prompt, self.last_code_generated, fingerprint)
+                self.log(f"Answer: {answer}")
+                if isinstance(answer, DataFrame):
+                    from my_polars_ai_spark.plans.guardrails import lint_plan
 
-                for warning in lint_plan(answer):
-                    self.log(f"Plan warning: {warning}")
+                    with self._phase("lint"):
+                        warnings = lint_plan(answer)
+                    for warning in warnings:
+                        self.log(f"Plan warning: {warning}")
 
-            conversational = (
-                self._is_conversational_answer
-                if is_conversational_answer is None
-                else is_conversational_answer
-            )
-            if conversational and not isinstance(answer, DataFrame):
-                answer = self.conversational_answer(prompt, answer)
-                self.log(f"Conversational answer: {answer}")
-            self.last_run_time = time.time() - start
-            self.log(f"Executed in: {self.last_run_time}s")
-            return answer
-        except Exception as exc:  # reference catch-all (polarsai/__init__.py:334-341)
-            self.last_run_time = time.time() - start
-            return (
-                "Unfortunately, I was not able to answer your question, "
-                f"because of the following error:\n\n{exc}\n"
-            )
+                conversational = (
+                    self._is_conversational_answer
+                    if is_conversational_answer is None
+                    else is_conversational_answer
+                )
+                if conversational and not isinstance(answer, DataFrame):
+                    answer = self.conversational_answer(prompt, answer)
+                    self.log(f"Conversational answer: {answer}")
+            except Exception as exc:  # reference catch-all (polarsai/__init__.py:334-341)
+                rec.error = type(exc).__name__
+                return (
+                    "Unfortunately, I was not able to answer your question, "
+                    f"because of the following error:\n\n{exc}\n"
+                )
+        self.log(f"Executed in: {rec.total_s}s")
+        return answer
 
     # -- execution -----------------------------------------------------------
 
@@ -232,35 +361,41 @@ class SparkAI(Shortcuts):
     ):
         """Execute (possibly generated) PySpark code in the sandbox and
         extract the result; on failure, ask the LLM to correct the code,
-        up to _max_retries times.
+        up to _max_retries times. Each corrected draft becomes
+        ``last_code_generated``, so after a success it is the code that ran.
 
         Exceptions from the *result-extraction eval* are retried too —
         on Spark, execution errors surface at action time, not exec time
         (SURVEY.md §7 hard part #2).
         """
-        dfs = data_frame if isinstance(data_frame, list) else [data_frame]
-        spark = dfs[0].sparkSession if dfs else SparkSession.getActiveSession()
+        with self._recording() as rec:
+            dfs = data_frame if isinstance(data_frame, list) else [data_frame]
+            spark = dfs[0].sparkSession if dfs else SparkSession.getActiveSession()
 
-        if self._save_charts and self.last_prompt_id:
-            code = add_save_chart(code, self.last_prompt_id)
+            if self._save_charts and self.last_prompt_id:
+                code = add_save_chart(code, self.last_prompt_id)
 
-        bindings: dict[str, object] = {"df": dfs[0]}
-        for i, d in enumerate(dfs, start=1):
-            bindings[f"df{i}"] = d
+            bindings: dict[str, object] = {"df": dfs[0]}
+            for i, d in enumerate(dfs, start=1):
+                bindings[f"df{i}"] = d
 
-        count = 0
-        while True:
-            try:
-                cleaned = clean_code(code, self._extra_whitelist)
-                self.last_code_executed = cleaned
-                self.log(f"Code running:\n{cleaned}")
-                env = build_environment(spark, bindings, self._extra_whitelist)
-                return self._execute_and_extract(cleaned, env)
-            except Exception as exc:
-                count += 1
-                if not use_error_correction_framework or count >= self._max_retries:
-                    raise
-                code = self._retry_run_code(code, prompt, dfs, exc)
+            count = 0
+            while True:
+                try:
+                    with self._phase("sanitize"):
+                        cleaned = clean_code(code, self._extra_whitelist)
+                    self.last_code_executed = cleaned
+                    self.log(f"Code running:\n{cleaned}")
+                    with self._phase("env"):
+                        env = build_environment(spark, bindings, self._extra_whitelist)
+                    with self._phase("exec"):
+                        return self._execute_and_extract(cleaned, env)
+                except Exception as exc:
+                    count += 1
+                    if not use_error_correction_framework or count >= self._max_retries:
+                        raise
+                    rec.retries.append(type(exc).__name__)
+                    code = self.last_code_generated = self._retry_run_code(code, prompt, dfs, exc)
 
     _MAX_ERROR_CHARS = 4000
 
@@ -306,7 +441,8 @@ class SparkAI(Shortcuts):
                     today_date=date.today(),
                 ),
             )
-        return self._llm.generate_code(instruction, "")
+        with self._phase("llm"):
+            return self._llm.generate_code(instruction, "")
 
     @staticmethod
     def _execute_and_extract(code: str, env: dict):

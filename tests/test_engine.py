@@ -233,6 +233,142 @@ def test_run_uses_cache(spark, fruits, tmp_path):
     assert llm.call_count == 1  # second run served from cache
 
 
+def test_cache_stores_the_code_that_ran(spark, fruits, tmp_path):
+    # the first draft fails and is corrected: the cache must hold the
+    # correction, so the repeat is a hit that neither retries nor calls
+    # the LLM; a run that fails every retry caches nothing
+    bad = "df.agg(F.sum('NOPE')).collect()[0][0]"
+    good = "df.agg(F.sum('A')).collect()[0][0]"
+    llm = FakeLLM(queue=[bad, good])
+    path = str(tmp_path / "c")
+    ai = SparkAI(llm=llm, enable_cache=True, cache_path=path)
+    assert ai.run(fruits, "sum of A?") == 15
+    assert ai.run(fruits, "sum of A?") == 15
+    assert llm.call_count == 2
+    assert ai.last_run.cache_hit and ai.last_run.retries == []
+    assert Cache(path).get("sum of A?", SparkAI._schema_fingerprint([fruits])) == good
+
+    failing = SparkAI(llm=FakeLLM(output=bad), enable_cache=True, cache_path=path)
+    assert failing.run(fruits, "sum of NOPE?").startswith("Unfortunately")
+    assert len(failing.last_run.retries) == SparkAI._max_retries - 1
+    assert failing.last_run.error == "AnalysisException"
+    assert Cache(path).get("sum of NOPE?", SparkAI._schema_fingerprint([fruits])) is None
+
+
+def test_last_run_record_on_miss_hit_and_retry(spark, fruits, tmp_path):
+    from my_polars_ai_spark.engine.core import PHASES
+
+    good = "df.agg(F.sum('A')).collect()[0][0]"
+    llm = FakeLLM(queue=[good, "df.agg(F.sum('NOPE')).collect()[0][0]", good])
+    ai = SparkAI(llm=llm, enable_cache=True, cache_path=str(tmp_path / "c"))
+    assert ai.last_run is None and ai.last_run_time is None
+
+    ai.run(fruits, "sum of A?")  # miss: one sample, one LLM call
+    miss = ai.last_run
+    assert set(miss.phases) == set(PHASES)
+    assert (miss.cache_hit, miss.metadata_misses, miss.metadata_hits) == (False, 1, 0)
+    assert miss.retries == [] and miss.error is None
+    assert miss.phases["llm"] > 0 and miss.phases["exec"] > 0 and miss.phases["conversational"] == 0
+    assert miss.total_s >= sum(miss.phases.values()) and ai.last_run_time == miss.total_s
+
+    ai.run(fruits, "sum of A?")  # hit: no sample, no LLM call
+    hit = ai.last_run
+    assert hit is not miss
+    assert (hit.cache_hit, hit.metadata_misses, hit.metadata_hits, hit.retries) == (True, 0, 0, [])
+    assert hit.phases["llm"] == 0 and hit.phases["exec"] > 0
+
+    ai.run(fruits, "sum of A again?")  # miss + retry: both reuse the sample
+    retry = ai.last_run
+    assert (retry.cache_hit, retry.metadata_misses, retry.metadata_hits) == (False, 0, 2)
+    assert retry.retries == ["AnalysisException"] and retry.error is None
+    assert llm.call_count == 3
+
+    # a direct run_code call gets a record of its own
+    assert ai.run_code(good, fruits) == 15
+    assert ai.last_run is not retry and ai.last_run.cache_hit is None
+
+
+# -- frame-metadata memo -----------------------------------------------------
+
+def _write_table(tmp_path, name, table):
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, str(tmp_path / f"{name}.parquet"))
+
+
+def test_one_metadata_job_per_frame_across_engines(spark, tmp_path, jobs_started):
+    # Code that starts no job of its own (df.columns; a column that fails
+    # analysis), so every job counted is a metadata sample: a miss, a
+    # retry and a multi-frame question, in two engines over the same
+    # load_table handles, sample each of the two frames exactly once.
+    import pyarrow as pa
+
+    from my_polars_ai_spark.sources.tables import load_table
+
+    _write_table(tmp_path, "region", pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "ASIA"]}))
+    _write_table(tmp_path, "nation", pa.table({"n_nationkey": [0], "n_name": ["KENYA"], "n_regionkey": [0]}))
+    sf = str(tmp_path)
+    region, nation = load_table(spark, sf, "region"), load_table(spark, sf, "nation")
+    width, bad = "len(df1.columns)", "df1.select('no_such_column').columns"
+
+    def session(k: int) -> None:
+        llm = FakeLLM(queue=[width, bad, width, width])
+        ai = SparkAI(llm=llm, cache_path=str(tmp_path / f"cache{k}" / "c"))
+        frames = {t: load_table(spark, sf, t) for t in ("region", "nation")}
+        assert frames["region"] is region and frames["nation"] is nation
+        assert ai.run(frames["region"], "How wide is region?") == 2
+        assert ai.run(frames["region"], "How wide is region, again?") == 2
+        assert ai.last_run.retries == ["AnalysisException"]
+        assert ai.run([frames["nation"], frames["region"]], "How wide is the first frame?") == 3
+        assert llm.call_count == 4
+
+    assert jobs_started(lambda: session(1)) == 2
+    assert jobs_started(lambda: session(2)) == 0
+
+
+def test_rewritten_table_prompt_shows_new_rows(spark, tmp_path):
+    import pyarrow as pa
+
+    from my_polars_ai_spark.sources.tables import load_table
+
+    sf = str(tmp_path)
+    _write_table(tmp_path, "region", pa.table({"r_regionkey": [0], "r_name": ["OLDROW"]}))
+    llm = FakeLLM(output="df.count()")
+    assert SparkAI(llm=llm, enable_cache=False).run(load_table(spark, sf, "region"), "How many rows?") == 1
+    assert "OLDROW" in llm.last_prompt
+    _write_table(tmp_path, "region", pa.table({"r_regionkey": [5, 6], "r_name": ["NEWROW", "NEWERROW"]}))
+    assert SparkAI(llm=llm, enable_cache=False).run(load_table(spark, sf, "region"), "How many rows?") == 2
+    assert "NEWROW" in llm.last_prompt and "OLDROW" not in llm.last_prompt
+
+
+def test_privacy_engine_never_reuses_an_open_sample(spark, fruits):
+    code = "<startCode>\ndf.agg(F.sum('A')).collect()[0][0]\n<endCode>"
+    open_llm, private_llm = FakeLLM(output=code), FakeLLM(output=code)
+    assert SparkAI(llm=open_llm, enable_cache=False).run(fruits, "sum of A?") == 15
+    assert "banana" in open_llm.last_prompt
+    assert SparkAI(llm=private_llm, enforce_privacy=True, enable_cache=False).run(fruits, "sum of A?") == 15
+    assert "fruits: string" in private_llm.last_prompt
+    for value in ("banana", "apple", "beetle", "audi"):
+        assert value not in private_llm.last_prompt
+
+
+def test_metadata_memo_entry_dies_with_its_frame(spark):
+    import gc
+    import weakref
+
+    from my_polars_ai_spark.engine import core
+
+    gc.collect()  # drop earlier tests' dead frames, so the count below is this frame's
+    df = from_records(spark, {"A": [1, 2]})
+    llm = FakeLLM(output="df.count()")
+    assert SparkAI(llm=llm, enable_cache=False).run(df, "How many rows?") == 2
+    assert df in core._FRAMES
+    before, ref = len(core._FRAMES), weakref.ref(df)
+    del df
+    gc.collect()
+    assert ref() is None and len(core._FRAMES) == before - 1
+
+
 # -- charts ------------------------------------------------------------------
 
 def test_add_save_chart_injects_savefig(tmp_path):

@@ -310,22 +310,7 @@ def test_load_table_spread_skips_repartition_without_rdd_api(spark, sf_dir, monk
     assert _nb_input_splittable(read) is False
 
 
-def _jobs_started(spark, fn) -> int:
-    """Spark jobs started while ``fn()`` runs, from the status tracker."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_table_reuses_one_handle_per_session(spark, tmp_path):
+def test_load_table_reuses_one_handle_per_session(spark, tmp_path, jobs_started):
     """An unchanged table is read once per session: the second call
     returns the same DataFrame and starts no listing or schema job."""
     import pyarrow as pa
@@ -335,8 +320,8 @@ def test_load_table_reuses_one_handle_per_session(spark, tmp_path):
 
     pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), str(tmp_path / "region.parquet"))
     handles = []
-    assert _jobs_started(spark, lambda: handles.append(load_table(spark, str(tmp_path), "region"))) >= 1
-    assert _jobs_started(spark, lambda: handles.append(load_table(spark, str(tmp_path), "region"))) == 0
+    assert jobs_started(lambda: handles.append(load_table(spark, str(tmp_path), "region"))) >= 1
+    assert jobs_started(lambda: handles.append(load_table(spark, str(tmp_path), "region"))) == 0
     assert handles[1] is handles[0]
 
 
