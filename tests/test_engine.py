@@ -561,20 +561,28 @@ def test_enforce_privacy_redacts_conversational_and_retry_prompts(spark, fruits)
     # retry path: the correction prompt must not carry the raw error text
     # (Spark errors can quote cell values); conversational rewrite must not
     # carry the computed answer
+    class RecordingLLM(FakeLLM):
+        def predict(self, text):
+            prompts.append(text)
+            return super().predict(text)
+
+    prompts = []
     bad = "<startCode>\nnonexistent_fn(df)\n<endCode>"
     good = "<startCode>\ndf.agg(F.sum('A')).collect()[0][0]\n<endCode>"
-    llm = FakeLLM(queue=[bad, good, "the sum is some number"])
+    llm = RecordingLLM(queue=[bad, good, "the sum is some number"])
     ai = SparkAI(llm=llm, enforce_privacy=True, enable_cache=False, conversational=True)
     ai.run(fruits, "sum of A?")
-    prompts = "\n".join(ai.logs)
-    assert "withheld for privacy" in llm.last_prompt  # answer value redacted
-    # the "Today is YYYY-MM-DD" header can legitimately contain any
-    # two-digit substring (e.g. a day-of-month of "15"), so strip it
-    # before asserting the computed answer leaked nowhere else
-    sans_date = "\n".join(
-        ln for ln in llm.last_prompt.splitlines() if not ln.startswith("Today is ")
-    )
-    assert "15" not in sans_date
+    # the rewrite calls predict() directly, so llm.last_prompt is the
+    # correction prompt; read each prompt from the record instead
+    _, retry, rewrite = prompts
+    assert "nonexistent_fn" in retry  # it is the correction prompt
+    assert "withheld for privacy" in retry
+    assert "is not defined" not in retry  # the NameError's message
+    for cell in ("banana", "apple", "beetle", "audi"):
+        assert cell not in retry
+    assert rewrite.lstrip().startswith("Question: sum of A?")
+    assert "withheld for privacy" in rewrite  # answer value redacted
+    assert "15" not in rewrite
 
 
 def test_retry_prompt_redacts_error_under_privacy(spark, fruits):
