@@ -228,12 +228,9 @@ def main() -> None:
     # GC/cache-pressure-sensitive across rounds (bimodal with zero code
     # change — PERF.md rounds 5-11 adjudications). Before round 12 their
     # recorded number was isolated only in rounds where they happened to
-    # land in the top-5, so cross-round comparisons mixed steady-state
-    # and in-bench samples and the >1.25x drift wire fired on
-    # measurement artifacts. Pinning them here (and tagging "isolated"
-    # in the output so tools/compare_bench.py can require
-    # isolated-vs-isolated before flagging) makes the wire fire only
-    # when a query's ISOLATED time moved — i.e. on real plan changes.
+    # land in the top-5, so comparisons between runs mixed steady-state
+    # and in-bench samples. The output's "isolated" list names every
+    # query whose number is an isolated min-of-5.
     ISOLATED_REMEASURE = (
         "dedup_minhash_lsh",
         "pq_adc_topk",
@@ -254,7 +251,6 @@ def main() -> None:
     )
     heavy = sorted(timings, key=timings.get, reverse=True)[:5]
     isolated_set = sorted(set(heavy) | set(ISOLATED_REMEASURE), key=HEADLINE.index)
-    isolated_pinned = sorted(ISOLATED_REMEASURE, key=HEADLINE.index)
     for name in isolated_set:
         spark.catalog.clearCache()
         ops[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -277,9 +273,9 @@ def main() -> None:
     # So: per-query detail line FIRST, short summary line LAST — however
     # many queries the headline grows to, truncation can only reach the
     # detail line, never the total. The full payload is also written to
-    # BENCH_LAST.json (run_id ties it to the summary) so
-    # tools/compare_bench.py can recover complete per-query data even
-    # when the artifact's tail holds only part of the detail line.
+    # BENCH_LAST.json (run_id ties it to the summary), so the complete
+    # per-query data survives even when a captured tail holds only part
+    # of the detail line.
     run_id = str(time.time_ns())
     detail = {
         "metric": "headline_queries_total_runtime",
@@ -288,23 +284,11 @@ def main() -> None:
         "queries": timings,
         "cold_first_iter": cold_first_iter,
         "isolated": isolated_set,
-        "isolated_pinned": isolated_pinned,
         "sf": sf_val,
         "run_id": run_id,
     }
     root = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(root, "BENCH_LAST.json"), "w") as fh:
-        json.dump(detail, fh)
-    # Archive the full payload per run_id too: BENCH_LAST.json holds
-    # only the LATEST run, so the first local bench of a new round used
-    # to overwrite the very detail file that recovers the PREVIOUS
-    # round's summary-parsed driver artifact, silently degrading
-    # compare_bench to partial tail-regex recovery (round 14, observed
-    # live). The archive is ~3 KB per run and compare_bench checks it
-    # by run_id before falling back to the tail.
-    runs_dir = os.path.join(root, "cache", "bench_runs")
-    os.makedirs(runs_dir, exist_ok=True)
-    with open(os.path.join(runs_dir, f"{run_id}.json"), "w") as fh:
         json.dump(detail, fh)
     print(json.dumps(detail))
     # The summary line (LAST, so it always survives tail capture)

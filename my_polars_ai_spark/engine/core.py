@@ -257,7 +257,7 @@ class SparkAI(Shortcuts):
             "generate_response", GenerateResponsePrompt(question=question, answer=answer)
         )
         with self._phase("conversational"):
-            return self._llm.predict(str(prompt))
+            return self._llm.ask(str(prompt))
 
     def run(
         self,

@@ -68,10 +68,15 @@ class LLM:
             raise NoCodeFoundError("LLM response did not contain valid Python code")
         return code
 
+    def ask(self, text: str) -> str:
+        """Call the provider, recording ``text`` as ``last_prompt``: the
+        one entry point for every prompt the engine sends."""
+        self.last_prompt = text
+        return self.predict(text)
+
     def generate_code(self, instruction: Prompt | str, prompt: str) -> str:
         """Render the instruction, call the provider, extract the code."""
-        self.last_prompt = f"{instruction}\n{prompt}"
-        return self._extract_code(self.predict(self.last_prompt))
+        return self._extract_code(self.ask(f"{instruction}\n{prompt}"))
 
 
 class FakeLLM(LLM):

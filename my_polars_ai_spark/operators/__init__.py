@@ -3,12 +3,10 @@
 ``all_ops()`` aggregates every module's OPS dict; ``__spark_entry__.py``
 exposes them to the driver as ``queries()`` / ``oracle_sql()``.
 
-Ordering contract: the CORRECTNESS gate checks a prefix window of
-``all_ops()`` insertion order. The first 50 entries are ``_PRIORITY``, the
-live window; every other op follows in module order. ``_PRIORITY_R18`` ..
-``_PRIORITY_R20`` are staged windows, each a one-line flip of
-``_PRIORITY``. ``tools/attestation_status.py`` reads them by name and
-counts a window as pending until a CORRECTNESS file of its round exists.
+Ordering contract: the driver's CORRECTNESS gate checks the first 50
+entries of ``all_ops()``, and those entries are ``_PRIORITY`` in order;
+every other op follows in module order. Coverage of the whole registry
+comes from ``tests/test_registry_sweep.py``.
 """
 
 from __future__ import annotations
@@ -38,18 +36,10 @@ _MODULES = (
     "streaming_live",
 )
 
-_PRIORITY_R17 = (
-    # canaries — flagship + dedup + SQL, as every round
+_PRIORITY = (
     "flagship_revenue_by_nation",
     "dedup_minhash_lsh",
     "sql_api_revenue",
-    # the 20 round-16-touched ops (the optimization rewrites whose
-    # new plans the driver's oracle has not yet attested). Three of
-    # these (winnowing + the two span ops) were already staged here
-    # by the freshness rotation; the rest are pulled forward from
-    # R19/R20/unstaged, and qgd_weights_manifest / pq_adc_topk /
-    # audio_frame_features re-attest early because their R14/R15
-    # rows predate the r16 rewrite of their plans.
     "repeated_span_stats",
     "repeated_span_excision",
     "ngram_novelty_score",
@@ -70,10 +60,6 @@ _PRIORITY_R17 = (
     "audio_vad_segments",
     "audio_vad_chunks",
     "audio_chunk_export_manifest",
-    # freshness tail (27) — the first 27 rows of the previously
-    # staged rotation: round-6 rows (9, the R16-displaced rows lead
-    # in displacement order), then the oldest r7 block, registry
-    # order
     "kaplan_meier_churn",
     "logrank_test_churn",
     "cusum_change_detection",
@@ -101,229 +87,7 @@ _PRIORITY_R17 = (
     "kcenter_coreset_greedy",
     "bpe_merge_step",
     "training_manifest",
-    # token_budget_selection / dsir_importance_weights /
-    # bpe_train_merges / phrase_search_positional fill the R19 slots
-    # vacated by the touched-op pull-forward; kneser_ney_bigram_score
-    # / tokenizer_fertility_stats fill R20's. The remaining 11
-    # displaced rows are past the round-20 horizon (r7 rows stand as
-    # final attestation).
 )
-
-_PRIORITY_R18 = (
-    # canaries — flagship + dedup + SQL, as every round
-    "flagship_revenue_by_nation",
-    "dedup_minhash_lsh",
-    "sql_api_revenue",
-    # round-7 rows (7) — the R17-displaced rows lead (displacement
-    # order), then the rest of the r7 era, registry order
-    "caliper_matching_att",
-    "dp_noisy_counts",
-    "neardup_adamic_adar",
-    "contamination_blast_radius",
-    "neardup_label_consistency",
-    "adamic_adar_verified_pairs",
-    "decontaminated_manifest",
-    # round-8 rows (40) — the oldest r8 block, registry order
-    # (semdedup_keep_list yielded in the r15 cascade,
-    # neardup_pair_explain in the r16 cascade — see the tail comment)
-    "median_two_pass_exact",
-    "array_set_ops",
-    "try_arithmetic_funcs",
-    "collated_group_count",
-    "sliding_window_1h_30m",
-    "daily_rollup",
-    "sequence_islands",
-    "funnel_conversion",
-    "retention_cohorts",
-    "concurrency_duration_profile",
-    "session_window_dynamic_gap",
-    "ts_decompose_daily",
-    "twap_daily_value",
-    "markov_3step_purchase",
-    "markov_conditional_entropy",
-    "theil_sen_daily_slope",
-    "seasonal_strength_daily",
-    "conformal_daily_interval",
-    "attribution_models_compare",
-    "asof_join_forward",
-    "asof_join_nearest",
-    "corr_matrix",
-    "impute_mean",
-    "confusion_matrix",
-    "feature_minmax_scale",
-    "groupwise_ols_slope",
-    "chi_square_lang_source",
-    "gini_per_nation",
-    "spearman_per_nation",
-    "doc_fingerprint",
-    "dedup_cluster_size_hist",
-    "dedup_keep_longest",
-    "source_overlap_matrix",
-    "co_supplier_pairs",
-    "minhash_banding_curve",
-    "neardup_degree_hist",
-    "dedup_prefix_filter_jaccard",
-    "dedup_cluster_pointer_doubling",
-    "dedup_cluster_best_quality",
-    "cluster_lang_purity",
-    # semdedup_keep_list, the youngest r8 row by registry order,
-    # yielded its slot to the R17-displaced caliper_matching_att and
-    # leads R19's r8 block; neardup_pair_explain, the next-youngest,
-    # yielded to the R17-displaced dp_noisy_counts and follows
-    # semdedup in R19's r8 block
-)
-
-_PRIORITY_R19 = (
-    # canaries — flagship + dedup + SQL, as every round
-    "flagship_revenue_by_nation",
-    "dedup_minhash_lsh",
-    "sql_api_revenue",
-    # round-5 rows (2) — displaced from R15's tail by the R14
-    # amendment (oldest driver rows, so they lead)
-    "tpch_q2_min_cost_supplier",
-    "tpch_q7_volume_shipping",
-    # round-8 rows (4) — the R18-displaced rows lead (displacement
-    # order), then the rest of the r8 era. semdedup_keep_list was
-    # pulled forward into R17 by the touched-op amendment; the
-    # R17-displaced token_budget_selection takes its slot.
-    "token_budget_selection",
-    "neardup_pair_explain",
-    "ccnet_perplexity_split",
-    "hashed_linear_quality_score",
-    # round-9 rows (41) — the oldest r9 block, registry order
-    # (quality_classifier_gd_step yielded, see the tail comment)
-    "tpch_q1_pricing_summary",
-    "local_clustering_coefficient",
-    "degree_assortativity",
-    "dedup_normalized_text",
-    "dedup_incremental_minhash",
-    "ann_lsh_cosine",
-    "embedding_dim_stats",
-    "int8_quantize_embeddings",
-    "density_core_points",
-    "embedding_dbscan_clusters",
-    "hard_negatives_topk",
-    "centroid_outlier_scores",
-    "label_centroid_similarity",
-    "embedding_covariance",
-    "ann_recall_report",
-    "matryoshka_prefix_recall",
-    "retrieval_metrics_at_k",
-    "nearest_centroid_confusion",
-    # pca_power_iteration_step / tfidf_top_terms pulled forward into
-    # R17 by the touched-op amendment; R17-displaced rows take their
-    # slots (displacement order)
-    "dsir_importance_weights",
-    "benchmark_embedding_contamination",
-    "bpe_train_merges",
-    "top_tokens",
-    "bm25_scores",
-    "token_cooccurrence_pmi",
-    "source_quality_report",
-    "dup_chunk_fraction",
-    "unigram_logprob_score",
-    "padding_waste_stats",
-    "vocab_growth_curve",
-    "rebalance_sample_plan",
-    "lang_id_confusion",
-    "inverted_index_build",
-    "source_mixing_weights",
-    "zipf_fit",
-    "top_tokens_by_lang",
-    "heavy_hitters_tokens",
-    "global_shuffle_row_number",
-    "bpe_encode_corpus",
-    "gopher_quality_flags",
-    "epoch_allocation_plan",
-    # ngram_novelty_score pulled forward into R17 by the touched-op
-    # amendment; the R17-displaced phrase_search_positional takes
-    # its slot
-    "phrase_search_positional",
-    # minhash_jaccard_calibration, the lone r10 row staged here in
-    # r14, yielded its slot to the R18-displaced semdedup_keep_list
-    # and leads R20's r10 block; quality_classifier_gd_step, the
-    # youngest r9 row by registry order, yielded to the R18-displaced
-    # neardup_pair_explain and precedes minhash in R20
-)
-
-_PRIORITY_R20 = (
-    # canaries — flagship + dedup + SQL, as every round
-    "flagship_revenue_by_nation",
-    "dedup_minhash_lsh",
-    "sql_api_revenue",
-    # round-5 rows (4) — displaced from R15's tail by the round-14
-    # consumer additions (oldest driver rows, so they lead)
-    "linear_counting_distinct",
-    "string_agg_per_group",
-    "group_topk_percent",
-    "weighted_bernoulli_sample",
-    # round-9 row (1) — displaced from R19 by the r16 cascade (older
-    # era than the r10 block, so it precedes it)
-    "quality_classifier_gd_step",
-    # round-10 rows (42) — the R19-displaced row leads, then the
-    # oldest r10 block, registry order (stream_tumbling_counts
-    # yielded, see the tail comment)
-    "minhash_jaccard_calibration",
-    # semdedup_threshold_sweep pulled forward into R17 by the
-    # touched-op amendment; the R17-displaced kneser_ney_bigram_score
-    # takes its slot
-    "kneser_ney_bigram_score",
-    "token_entropy_per_doc",
-    "chunk_sliding_windows",
-    "psi_source_drift",
-    "bigram_logprob_score",
-    "calibration_curve_langid",
-    "count_min_estimates",
-    "mutual_info_lang_source",
-    "token_coverage_curve",
-    "sentiment_lexicon_score",
-    "chunk_containment_pairs",
-    "gains_chart_langid",
-    "distinctive_tokens_per_source",
-    "pack_windows_concat",
-    "lang_sampling_temperature",
-    "token_frequency_spectrum",
-    "js_divergence_sources",
-    "intra_doc_halves_divergence",
-    "rrf_fusion_topk",
-    "mmr_diversified_topk",
-    "ece_langid",
-    "hits_containment_step",
-    "rbo_rankings",
-    "flesch_proxy_readability",
-    "filter_cascade_report",
-    "curation_funnel_report",
-    "context_length_waste_curve",
-    "ema_per_user",
-    "arrow_doc_meta",
-    "udtf_ngrams_polymorphic",
-    "arrow_scalar_udf_margin",
-    "apply_in_arrow_center",
-    "grouping_sets",
-    "salted_group_agg",
-    "join_salted_skew",
-    "recursive_cte_hierarchy",
-    "sql_scripting_above_avg",
-    "sql_parameterized_query",
-    "quality_classifier_gd_convergence",
-    # quality_classifier_trained_scores pulled forward into R17 by
-    # the touched-op amendment; the R17-displaced
-    # tokenizer_fertility_stats takes its slot
-    "tokenizer_fertility_stats",
-    "quality_filter_agreement",
-    # stream_gopher_gate, the youngest r10 row by registry order,
-    # yielded its slot to linear_counting_distinct and falls past the
-    # rotation horizon (round 20 is the final window) — its r10 driver
-    # row remains its final attestation; stream_session_windows, the
-    # next-youngest, yielded to the R19-displaced
-    # minhash_jaccard_calibration in the round-15 cascade and likewise
-    # keeps its r10 row as final attestation; stream_tumbling_counts,
-    # the next-youngest after that, yielded to the R19-displaced
-    # quality_classifier_gd_step in the round-16 cascade — same
-    # past-the-horizon outcome, its r10 driver row stands
-)
-
-_PRIORITY = _PRIORITY_R17
 
 
 def all_ops() -> dict[str, Op]:

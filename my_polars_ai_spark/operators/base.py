@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import functools
 import inspect
+import os
+import stat
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -105,17 +107,41 @@ def make_registrar(ops: dict[str, Op]):
 
 
 # Every @session_memo wrapper, in definition order (the memo tests
-# enumerate it), and the dependency lists of the fills in progress,
-# innermost last.
+# enumerate it), and the entries whose fills are in progress, innermost
+# last.
 SESSION_MEMOS: list = []
 _FILLING: list = []
 
 
 @dataclass(eq=False)
 class _MemoEntry:
-    value: object
-    cached: tuple  # the frames the fill .cache()d
-    deps: list  # the entries of the memos the fill called
+    value: object = None
+    cached: tuple = ()  # the frames the fill .cache()d
+    deps: list = field(default_factory=list)  # the entries of the memos the fill called
+    files: dict = field(default_factory=dict)  # path -> stamp of every table file the fill read
+
+
+def _file_stamp(path: str) -> tuple | None:
+    """``(mtime_ns, size)`` of a table file; for a table directory, the
+    sorted ``(name, mtime_ns, size)`` of its entries. ``None`` when the
+    path is not a local file or directory (a remote URI, a missing
+    table)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return st.st_mtime_ns, st.st_size
+        with os.scandir(path) as it:
+            stats = [(e.name, e.stat()) for e in it]
+    except OSError:
+        return None
+    return tuple(sorted((n, s.st_mtime_ns, s.st_size) for n, s in stats))
+
+
+def record_read(path: str) -> None:
+    """Stamp a table file the memo fill in progress reads (a no-op
+    outside a fill)."""
+    if _FILLING:
+        _FILLING[-1].files[path] = _file_stamp(path)
 
 
 def session_memo(build):
@@ -127,6 +153,15 @@ def session_memo(build):
     resolves the SAME DataFrames and shares their cache fills (a fresh
     build would ``.cache()`` brand-new lineage objects whose fills are
     never reused). Each call first evicts entries of stopped sessions.
+
+    An entry also answers for the table files its fill read through
+    ``load_table``, directly or through the memos it called: a hit
+    re-stamps them (one ``os.stat`` each, no job), and a changed stamp
+    drops the entry, unpersists its cached frames and refills. The
+    unpersist is what makes the refill fresh: Spark's CacheManager
+    matches plans over the same path, so a left-behind entry would
+    serve the old file's rows to the new frames. A file that cannot be
+    stamped never matches, so its readers refill on every call.
 
     A hit re-arms the ``.cache()`` marks of the entry and, first, of
     every memo its fill called: an external
@@ -143,7 +178,7 @@ def session_memo(build):
     marks, directly or through their own dependencies. An entry with
     neither (a table handle from ``load_table``) has nothing to re-arm,
     and recording it would tie every memo that reads a table to that
-    handle."""
+    handle; its files are recorded instead."""
     sig = inspect.signature(build)
     entries: dict = {}
 
@@ -154,22 +189,35 @@ def session_memo(build):
         key = tuple(bound.arguments.values())
         _evict_stopped_sessions(entries)
         entry = entries.get(key)
+        if entry is not None and _stale(entry):
+            del entries[key]
+            for f in entry.cached:
+                f.unpersist()
+            entry = None
         if entry is None:
-            _FILLING.append([])
+            entry = _MemoEntry()
+            _FILLING.append(entry)
             try:
-                value, cached = build(*args, **kwargs)
+                entry.value, entry.cached = build(*args, **kwargs)
             finally:
-                deps = _FILLING.pop()
-            entry = entries[key] = _MemoEntry(value, cached, deps)
+                _FILLING.pop()
+            entries[key] = entry
         else:
             _rearm(entry)
-        if _FILLING and (entry.cached or entry.deps) and entry not in _FILLING[-1]:
-            _FILLING[-1].append(entry)
+        if _FILLING:
+            outer = _FILLING[-1]
+            outer.files.update(entry.files)
+            if (entry.cached or entry.deps) and entry not in outer.deps:
+                outer.deps.append(entry)
         return entry.value
 
     memo.entries = entries
     SESSION_MEMOS.append(memo)
     return memo
+
+
+def _stale(entry: _MemoEntry) -> bool:
+    return any(stamp is None or _file_stamp(path) != stamp for path, stamp in entry.files.items())
 
 
 def _rearm(entry: _MemoEntry) -> None:

@@ -12,12 +12,9 @@ against them should broadcast, never shuffle the fact side.
 
 from __future__ import annotations
 
-import os
-import stat
-
 from pyspark.sql import DataFrame, SparkSession
 
-from my_polars_ai_spark.operators.base import session_memo
+from my_polars_ai_spark.operators.base import record_read, session_memo
 
 TABLES = (
     "region",
@@ -65,42 +62,28 @@ def scan_partitions(df: DataFrame) -> int | None:
         return None
 
 
-def _file_stamp(path: str) -> tuple | None:
-    """``(mtime_ns, size)`` of a table file; for a table directory, the
-    sorted ``(name, mtime_ns, size)`` of its entries. ``None`` when the
-    path is not a local file or directory (a remote URI, a missing
-    table)."""
-    try:
-        st = os.stat(path)
-        if not stat.S_ISDIR(st.st_mode):
-            return st.st_mtime_ns, st.st_size
-        with os.scandir(path) as it:
-            stats = [(e.name, e.stat()) for e in it]
-    except OSError:
-        return None
-    return tuple(sorted((n, s.st_mtime_ns, s.st_size) for n, s in stats))
-
-
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     return normalize_events_ts(df) if name == "events" else df
 
 
 @session_memo
-def _table_handle(spark: SparkSession, sf_dir: str, name: str, stamp: tuple):
-    """One read per (session, sf_dir, table, file stamp): the listing
-    and the footer schema inference run once, not on every op build."""
+def _table_handle(spark: SparkSession, sf_dir: str, name: str):
+    """One read per (session, sf_dir, table) while the file stamp holds:
+    the listing and the footer schema inference run once, not on every
+    op build."""
+    record_read(f"{sf_dir}/{name}.parquet")
     return _read(spark, sf_dir, name), ()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     """Read one corpus table.
 
-    The read is a session memo keyed on the file stamp of
-    ``<sf_dir>/<name>.parquet``: its ``(mtime_ns, size)``, or for a
-    directory the ``(name, mtime_ns, size)`` of every entry. While the
-    stamp holds, every call in a session returns the SAME DataFrame
-    with no listing and no schema-inference job (~95 ms per read at
+    The read is a session memo checked against the file stamp of
+    ``<sf_dir>/<name>.parquet`` (``base.record_read``): its
+    ``(mtime_ns, size)``, or for a directory the ``(name, mtime_ns,
+    size)`` of every entry. While the stamp holds, every call in a
+    session returns the SAME DataFrame with no listing and no schema-inference job (~95 ms per read at
     sf0.1 on 4 cores); a rewritten or extended table gets a fresh read,
     and the superseded handle is dropped. A path that cannot be stamped
     (a remote URI, a missing table) is read on every call. The session
@@ -132,14 +115,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
         # DuckDB oracle see identical UTC wall-times. Runtime conf so it
         # works under any caller-provided session.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stamp = _file_stamp(f"{sf_dir}/{name}.parquet")
-    if stamp is None:
-        df = _read(spark, sf_dir, name)
-    else:
-        superseded = [k for k in _table_handle.entries if k[:3] == (spark, sf_dir, name) and k[3] != stamp]
-        for key in superseded:
-            del _table_handle.entries[key]
-        df = _table_handle(spark, sf_dir, name, stamp)
+    df = _table_handle(spark, sf_dir, name)
     if spread and (parts := scan_partitions(df)) is not None:
         target = spark.sparkContext.defaultParallelism
         if parts < target:

@@ -572,8 +572,6 @@ def test_enforce_privacy_redacts_conversational_and_retry_prompts(spark, fruits)
     llm = RecordingLLM(queue=[bad, good, "the sum is some number"])
     ai = SparkAI(llm=llm, enforce_privacy=True, enable_cache=False, conversational=True)
     ai.run(fruits, "sum of A?")
-    # the rewrite calls predict() directly, so llm.last_prompt is the
-    # correction prompt; read each prompt from the record instead
     _, retry, rewrite = prompts
     assert "nonexistent_fn" in retry  # it is the correction prompt
     assert "withheld for privacy" in retry
@@ -583,6 +581,19 @@ def test_enforce_privacy_redacts_conversational_and_retry_prompts(spark, fruits)
     assert rewrite.lstrip().startswith("Question: sum of A?")
     assert "withheld for privacy" in rewrite  # answer value redacted
     assert "15" not in rewrite
+
+
+def test_last_prompt_is_the_conversational_rewrite(spark, fruits):
+    # every prompt goes through LLM.ask, so after a conversational run
+    # last_prompt is the rewrite prompt, the last one sent
+    good = "<startCode>\ndf.agg(F.sum('A')).collect()[0][0]\n<endCode>"
+    for private in (False, True):
+        llm = FakeLLM(queue=[good, "the sum is some number"])
+        ai = SparkAI(llm=llm, enforce_privacy=private, enable_cache=False, conversational=True)
+        ai.run(fruits, "sum of A?")
+        assert llm.last_prompt.lstrip().startswith("Question: sum of A?")
+        assert ("15" in llm.last_prompt) is not private
+        assert ("withheld for privacy" in llm.last_prompt) is private
 
 
 def test_retry_prompt_redacts_error_under_privacy(spark, fruits):

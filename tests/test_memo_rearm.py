@@ -14,12 +14,12 @@ evicted so they cannot pin JVM-backed frames forever.
 from __future__ import annotations
 
 import inspect
+import os
+import shutil
 
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from my_polars_ai_spark.sources.tables import _file_stamp
 
 
 def _memos() -> list:
@@ -43,7 +43,7 @@ _UPSTREAM = {
 
 # memo -> its params after (spark, sf_dir), for memos that take any
 _PARAMS = {
-    "tables._table_handle": lambda sf_dir: ("nation", _file_stamp(f"{sf_dir}/nation.parquet")),
+    "tables._table_handle": lambda sf_dir: ("nation",),
 }
 
 # memos whose fill caches nothing: a table handle is a plain read
@@ -142,6 +142,44 @@ def test_qgd_memo_rearms_after_clearcache(spark, sf_dir):
     x2, y2 = classic_ml._qgd_xy(spark, sf_dir)
     assert x2 is x and y2 is y
     assert x.count() == n_x
+
+
+def test_memo_refills_after_a_table_is_rewritten(spark, sf_dir, tmp_path, jobs_started):
+    """A memo answers for the table files its fill read through
+    load_table: once embeddings.parquet is rewritten, the next call of
+    _pca_v1 drops its entry, unpersists the old frame and refills, so
+    the op matches DuckDB on the new file. A hit on unchanged files
+    starts no job."""
+    import pyarrow.parquet as pq
+
+    from my_polars_ai_spark.operators import all_ops
+    from my_polars_ai_spark.operators.similarity import _pca_v1
+    from my_polars_ai_spark.plans import oracle
+
+    for name in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, name), tmp_path / name)
+    sf = str(tmp_path)
+    op = all_ops()["pca_power_iteration_step"]
+
+    def issues() -> list:
+        cur = oracle.connect(sf).execute(op.oracle)
+        return oracle.compare(op.fn(spark, sf), cur.fetchall(), [d[0] for d in cur.description])
+
+    assert issues() == []
+    old = _pca_v1(spark, sf)
+    n_cached = _cache_entry_count(spark)
+    path = tmp_path / "embeddings.parquet"
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows // 2), path)
+
+    # the refill's plan equals the old one's (same path), so a cache
+    # entry left behind would serve the old rows to the new frame
+    assert issues() == []
+    new = _pca_v1(spark, sf)
+    assert new is not old and _cache_entry_count(spark) == n_cached
+    assert [k for k in _pca_v1.entries if k[1] == sf] == [(spark, sf)]
+    assert jobs_started(lambda: _pca_v1(spark, sf)) == 0
+    assert _pca_v1(spark, sf) is new and _is_registered(new)
 
 
 class _DeadContext:

@@ -9,7 +9,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import re
 
 import duckdb
 import pytest
@@ -43,18 +42,12 @@ def test_all_ops_raises_on_unimportable_module(monkeypatch):
 
 def test_registry_prefix_window_matches_rotation_contract():
     """The driver's CORRECTNESS gate verifies a 50-entry prefix of the
-    registry. Since the r3 rotation, the window is _PRIORITY verbatim:
-    one green canary per LLM-data-pipeline family plus the ops being
-    driver-attested for the first time this round."""
-    from my_polars_ai_spark.operators import _PRIORITY, _PRIORITY_R17
+    registry: _PRIORITY verbatim, family canaries included."""
+    from my_polars_ai_spark.operators import _PRIORITY
 
     ordered = list(all_ops())
     assert ordered[: len(_PRIORITY)] == list(_PRIORITY)
-    assert _PRIORITY == _PRIORITY_R17  # round-17 rotation is live
     window = set(ordered[:50])
-    # R11 canaries: trimmed to 3 per the r8 verdict (flagship + dedup
-    # + SQL) while the first-attestation backlog clears; the other
-    # families have >=2 consecutive driver-green rows.
     canaries = {
         "flagship_revenue_by_nation",       # joins / flagship
         "dedup_minhash_lsh",                # dedup family
@@ -64,55 +57,38 @@ def test_registry_prefix_window_matches_rotation_contract():
     assert not missing, f"family canaries outside driver window: {sorted(missing)}"
 
 
-_WINDOWS = sorted(
-    (a for a in dir(registry) if re.fullmatch(r"_PRIORITY_R\d+", a)),
-    key=lambda a: int(a.removeprefix("_PRIORITY_R")),
-)
 _CANARIES = ("flagship_revenue_by_nation", "dedup_minhash_lsh", "sql_api_revenue")
-# The block a window must open with, right after the canaries: the ops
-# whose plans were rewritten after their last oracle row (R17), then the
-# oldest oracle rows (R19, R20).
-_LEADS = {
-    "_PRIORITY_R17": (
-        "repeated_span_stats",
-        "repeated_span_excision",
-        "ngram_novelty_score",
-        "tfidf_top_terms",
-        "winnowing_fingerprint_overlap",
-        "domain_excess_loss_weights",
-        "doremi_sampling_manifest",
-        "quality_classifier_trained_scores",
-        "qgd_weights_manifest",
-        "item_item_cf_topk",
-        "semdedup_keep_list",
-        "semdedup_threshold_sweep",
-        "contrastive_triplet_mining",
-        "triplet_export_manifest",
-        "pca_power_iteration_step",
-        "pq_adc_topk",
-        "audio_frame_features",
-        "audio_vad_segments",
-        "audio_vad_chunks",
-        "audio_chunk_export_manifest",
-    ),
-    "_PRIORITY_R19": ("tpch_q2_min_cost_supplier", "tpch_q7_volume_shipping"),
-    "_PRIORITY_R20": (
-        "linear_counting_distinct",
-        "string_agg_per_group",
-        "group_topk_percent",
-        "weighted_bernoulli_sample",
-    ),
-}
+# The block _PRIORITY opens with, right after the canaries: the ops
+# whose plans were rewritten after their last oracle row.
+_LEAD = (
+    "repeated_span_stats",
+    "repeated_span_excision",
+    "ngram_novelty_score",
+    "tfidf_top_terms",
+    "winnowing_fingerprint_overlap",
+    "domain_excess_loss_weights",
+    "doremi_sampling_manifest",
+    "quality_classifier_trained_scores",
+    "qgd_weights_manifest",
+    "item_item_cf_topk",
+    "semdedup_keep_list",
+    "semdedup_threshold_sweep",
+    "contrastive_triplet_mining",
+    "triplet_export_manifest",
+    "pca_power_iteration_step",
+    "pq_adc_topk",
+    "audio_frame_features",
+    "audio_vad_segments",
+    "audio_vad_chunks",
+    "audio_chunk_export_manifest",
+)
 
 
-@pytest.mark.parametrize("window", _WINDOWS)
-def test_priority_window_is_valid(window):
-    """Every _PRIORITY_R<n> window is a ready one-line flip of _PRIORITY:
-    50 registered names, no duplicates, each with an oracle row in some
-    CORRECTNESS file, the three canaries first, and a [3:] tail that
-    shares no name with another window's (rotating a row twice would
-    waste a slot)."""
-    names = getattr(registry, window)
+def test_priority_is_valid():
+    """_PRIORITY is 50 registered names, no duplicates, each with an
+    oracle row in some CORRECTNESS file, the canaries then the lead
+    block first."""
+    names = registry._PRIORITY
     ops = all_ops()
     assert len(names) == 50
     assert len(set(names)) == 50
@@ -125,16 +101,7 @@ def test_priority_window_is_valid(window):
             attested.update(json.load(fh))
     never = [n for n in names if n not in attested]
     assert not never, never
-    lead = _LEADS.get(window, ())
-    assert names[: 3 + len(lead)] == _CANARIES + lead
-    for other in _WINDOWS:
-        if other != window:
-            overlap = set(names[3:]) & set(getattr(registry, other)[3:])
-            assert not overlap, (other, sorted(overlap))
-    if window == "_PRIORITY_R19":
-        # natural r9 rows whose rewritten plans were re-attested early
-        assert "ivf_cosine_topk" not in names
-        assert "pq_distortion_report" not in names
+    assert names[: 3 + len(_LEAD)] == _CANARIES + _LEAD
 
 
 def test_portable_hash60_matches_duckdb(spark):

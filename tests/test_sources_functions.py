@@ -326,8 +326,8 @@ def test_load_table_reuses_one_handle_per_session(spark, tmp_path, jobs_started)
 
 
 def test_load_table_rereads_a_rewritten_or_extended_table(spark, tmp_path):
-    """The handle is keyed on the file stamp: an overwritten file and a
-    directory table with a new part file each get a fresh read."""
+    """The handle is checked against the file stamp: an overwritten file
+    and a directory table with a new part file each get a fresh read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

@@ -15,7 +15,7 @@ not depend on get_spark's confs (UTC timezone and the events-nanos
 handling live inside load_table; this flag proves it per-op).
 
 ``--window`` restricts the run to the driver's 50-op CORRECTNESS
-prefix (the live _PRIORITY window). Combine both before merging a change:
+prefix (``operators._PRIORITY``). Combine both before merging a change:
 ``--vanilla --window /root/testdata/sf0.01`` is the closest local
 mirror of what the driver will actually execute.
 """
