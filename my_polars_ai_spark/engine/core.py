@@ -191,6 +191,20 @@ class SparkAI(Shortcuts):
             parts.append(f"Dataframe df{i}, with {num_rows} rows and {num_cols} columns.\nMetadata (first rows):\n{head}")
         return "\n\n".join(parts)
 
+    def _frames_prompt(self, dfs: list[DataFrame], single: tuple, multiple: tuple, **fields):
+        """The ``(override key, prompt class)`` prompt for ``dfs``:
+        ``single`` with the one frame's head and shape, else
+        ``multiple`` with every frame rendered. A user override of the
+        key wins."""
+        if len(dfs) == 1:
+            key, prompt_cls = single
+            head, num_rows, num_cols = self._frame_metadata(dfs[0])
+            fields.update(df_head=head, num_rows=num_rows, num_columns=num_cols)
+        else:
+            key, prompt_cls = multiple
+            fields["dataframes"] = self._render_frames(dfs)
+        return self._prompt_overrides.get(key, prompt_cls(**fields, today_date=date.today()))
+
     # -- run record ----------------------------------------------------------
 
     @property
@@ -283,27 +297,12 @@ class SparkAI(Shortcuts):
                     rec.cache_hit = cached is not None
                 code = cached
                 if code is None:
-                    if len(dfs) == 1:
-                        head, num_rows, num_cols = self._frame_metadata(dfs[0])
-                        instruction = self._prompt_overrides.get(
-                            "generate_python_code",
-                            GeneratePySparkCodePrompt(
-                                prompt=prompt,
-                                df_head=head,
-                                num_rows=num_rows,
-                                num_columns=num_cols,
-                                today_date=date.today(),
-                            ),
-                        )
-                    else:
-                        instruction = self._prompt_overrides.get(
-                            "multiple_dataframes",
-                            MultipleDataFramesPrompt(
-                                prompt=prompt,
-                                dataframes=self._render_frames(dfs),
-                                today_date=date.today(),
-                            ),
-                        )
+                    instruction = self._frames_prompt(
+                        dfs,
+                        ("generate_python_code", GeneratePySparkCodePrompt),
+                        ("multiple_dataframes", MultipleDataFramesPrompt),
+                        prompt=prompt,
+                    )
                     with self._phase("llm"):
                         code = self._llm.generate_code(instruction, prompt)
                 self.last_code_generated = code
@@ -416,31 +415,14 @@ class SparkAI(Shortcuts):
         polarsai/__init__.py:452-488)."""
         self.log(f"Failed with error: {type(exc).__name__}. Retrying")
         err = self._format_error(exc)
-        if len(dfs) == 1:
-            head, num_rows, num_cols = self._frame_metadata(dfs[0])
-            instruction = self._prompt_overrides.get(
-                "correct_error",
-                CorrectErrorPrompt(
-                    code=code,
-                    error_returned=err,
-                    question=question,
-                    df_head=head,
-                    num_rows=num_rows,
-                    num_columns=num_cols,
-                    today_date=date.today(),
-                ),
-            )
-        else:
-            instruction = self._prompt_overrides.get(
-                "correct_multiple_dataframes_error",
-                CorrectMultipleDataFramesErrorPrompt(
-                    code=code,
-                    error_returned=err,
-                    question=question,
-                    dataframes=self._render_frames(dfs),
-                    today_date=date.today(),
-                ),
-            )
+        instruction = self._frames_prompt(
+            dfs,
+            ("correct_error", CorrectErrorPrompt),
+            ("correct_multiple_dataframes_error", CorrectMultipleDataFramesErrorPrompt),
+            code=code,
+            error_returned=err,
+            question=question,
+        )
         with self._phase("llm"):
             return self._llm.generate_code(instruction, "")
 

@@ -41,26 +41,45 @@ def asof_join_backward(
     Right-side ties on ``on`` are resolved to the row that sorts last
     (callers wanting full determinism should pre-dedupe the right side).
     """
+    # Right rows sort before left rows at equal timestamps => inclusive match.
+    return _asof_carry(
+        left, right, on, by, value_cols,
+        F.col("__side").asc(), (Window.unboundedPreceding, 0), F.last,
+    )
+
+
+def _asof_carry(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    by: str,
+    value_cols: list[str],
+    side_order: Column,
+    frame: tuple[int, int],
+    pick,
+) -> DataFrame:
+    """The union trick behind both as-of joins: union the left rows
+    (``__side`` 1) with the right rows (``__side`` 0), carry each value
+    column with ``pick`` (F.last / F.first, ignoring nulls) over the
+    ``by`` partition ordered by ``on`` then ``side_order`` within
+    ``frame``, and keep the left rows."""
     lcols = left.columns
     l = left.withColumn("__side", F.lit(1))
-    r = right.select(
-        by, on, *value_cols
-    ).withColumn("__side", F.lit(0))
+    r = right.select(by, on, *value_cols).withColumn("__side", F.lit(0))
     unioned = l.unionByName(r, allowMissingColumns=True)
-    # Right rows sort before left rows at equal timestamps => inclusive match.
     w = (
         Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), F.col("__side").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
+        .orderBy(F.col(on).asc(), side_order)
+        .rowsBetween(*frame)
     )
-    carried = [F.last(c, ignorenulls=True).over(w).alias(c) for c in value_cols]
+    carried = [pick(c, ignorenulls=True).over(w).alias(c) for c in value_cols]
     out = unioned.select(*lcols, F.col("__side"), *carried)
     return out.filter(F.col("__side") == 1).drop("__side")
 
 
-@op(
-    "asof_join_backward",
-    oracle=f"""
+# View events deduped per (user, ts) and the purchases: the oracle side
+# of _purchases_asof.
+_VIEWS_PURCHASES_CTES = """
     WITH views AS (
         SELECT user_id, ts AS view_ts, value AS view_value
         FROM (
@@ -70,7 +89,12 @@ def asof_join_backward(
         ) WHERE rn = 1
     ), purchases AS (
         SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    )
+    )"""
+
+
+@op(
+    "asof_join_backward",
+    oracle=f"""{_VIEWS_PURCHASES_CTES}
     SELECT p.event_id, p.user_id, p.ts,
            v.view_ts AS last_view_ts,
            round(v.view_value, {ROUND_WIN}) AS last_view_value
@@ -83,28 +107,7 @@ def asof_join_backward(
 def asof_join_purchases_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For every purchase, the user's most recent prior (or simultaneous)
     view — backward as-of join via the union trick."""
-    e = _t(spark, sf_dir, "events")
-    # Deduplicate right side per (user, ts) so ties are deterministic.
-    w_dedup = Window.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
-    views = (
-        e.filter(F.col("event_type") == "view")
-        .withColumn("rn", F.row_number().over(w_dedup))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("ts").alias("view_ts"),
-            F.round("value", ROUND_WIN).alias("last_view_value"),
-        )
-        .withColumn("ts", F.col("view_ts"))
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    joined = asof_join_backward(
-        purchases,
-        views.select("user_id", "ts", "view_ts", "last_view_value"),
-        on="ts",
-        by="user_id",
-        value_cols=["view_ts", "last_view_value"],
-    )
+    joined = _purchases_asof(spark, sf_dir, asof_join_backward, "last_view_value")
     return joined.select(
         "event_id",
         "user_id",
@@ -127,18 +130,10 @@ def asof_join_forward(
     mirrored: first(ignorenulls) over (current row, unbounded following),
     with left rows sorting before right rows at equal timestamps so the
     match stays inclusive."""
-    lcols = left.columns
-    l = left.withColumn("__side", F.lit(1))
-    r = right.select(by, on, *value_cols).withColumn("__side", F.lit(0))
-    unioned = l.unionByName(r, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(by)
-        .orderBy(F.col(on).asc(), F.col("__side").desc())
-        .rowsBetween(0, Window.unboundedFollowing)
+    return _asof_carry(
+        left, right, on, by, value_cols,
+        F.col("__side").desc(), (0, Window.unboundedFollowing), F.first,
     )
-    carried = [F.first(c, ignorenulls=True).over(w).alias(c) for c in value_cols]
-    out = unioned.select(*lcols, F.col("__side"), *carried)
-    return out.filter(F.col("__side") == 1).drop("__side")
 
 
 def _views_deduped(e: DataFrame, ts_alias: str, value_alias: str) -> DataFrame:
@@ -157,19 +152,25 @@ def _views_deduped(e: DataFrame, ts_alias: str, value_alias: str) -> DataFrame:
     )
 
 
+def _purchases_asof(spark: SparkSession, sf_dir: str, join, value_alias: str) -> DataFrame:
+    """Every purchase as-of ``join``ed to the deduped views: the
+    purchase columns plus view_ts and the rounded view value as
+    ``value_alias``."""
+    e = _t(spark, sf_dir, "events")
+    views = _views_deduped(e, "view_ts", value_alias)
+    purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
+    return join(
+        purchases,
+        views.select("user_id", "ts", "view_ts", value_alias),
+        on="ts",
+        by="user_id",
+        value_cols=["view_ts", value_alias],
+    )
+
+
 @op(
     "asof_join_forward",
-    oracle=f"""
-    WITH views AS (
-        SELECT user_id, ts AS view_ts, value AS view_value
-        FROM (
-            SELECT user_id, ts, value,
-                   row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-            FROM events WHERE event_type = 'view'
-        ) WHERE rn = 1
-    ), purchases AS (
-        SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    )
+    oracle=f"""{_VIEWS_PURCHASES_CTES}
     SELECT p.event_id, p.user_id, p.ts,
            v.view_ts AS next_view_ts,
            round(v.view_value, {ROUND_WIN}) AS next_view_value
@@ -182,16 +183,7 @@ def _views_deduped(e: DataFrame, ts_alias: str, value_alias: str) -> DataFrame:
 def asof_join_purchases_next_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For every purchase, the user's next view at-or-after it — forward
     as-of join (Polars strategy='forward')."""
-    e = _t(spark, sf_dir, "events")
-    views = _views_deduped(e, "view_ts", "next_view_value")
-    purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    joined = asof_join_forward(
-        purchases,
-        views.select("user_id", "ts", "view_ts", "next_view_value"),
-        on="ts",
-        by="user_id",
-        value_cols=["view_ts", "next_view_value"],
-    )
+    joined = _purchases_asof(spark, sf_dir, asof_join_forward, "next_view_value")
     return joined.select(
         "event_id", "user_id", "ts", F.col("view_ts").alias("next_view_ts"), "next_view_value"
     )
@@ -370,17 +362,7 @@ def interval_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "asof_join_tolerance",
-    oracle=f"""
-    WITH views AS (
-        SELECT user_id, ts AS view_ts, value AS view_value
-        FROM (
-            SELECT user_id, ts, value,
-                   row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-            FROM events WHERE event_type = 'view'
-        ) WHERE rn = 1
-    ), purchases AS (
-        SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    )
+    oracle=f"""{_VIEWS_PURCHASES_CTES}
     SELECT p.event_id, p.user_id, p.ts,
            CASE WHEN v.view_ts >= p.ts - INTERVAL 1 HOUR
                 THEN v.view_ts END AS last_view_ts,
@@ -401,18 +383,7 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the plain backward as-of carry — same single shuffle and
     bounded window state as `asof_join_backward`, plus one null-out
     projection; no extra join and no widened window frame."""
-    e = _t(spark, sf_dir, "events")
-    views = _views_deduped(e, "view_ts", "last_view_value")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    joined = asof_join_backward(
-        purchases,
-        views.select("user_id", "ts", "view_ts", "last_view_value"),
-        on="ts",
-        by="user_id",
-        value_cols=["view_ts", "last_view_value"],
-    )
+    joined = _purchases_asof(spark, sf_dir, asof_join_backward, "last_view_value")
     in_tol = F.col("view_ts") >= F.col("ts") - F.expr("INTERVAL 1 HOUR")
     return joined.select(
         "event_id",

@@ -2285,33 +2285,7 @@ def quality_classifier_gd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.filter("ts", lambda x: x.isin(*_EN_MARKERS))) >= 2,
         QGD_MICRO,
     ).otherwise(0)
-    p = F.least(
-        F.lit(QGD_MICRO).cast("bigint"),
-        F.greatest(
-            F.lit(0).cast("bigint"),
-            (
-                500000
-                + exact_floor_div(F.col("z_micro"), F.lit(4)).cast("bigint")
-            ).cast("bigint"),
-        ),
-    )
-    resid = (
-        base.select("doc_id", z.alias("z_micro"), y.alias("y_micro"))
-        .select("doc_id", p.alias("p_micro"), "y_micro")
-        .select(
-            "doc_id",
-            (F.col("p_micro") - F.col("y_micro")).cast("bigint").alias("r_micro"),
-            # exact MSE subgradient mask: the hard sigmoid's derivative
-            # is zero wherever the clamp is active
-            F.when(
-                (F.col("p_micro") > 0) & (F.col("p_micro") < QGD_MICRO),
-                F.col("p_micro") - F.col("y_micro"),
-            )
-            .otherwise(0)
-            .cast("bigint")
-            .alias("g_micro"),
-        )
-    )
+    resid = _qgd_residuals(base.select("doc_id", z.alias("z_micro"), y.alias("y_micro")))
 
     x = (
         base.select("doc_id", F.explode("ts").alias("tok"))
@@ -2414,7 +2388,9 @@ def _qgd_sql_steps(final_update: bool = False) -> str:
     return ",\n    ".join(parts)
 
 
-_QGD_CONV_SQL = f"""
+# The oracle side of _qgd_xy: token lists t, weak labels y and the
+# (doc, bucket, cnt) hashed feature table x.
+_QGD_XY_CTES = f"""
     WITH t AS (
         SELECT doc_id,
                list_filter(string_split(text, ' '), x -> x != '') AS ts
@@ -2430,7 +2406,9 @@ _QGD_CONV_SQL = f"""
         FROM t, LATERAL (SELECT unnest(ts) AS tok) u
         WHERE len(ts) > 0
         GROUP BY 1, 2
-    ),
+    )"""
+
+_QGD_CONV_SQL = f"""{_QGD_XY_CTES},
     {_qgd_sql_steps()}
     SELECT CAST(step AS INT) AS step, n_docs,
            {oracle_ratio_round("sse", f"n_docs * CAST({QGD_MICRO} AS HUGEINT) * {QGD_MICRO}")}
@@ -2460,22 +2438,10 @@ def quality_classifier_gd_convergence(spark: SparkSession, sf_dir: str) -> DataF
     32-row gradient aggregate — the corpus is scanned ONCE (the
     (doc,bucket,cnt) table feeds every step); no driver loop, no
     collect; 3 rows out."""
-    from my_polars_ai_spark.operators.dedup import portable_hash60
-
     # the shared memoized corpus tables — the trainer and this report
     # resolve the SAME cached x/y frames in a long-lived session
     x, y = _qgd_xy(spark, sf_dir)
-    spine = spark.range(QGD_DIM).select(F.col("id").cast("bigint").alias("b"))
-    w = spine.select(
-        "b",
-        (
-            portable_hash60(F.concat(F.lit("w8:"), F.col("b").cast("string")))
-            % QGD_W0_SPAN
-            - 100000
-        )
-        .cast("bigint")
-        .alias("w"),
-    )
+    w = _qgd_w0(spark)
     # n_docs is step-invariant (z inner-join y covers exactly the
     # non-empty docs every step) — the weight update uses this hoisted
     # 1-row aggregate; the per-step loss row still counts r itself
@@ -2487,33 +2453,7 @@ def quality_classifier_gd_convergence(spark: SparkSession, sf_dir: str) -> DataF
             .groupBy("doc_id")
             .agg(F.sum(F.col("cnt") * F.col("w")).cast("bigint").alias("z_micro"))
         )
-        p = F.least(
-            F.lit(QGD_MICRO).cast("bigint"),
-            F.greatest(
-                F.lit(0).cast("bigint"),
-                (
-                    500000
-                    + exact_floor_div(F.col("z_micro"), F.lit(4)).cast("bigint")
-                ).cast("bigint"),
-            ),
-        )
-        r = (
-            z.join(y, "doc_id")
-            .select("doc_id", p.alias("p_micro"), "y_micro")
-            .select(
-                "doc_id",
-                (F.col("p_micro") - F.col("y_micro"))
-                .cast("bigint")
-                .alias("r_micro"),
-                F.when(
-                    (F.col("p_micro") > 0) & (F.col("p_micro") < QGD_MICRO),
-                    F.col("p_micro") - F.col("y_micro"),
-                )
-                .otherwise(0)
-                .cast("bigint")
-                .alias("g_micro"),
-            )
-        )
+        r = _qgd_residuals(z.join(y, "doc_id"))
         loss_frames.append(
             r.agg(
                 F.lit(k).cast("int").alias("step"),
@@ -2533,21 +2473,7 @@ def quality_classifier_gd_convergence(spark: SparkSession, sf_dir: str) -> DataF
                     .alias("grad")
                 )
             )
-            w = (
-                w.join(g, "b", "left")
-                .crossJoin(F.broadcast(n))
-                .select(
-                    "b",
-                    (
-                        F.col("w")
-                        - signed_ratio_round(
-                            F.coalesce(F.col("grad"), F.lit(0)),
-                            2 * QGD_LR_DEN * F.col("n_docs"),
-                            0,
-                        ).cast("bigint")
-                    ).alias("w"),
-                )
-            )
+            w = _qgd_update(w, g, n)
     out = loss_frames[0]
     for lf in loss_frames[1:]:
         out = out.unionByName(lf)
@@ -2565,23 +2491,7 @@ def quality_classifier_gd_convergence(spark: SparkSession, sf_dir: str) -> DataF
 # score >= 0.5 (the activation's own midpoint — z >= 0).
 QGD_KEEP_MICRO = 500_000
 
-_QGD_TRAINED_SQL = f"""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x != '') AS ts
-        FROM documents
-    ), y AS (
-        SELECT doc_id,
-               CASE WHEN len(list_filter(ts, x -> x IN {_MARKERS_SQL})) >= 2
-                    THEN {QGD_MICRO} ELSE 0 END AS y_micro
-        FROM t WHERE len(ts) > 0
-    ), x AS (
-        SELECT doc_id, {_QGD_BUCKET.replace("tok", "u.tok")} AS b,
-               CAST(count(*) AS BIGINT) AS cnt
-        FROM t, LATERAL (SELECT unnest(ts) AS tok) u
-        WHERE len(ts) > 0
-        GROUP BY 1, 2
-    ),
+_QGD_TRAINED_SQL = f"""{_QGD_XY_CTES},
     {_qgd_sql_steps(final_update=True)},
     zf AS (
         SELECT x.doc_id, sum(x.cnt * w{QGD_STEPS}.w) AS z_micro
@@ -2666,20 +2576,8 @@ def qgd_train_artifacts(spark: SparkSession, sf_dir: str):
     twin (`stream_trained_classifier`) so the trainer has exactly ONE
     definition, and memoized so one session trains exactly once per
     sf_dir (deterministic plan — a rebuild would be identical)."""
-    from my_polars_ai_spark.operators.dedup import portable_hash60
-
     x, y = _qgd_xy(spark, sf_dir)
-    spine = spark.range(QGD_DIM).select(F.col("id").cast("bigint").alias("b"))
-    w = spine.select(
-        "b",
-        (
-            portable_hash60(F.concat(F.lit("w8:"), F.col("b").cast("string")))
-            % QGD_W0_SPAN
-            - 100000
-        )
-        .cast("bigint")
-        .alias("w"),
-    )
+    w = _qgd_w0(spark)
     # n_docs is step-invariant (z inner-join y covers exactly the
     # non-empty docs every step) — hoist it out of the unrolled loop
     # so no step pays a second doc-grain aggregate just for the count
@@ -2707,21 +2605,7 @@ def qgd_train_artifacts(spark: SparkSession, sf_dir: str):
             .groupBy("b")
             .agg(F.sum(F.col("cnt") * F.col("g_micro")).cast("bigint").alias("grad"))
         )
-        w = (
-            w.join(g, "b", "left")
-            .crossJoin(F.broadcast(n))
-            .select(
-                "b",
-                (
-                    F.col("w")
-                    - signed_ratio_round(
-                        F.coalesce(F.col("grad"), F.lit(0)),
-                        2 * QGD_LR_DEN * F.col("n_docs"),
-                        0,
-                    ).cast("bigint")
-                ).alias("w"),
-            )
-        )
+        w = _qgd_update(w, g, n)
     # cache(): w is QGD_DIM (32) rows, but its lineage is the FULL
     # unrolled GD chain — uncached, every consumer action (each bench
     # iteration of the scorer, every streaming micro-batch broadcast)
@@ -2732,6 +2616,61 @@ def qgd_train_artifacts(spark: SparkSession, sf_dir: str):
     # the memo's re-arm like x/y.
     w = w.cache()
     return (x, y, w), (w,)
+
+
+def _qgd_w0(spark: SparkSession) -> DataFrame:
+    """The QGD_DIM-row md5-derived initial weight table (b, w)."""
+    from my_polars_ai_spark.operators.dedup import portable_hash60
+
+    spine = spark.range(QGD_DIM).select(F.col("id").cast("bigint").alias("b"))
+    return spine.select(
+        "b",
+        (
+            portable_hash60(F.concat(F.lit("w8:"), F.col("b").cast("string")))
+            % QGD_W0_SPAN
+            - 100000
+        )
+        .cast("bigint")
+        .alias("w"),
+    )
+
+
+def _qgd_update(w: DataFrame, g: DataFrame, n: DataFrame) -> DataFrame:
+    """One damped GD update: w - round_half_away(grad / (2 *
+    QGD_LR_DEN * n_docs)), a bucket with no gradient keeping its
+    weight."""
+    return (
+        w.join(g, "b", "left")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "b",
+            (
+                F.col("w")
+                - signed_ratio_round(
+                    F.coalesce(F.col("grad"), F.lit(0)),
+                    2 * QGD_LR_DEN * F.col("n_docs"),
+                    0,
+                ).cast("bigint")
+            ).alias("w"),
+        )
+    )
+
+
+def _qgd_residuals(zy: DataFrame) -> DataFrame:
+    """(doc_id, r_micro, g_micro) of a (doc_id, z_micro, y_micro) frame:
+    the residual p - y and the exact MSE subgradient, which is zero
+    wherever the hard sigmoid's clamp is active."""
+    return zy.select("doc_id", _qgd_p(F.col("z_micro")).alias("p_micro"), "y_micro").select(
+        "doc_id",
+        (F.col("p_micro") - F.col("y_micro")).cast("bigint").alias("r_micro"),
+        F.when(
+            (F.col("p_micro") > 0) & (F.col("p_micro") < QGD_MICRO),
+            F.col("p_micro") - F.col("y_micro"),
+        )
+        .otherwise(0)
+        .cast("bigint")
+        .alias("g_micro"),
+    )
 
 
 def _qgd_p(z):
@@ -2782,23 +2721,7 @@ def quality_classifier_trained_scores(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-_QGD_WEIGHTS_SQL = f"""
-    WITH t AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x != '') AS ts
-        FROM documents
-    ), y AS (
-        SELECT doc_id,
-               CASE WHEN len(list_filter(ts, x -> x IN {_MARKERS_SQL})) >= 2
-                    THEN {QGD_MICRO} ELSE 0 END AS y_micro
-        FROM t WHERE len(ts) > 0
-    ), x AS (
-        SELECT doc_id, {_QGD_BUCKET.replace("tok", "u.tok")} AS b,
-               CAST(count(*) AS BIGINT) AS cnt
-        FROM t, LATERAL (SELECT unnest(ts) AS tok) u
-        WHERE len(ts) > 0
-        GROUP BY 1, 2
-    ),
+_QGD_WEIGHTS_SQL = f"""{_QGD_XY_CTES},
     {_qgd_sql_steps(final_update=True)},
     model AS (
         SELECT md5(string_agg(

@@ -63,6 +63,71 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("tok") != "")
 
 
+def _minhash_sig(toks: DataFrame, n_perms: int, *extra_aggs: Column) -> DataFrame:
+    """Per-doc minima ``mh0..`` of ``n_perms`` md5 permutations over the
+    (doc_id, tok) pairs, plus the distinct-token count ``n`` and any
+    ``extra_aggs``.
+
+    Each DISTINCT token is hashed once per permutation, as n_perms WIDE
+    columns on a small vocab table (vocab << occurrences on any corpus),
+    broadcast-joined onto the (doc, token) pairs, and the per-column
+    mins are taken — the whole signature costs ONE shuffle of
+    |doc,token| rows instead of an exploded |doc,token| x perms shuffle.
+    `n` rides the SAME aggregation for free (toks is one row per doc and
+    distinct token), so a size-ratio prefilter never needs a
+    corpus-keyed sizes join."""
+    vocab_wide = toks.select("tok").distinct()
+    for i in range(n_perms):
+        vocab_wide = vocab_wide.withColumn(
+            f"h{i}", portable_hash60(F.concat(F.lit(f"{i}:"), F.col("tok")))
+        )
+    return (
+        toks.join(F.broadcast(vocab_wide), "tok")
+        .groupBy("doc_id")
+        .agg(
+            *[F.min(f"h{i}").alias(f"mh{i}") for i in range(n_perms)],
+            F.count(F.lit(1)).alias("n"),
+            *extra_aggs,
+        )
+    )
+
+
+def _band_structs(n_perms: int, n_bands: int) -> list[Column]:
+    """One ``(band, band_sig)`` struct per band: the md5 of the band's
+    comma-joined ``mh`` columns."""
+    rows_per_band = n_perms // n_bands
+    return [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    *[
+                        F.col(f"mh{i}").cast("string")
+                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
+                    ],
+                )
+            ).alias("band_sig"),
+        )
+        for b in range(n_bands)
+    ]
+
+
+def _band_rows(sig: DataFrame, n_perms: int, n_bands: int) -> DataFrame:
+    """Cached (doc_id, n, band, band_sig) rows of a _minhash_sig frame."""
+    band_structs = _band_structs(n_perms, n_bands)
+    return (
+        sig.select("doc_id", "n", F.explode(F.array(*band_structs)).alias("bs"))
+        .select(
+            "doc_id",
+            "n",
+            F.col("bs.band").alias("band"),
+            F.col("bs.band_sig").alias("band_sig"),
+        )
+        .cache()
+    )
+
+
 @op(
     "dedup_exact_text",
     oracle="""
@@ -126,9 +191,9 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", F.md5(normalized).alias("fingerprint"))
 
 
-@op(
-    "dedup_ngram_jaccard",
-    oracle=f"""
+# Word 3-gram shingles per doc, shingle-set sizes and the shared-shingle
+# count of every co-occurring pair.
+_SHINGLE_CTES = """
     WITH toks AS (
         SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ), sh AS (
@@ -143,7 +208,12 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ni
         FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    )
+    )"""
+
+
+@op(
+    "dedup_ngram_jaccard",
+    oracle=f"""{_SHINGLE_CTES}
     SELECT doc_a, doc_b,
            round(ni * 1.0 / (sa.n + sb.n - ni), {ROUND_RATIO}) AS jaccard
     FROM inter
@@ -192,20 +262,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The common MinHash/LSH candidate pipeline (tokens -> permutation
-# minima -> band signatures -> band-collision candidates -> size-ratio
-# prefilter -> exact-intersection counts), shared as ONE fragment so
-# every oracle that consumes the candidate structure
-# (_MINHASH_PAIRS_SQL below and _TRIPLET_SQL, which also needs the
-# verify stage's REJECTS) stays in lockstep with any future change to
-# the pipeline — they differ only in their final SELECTs.
-_MINHASH_CAND_CTES = f"""
+# The DuckDB twin of _doc_tokens: distinct (doc_id, tok) pairs.
+_TOKS_CTE = """
     WITH toks AS (
         SELECT DISTINCT doc_id, tok FROM (
             SELECT doc_id, unnest(string_split(text, ' ')) AS tok
             FROM documents
         ) WHERE tok <> ''
-    ), perms AS (
+    )"""
+
+# ... then N_PERMS permutation minima per doc and their N_BANDS band
+# signatures (the oracle side of _minhash_sig and _band_structs).
+_MINHASH_BANDS_CTES = f"""{_TOKS_CTE}, perms AS (
         SELECT unnest(range({N_PERMS})) AS i
     ), hashes AS (
         SELECT doc_id, i,
@@ -217,7 +285,16 @@ _MINHASH_CAND_CTES = f"""
         SELECT doc_id, i // {N_PERMS // N_BANDS} AS band,
                md5(string_agg(mh::VARCHAR, ',' ORDER BY i)) AS band_sig
         FROM sig GROUP BY doc_id, i // {N_PERMS // N_BANDS}
-    ), cand AS (
+    )"""
+
+# The common MinHash/LSH candidate pipeline (tokens -> permutation
+# minima -> band signatures -> band-collision candidates -> size-ratio
+# prefilter -> exact-intersection counts), shared as ONE fragment so
+# every oracle that consumes the candidate structure
+# (_MINHASH_PAIRS_SQL below and _TRIPLET_SQL, which also needs the
+# verify stage's REJECTS) stays in lockstep with any future change to
+# the pipeline — they differ only in their final SELECTs.
+_MINHASH_CAND_CTES = f"""{_MINHASH_BANDS_CTES}, cand AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a
         JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
@@ -250,6 +327,39 @@ _MINHASH_PAIRS_SQL = f"""
     FROM inter
     WHERE ni * 1.0 / (na + nb - ni) >= {MINHASH_THRESHOLD}
     """
+
+
+# Connected components of the MinHash pair graph as a recursive label
+# closure: min(label) per node is its component id.
+_CC_WALK_CTES = f"""
+    WITH RECURSIVE pairs AS (
+        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
+    ), edges AS (
+        SELECT doc_a AS src, doc_b AS dst FROM pairs
+        UNION ALL
+        SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ), walk(node, label) AS (
+        SELECT doc_id, doc_id FROM documents
+        UNION
+        SELECT e.dst, w.label
+        FROM walk w JOIN edges e ON e.src = w.node
+    )"""
+_CC_CLUSTERS_CTES = f"""{_CC_WALK_CTES}, clusters AS (
+        SELECT node AS doc_id, min(label) AS cluster_id
+        FROM walk GROUP BY node
+    )"""
+
+# The symmetrized MinHash pair graph and each node's degree.
+_SYM_DEG_CTES = f"""
+    WITH pairs AS (
+        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
+    ), sym AS (
+        SELECT doc_a AS a, doc_b AS b FROM pairs
+        UNION ALL
+        SELECT doc_b AS a, doc_a AS b FROM pairs
+    ), deg AS (
+        SELECT a AS doc_id, CAST(count(*) AS HUGEINT) AS d FROM sym GROUP BY 1
+    )"""
 
 
 @op(
@@ -315,6 +425,62 @@ def minhash_lsh_pairs(
     )
 
 
+def _undirected(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(src, dst) edges of an (a, b) pair list, both directions."""
+    return pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).union(
+        pairs.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+    )
+
+
+def _neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) edges of the MinHash pair graph, both directions."""
+    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    return _undirected(pairs, "doc_a", "doc_b")
+
+
+def _min_label_components(edges: DataFrame, labels: DataFrame, what: str) -> DataFrame:
+    """Min-label propagation over (src, dst) ``edges`` to a fixpoint:
+    each round every (node, comp) row takes the min of its own label
+    and its in-neighbors' — one edge join + partial-agg min, lineage
+    truncated by localCheckpoint. Labels only decrease, so an unchanged
+    sum is the fixpoint proof; 50 rounds is a safety bound only."""
+    prev_sum = labels.agg(F.sum("comp")).collect()[0][0] or 0
+    for _ in range(50):
+        nbr_min = (
+            edges.join(labels, edges.src == labels.node)
+            .groupBy("dst")
+            .agg(F.min("comp").alias("nbr_comp"))
+        )
+        labels = (
+            labels.join(nbr_min, labels.node == nbr_min.dst, "left")
+            .select(
+                "node",
+                F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
+            )
+            .localCheckpoint()
+        )
+        cur_sum = labels.agg(F.sum("comp")).collect()[0][0] or 0
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    else:
+        raise RuntimeError(f"{what} did not converge in 50 rounds")
+    return labels
+
+
+def _sym_deg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The cached MinHash pairs, their symmetrized (a, b) edges and each
+    node's exact degree ``d`` (the Spark side of _SYM_DEG_CTES)."""
+    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
+    sym = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionAll(
+        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
+    )
+    deg = sym.groupBy(F.col("a").alias("doc_id")).agg(
+        F.count(F.lit(1)).cast("decimal(38,0)").alias("d")
+    )
+    return pairs, sym, deg
+
+
 @session_memo
 def _build_lsh_paired(
     spark: SparkSession,
@@ -329,57 +495,11 @@ def _build_lsh_paired(
     (bands, token arrays) — see minhash_lsh_pairs, which applies the
     verdict/filter tail."""
     toks = _doc_tokens(spark, sf_dir)
-    rows_per_band = n_perms // n_bands
-    # Hash each DISTINCT token once per permutation, as n_perms WIDE
-    # columns on a small vocab table (vocab << occurrences on any corpus),
-    # broadcast-join it onto the (doc, token) pairs, and take per-column
-    # mins — the whole signature costs ONE shuffle of |doc,token| rows
-    # instead of an exploded |doc,token| x perms shuffle.
-    vocab_wide = toks.select("tok").distinct()
-    for i in range(n_perms):
-        vocab_wide = vocab_wide.withColumn(
-            f"h{i}", portable_hash60(F.concat(F.lit(f"{i}:"), F.col("tok")))
-        )
-    # `n` (distinct-token count) rides the SAME aggregation for free —
-    # toks is one row per (doc, distinct token) — so the size-ratio
-    # prefilter downstream never needs a corpus-keyed sizes join.
-    sig = (
-        toks.join(F.broadcast(vocab_wide), "tok")
-        .groupBy("doc_id")
-        .agg(
-            *[F.min(f"h{i}").alias(f"mh{i}") for i in range(n_perms)],
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{i}").cast("string")
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("band_sig"),
-        )
-        for b in range(n_bands)
-    ]
     # cache(): bands feeds both sides of the candidate self-join and the
     # token arrays feed both sides of the verify join — without it Spark
     # re-executes the scan->tokenize->sign subtree once per reference
     # (measured 2.5x slower end-to-end).
-    bands = (
-        sig.select("doc_id", "n", F.explode(F.array(*band_structs)).alias("bs"))
-        .select(
-            "doc_id",
-            "n",
-            F.col("bs.band").alias("band"),
-            F.col("bs.band_sig").alias("band_sig"),
-        )
-        .cache()
-    )
+    bands = _band_rows(_minhash_sig(toks, n_perms), n_perms, n_bands)
     # Each band row carries its doc's size (8 bytes on an already-wide
     # shuffle row), so the self-join emits (doc_a, doc_b, na, nb)
     # directly — the size-ratio prefilter costs ZERO extra joins, where
@@ -426,13 +546,7 @@ def _build_lsh_paired(
     return pre.join(arr_a, "doc_a").join(arr_b, "doc_b"), (bands, tok_arrays)
 
 
-_SIMHASH_SQL = """
-    WITH toks AS (
-        SELECT DISTINCT doc_id, tok FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ) WHERE tok <> ''
-    ), tok_vals AS (
+_SIMHASH_SQL = f"""{_TOKS_CTE}, tok_vals AS (
         SELECT doc_id, ('0x' || substr(md5(tok), 1, 4))::BIGINT AS v FROM toks
     ), bits AS (
         SELECT doc_id, b,
@@ -550,19 +664,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "dedup_cluster_canonical",
-    oracle=f"""
-    WITH RECURSIVE pairs AS (
-        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), walk(node, label) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.label
-        FROM walk w JOIN edges e ON e.src = w.node
-    )
+    oracle=f"""{_CC_WALK_CTES}
     SELECT node AS doc_id,
            min(label) AS cluster_id,
            CAST(CASE WHEN min(label) = node THEN 1 ELSE 0 END AS INTEGER) AS is_canonical
@@ -592,34 +694,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE label closure.
     """
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .cache()
-    )
+    edges = _neardup_edges(spark, sf_dir).cache()
     labels = docs.select("node", F.col("node").alias("comp")).localCheckpoint()
-    prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
-    for _ in range(50):  # safety bound only; convergence breaks the loop
-        nbr_min = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy("dst")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        labels = (
-            labels.join(nbr_min, labels.node == nbr_min.dst, "left")
-            .select(
-                "node",
-                F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("comp")).collect()[0][0]
-        if cur_sum == prev_sum:  # labels only decrease => equal sum == fixpoint
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError("connected components did not converge in 50 rounds")
+    labels = _min_label_components(edges, labels, "connected components")
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("comp").alias("cluster_id"),
@@ -635,14 +712,10 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 PAGERANK_ITERS = 5
 _PR_BASE = 150_000  # (1 - 0.85) in micro-units
 
-
-def _pagerank_oracle() -> str:
-    # Every CTE is referenced ONCE per later CTE and the heavy ones are
-    # MATERIALIZED — a naive chain referencing r{i} twice per step makes
-    # an inlining planner recompute the embedded MinHash query
-    # exponentially many times.
-    ctes = [
-        f"""pairs AS MATERIALIZED (
+# The near-dup pair list (embedded once, MATERIALIZED so a CTE-inlining
+# planner never recomputes the MinHash pipeline per reference) plus its
+# both-direction edge list and degree table.
+_GRAPH_CTES = f"""pairs AS MATERIALIZED (
         SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
     ), edges AS MATERIALIZED (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -650,7 +723,16 @@ def _pagerank_oracle() -> str:
         SELECT doc_b AS src, doc_a AS dst FROM pairs
     ), deg AS MATERIALIZED (
         SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1
-    ), nodes AS MATERIALIZED (
+    )"""
+
+
+def _pagerank_oracle() -> str:
+    # Every CTE is referenced ONCE per later CTE and the heavy ones are
+    # MATERIALIZED — a naive chain referencing r{i} twice per step makes
+    # an inlining planner recompute the embedded MinHash query
+    # exponentially many times.
+    ctes = [
+        f"""{_GRAPH_CTES}, nodes AS MATERIALIZED (
         SELECT doc_id AS node FROM documents
     ), r0 AS (
         SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes
@@ -693,12 +775,7 @@ def pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard Pregel/GraphX layout; lineage is truncated per round with
     localCheckpoint like dedup_cluster_canonical."""
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .cache()
-    )
+    edges = _neardup_edges(spark, sf_dir).cache()
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = docs.select("node", F.lit(1_000_000).cast("bigint").alias("r")).localCheckpoint()
     for _ in range(PAGERANK_ITERS):
@@ -808,19 +885,7 @@ def near_dup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "dedup_cluster_size_hist",
-    oracle=f"""
-    WITH RECURSIVE pairs AS (
-        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), walk(node, label) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.label
-        FROM walk w JOIN edges e ON e.src = w.node
-    ), labels AS (
+    oracle=f"""{_CC_WALK_CTES}, labels AS (
         SELECT node, min(label) AS cluster_id FROM walk GROUP BY node
     ), sizes AS (
         SELECT cluster_id, count(*) AS cluster_size FROM labels GROUP BY cluster_id
@@ -1000,22 +1065,7 @@ BANDING_CONFIGS = ((2, 8), (4, 4), (8, 2))
 
 @op(
     "minhash_banding_curve",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ), sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, len(ts) - 1),
-                                     i -> ts[i] || '_' || ts[i+1] || '_' || ts[i+2])) AS s
-        FROM toks
-        WHERE len(ts) >= 3
-    ), sizes AS (
-        SELECT doc_id, count(*) AS n FROM sh GROUP BY 1
-    ), inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ni
-        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ), true_pairs AS (
+    oracle=f"""{_SHINGLE_CTES}, true_pairs AS (
         SELECT round(ni * 1.0 / (sa.n + sb.n - ni), {ROUND_RATIO}) AS j
         FROM inter
         JOIN sizes sa ON sa.doc_id = doc_a
@@ -1101,13 +1151,7 @@ def neardup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PCT = int(MINHASH_THRESHOLD * 100)  # integer threshold: 100*j >= _PCT
 
-_PREFIX_FILTER_SQL = f"""
-    WITH toks AS (
-        SELECT DISTINCT doc_id, tok FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ) WHERE tok <> ''
-    ), sizes AS (
+_PREFIX_FILTER_SQL = f"""{_TOKS_CTE}, sizes AS (
         SELECT doc_id, count(*) AS n FROM toks GROUP BY 1
     ), inter AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS ni
@@ -1231,12 +1275,7 @@ def dedup_cluster_pointer_doubling(spark: SparkSession, sf_dir: str) -> DataFram
     control only). pytest asserts both algorithms return identical
     clusters."""
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .cache()
-    )
+    edges = _neardup_edges(spark, sf_dir).cache()
     labels = docs.select("node", F.col("node").alias("p")).localCheckpoint()
     prev_sum = labels.agg(F.sum("p")).collect()[0][0]
     for _ in range(50):  # safety bound; log-round convergence breaks out
@@ -1310,12 +1349,7 @@ def neardup_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     components. Frontier-only expansion (only rows that improved
     propagate) is the named optimization at larger diameters."""
     docs = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .cache()
-    )
+    edges = _neardup_edges(spark, sf_dir).cache()
     dist = docs.filter(F.col("node") < BLAST_SEED_MAX).select(
         "node", F.lit(0).alias("d")
     ).localCheckpoint()
@@ -1335,22 +1369,7 @@ def neardup_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BEST_QUALITY_SQL = f"""
-    WITH RECURSIVE pairs AS (
-        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), walk(node, label) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.label
-        FROM walk w JOIN edges e ON e.src = w.node
-    ), clusters AS (
-        SELECT node AS doc_id, min(label) AS cluster_id
-        FROM walk GROUP BY node
-    ), ranked AS (
+_BEST_QUALITY_SQL = f"""{_CC_CLUSTERS_CTES}, ranked AS (
         SELECT c.cluster_id, c.doc_id, d.n_chars,
                row_number() OVER (PARTITION BY c.cluster_id
                                   ORDER BY d.n_chars DESC, c.doc_id) AS rn,
@@ -1396,22 +1415,7 @@ def dedup_cluster_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLUSTER_PURITY_SQL = f"""
-    WITH RECURSIVE pairs AS (
-        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
-    ), edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), walk(node, label) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.dst, w.label
-        FROM walk w JOIN edges e ON e.src = w.node
-    ), clusters AS (
-        SELECT node AS doc_id, min(label) AS cluster_id
-        FROM walk GROUP BY node
-    ), cl AS (
+_CLUSTER_PURITY_SQL = f"""{_CC_CLUSTERS_CTES}, cl AS (
         SELECT c.cluster_id, d.lang, count(*) AS n
         FROM clusters c JOIN documents d USING (doc_id)
         GROUP BY 1, 2
@@ -1538,16 +1542,7 @@ def neardup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LCC_SQL = f"""
-    WITH pairs AS (
-        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
-    ), sym AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM pairs
-    ), deg AS (
-        SELECT a AS doc_id, CAST(count(*) AS HUGEINT) AS d FROM sym GROUP BY 1
-    ), wedges AS (
+_LCC_SQL = f"""{_SYM_DEG_CTES}, wedges AS (
         SELECT x.a AS v, x.b AS nb1, y.b AS nb2
         FROM sym x JOIN sym y ON x.a = y.a AND x.b < y.b
     ), tri AS (
@@ -1578,13 +1573,7 @@ def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical edge list — fan-in bounded by near-dup degree, never
     all-pairs; the coefficient is one half-up micro rational, NULL for
     degree<2 where it is undefined."""
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
-    sym = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionAll(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("doc_id")).agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("d")
-    )
+    pairs, sym, deg = _sym_deg(spark, sf_dir)
     x = sym.select("a", F.col("b").alias("nb1"))
     y = sym.select(F.col("a"), F.col("b").alias("nb2"))
     wedges = x.join(y, "a").filter(F.col("nb1") < F.col("nb2"))
@@ -1609,16 +1598,7 @@ def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASSORT_SQL = f"""
-    WITH pairs AS (
-        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
-    ), sym AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM pairs
-    ), deg AS (
-        SELECT a AS doc_id, CAST(count(*) AS HUGEINT) AS d FROM sym GROUP BY 1
-    ), ed AS (
+_ASSORT_SQL = f"""{_SYM_DEG_CTES}, ed AS (
         SELECT da.d AS x, db.d AS y
         FROM sym
         JOIN deg da ON da.doc_id = sym.a
@@ -1650,13 +1630,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer moment accumulators over candidate-bounded edges, one IEEE
     sqrt/divide at the end (the corr seam), NULL when either endpoint
     degree is constant."""
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
-    sym = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionAll(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    )
-    deg = sym.groupBy(F.col("a").alias("doc_id")).agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("d")
-    )
+    _, sym, deg = _sym_deg(spark, sf_dir)
     ed = (
         sym.join(deg.select(F.col("doc_id").alias("a"), F.col("d").alias("x")), "a")
         .join(deg.select(F.col("doc_id").alias("b"), F.col("d").alias("y")), "b")
@@ -1731,25 +1705,7 @@ def dedup_normalized_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _INCR_SPLIT = 5  # doc_id % 5 == 0 plays the incoming batch (~20%)
 
-_INCREMENTAL_MH_SQL = f"""
-    WITH toks AS (
-        SELECT DISTINCT doc_id, tok FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ) WHERE tok <> ''
-    ), perms AS (
-        SELECT unnest(range({N_PERMS})) AS i
-    ), hashes AS (
-        SELECT doc_id, i,
-               ('0x' || substr(md5(i::VARCHAR || ':' || tok), 1, 15))::BIGINT AS h
-        FROM toks CROSS JOIN perms
-    ), sig AS (
-        SELECT doc_id, i, min(h) AS mh FROM hashes GROUP BY doc_id, i
-    ), bands AS (
-        SELECT doc_id, i // {N_PERMS // N_BANDS} AS band,
-               md5(string_agg(mh::VARCHAR, ',' ORDER BY i)) AS band_sig
-        FROM sig GROUP BY doc_id, i // {N_PERMS // N_BANDS}
-    ), cand AS (
+_INCREMENTAL_MH_SQL = f"""{_MINHASH_BANDS_CTES}, cand AS (
         SELECT a.doc_id AS doc_new, b.doc_id AS doc_old
         FROM bands a
         JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
@@ -1804,48 +1760,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     per contaminated incoming doc (partner count + best Jaccard) — the
     drop-list a curation pass consumes."""
     toks = _doc_tokens(spark, sf_dir)
-    vocab_wide = toks.select("tok").distinct()
-    for i in range(N_PERMS):
-        vocab_wide = vocab_wide.withColumn(
-            f"h{i}", portable_hash60(F.concat(F.lit(f"{i}:"), F.col("tok")))
-        )
-    rows_per_band = N_PERMS // N_BANDS
     # `n` rides the signature aggregation and the band rows, exactly as
     # in minhash_lsh_pairs: the size-ratio prefilter falls out of the
     # candidate join itself, never a corpus-keyed sizes join.
-    sig = (
-        toks.join(F.broadcast(vocab_wide), "tok")
-        .groupBy("doc_id")
-        .agg(
-            *[F.min(f"h{i}").alias(f"mh{i}") for i in range(N_PERMS)],
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{i}").cast("string")
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("band_sig"),
-        )
-        for b in range(N_BANDS)
-    ]
-    bands = (
-        sig.select("doc_id", "n", F.explode(F.array(*band_structs)).alias("bs"))
-        .select(
-            "doc_id",
-            "n",
-            F.col("bs.band").alias("band"),
-            F.col("bs.band_sig").alias("band_sig"),
-        )
-        .cache()
-    )
+    bands = _band_rows(_minhash_sig(toks, N_PERMS), N_PERMS, N_BANDS)
     newb = bands.filter(F.col("doc_id") % _INCR_SPLIT == 0).select(
         F.col("doc_id").alias("doc_new"), F.col("n").alias("na"), "band", "band_sig"
     )
@@ -1941,25 +1859,7 @@ def split_neardup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 CAL_SAMPLE_MOD = 16
 _CAL_MICRO = 1_000_000
 
-_CALIBRATION_SQL = f"""
-    WITH toks AS (
-        SELECT DISTINCT doc_id, tok FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ) WHERE tok <> ''
-    ), perms AS (
-        SELECT unnest(range({N_PERMS})) AS i
-    ), hashes AS (
-        SELECT doc_id, i,
-               ('0x' || substr(md5(i::VARCHAR || ':' || tok), 1, 15))::BIGINT AS h
-        FROM toks CROSS JOIN perms
-    ), sig AS (
-        SELECT doc_id, i, min(h) AS mh FROM hashes GROUP BY doc_id, i
-    ), bands AS (
-        SELECT doc_id, i // {N_PERMS // N_BANDS} AS band,
-               md5(string_agg(mh::VARCHAR, ',' ORDER BY i)) AS band_sig
-        FROM sig GROUP BY doc_id, i // {N_PERMS // N_BANDS}
-    ), cand AS (
+_CALIBRATION_SQL = f"""{_MINHASH_BANDS_CTES}, cand AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a
         JOIN bands b ON a.band = b.band AND a.band_sig = b.band_sig
@@ -2029,39 +1929,11 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pair, token) rows. Jaccard rounds ONCE per pair to integer
     micro-units; every aggregate after is exact integer arithmetic."""
     toks = _doc_tokens(spark, sf_dir)
-    rows_per_band = N_PERMS // N_BANDS
-    vocab_wide = toks.select("tok").distinct()
-    for i in range(N_PERMS):
-        vocab_wide = vocab_wide.withColumn(
-            f"h{i}", portable_hash60(F.concat(F.lit(f"{i}:"), F.col("tok")))
-        )
-    sig = (
-        toks.join(F.broadcast(vocab_wide), "tok")
-        .groupBy("doc_id")
-        .agg(
-            *[F.min(f"h{i}").alias(f"mh{i}") for i in range(N_PERMS)],
-            F.count(F.lit(1)).alias("n"),
-            F.array_sort(F.collect_set("tok")).alias("toks"),
-        )
-        .cache()
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{i}").cast("string")
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("band_sig"),
-        )
-        for b in range(N_BANDS)
-    ]
+    sig = _minhash_sig(
+        toks, N_PERMS, F.array_sort(F.collect_set("tok")).alias("toks")
+    ).cache()
     bands = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bs")
+        "doc_id", F.explode(F.array(*_band_structs(N_PERMS, N_BANDS))).alias("bs")
     ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.band_sig").alias("band_sig"))
     cand = (
         bands.alias("a")

@@ -30,8 +30,9 @@ from pyspark.sql import functions as F
 
 from my_polars_ai_spark.operators.base import Op, ROUND_RATIO, make_registrar
 from my_polars_ai_spark.operators.dedup import (
-    _MINHASH_PAIRS_SQL,
+    _GRAPH_CTES,
     MINHASH_THRESHOLD,
+    _neardup_edges,
     minhash_lsh_pairs,
 )
 from my_polars_ai_spark.operators.text import benchmark_contamination
@@ -40,38 +41,11 @@ from my_polars_ai_spark.sources.tables import load_table as _t
 OPS: dict[str, Op] = {}
 op = make_registrar(OPS)
 
-# Shared oracle preamble: the near-dup pair list (embedded once,
-# MATERIALIZED so a CTE-inlining planner never recomputes the MinHash
-# pipeline per reference — same discipline as the pagerank oracle) plus
-# its both-direction edge list and degree table.
-_GRAPH_CTES = f"""pairs AS MATERIALIZED (
-        SELECT doc_a, doc_b FROM ({_MINHASH_PAIRS_SQL})
-    ), edges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION ALL
-        SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), deg AS MATERIALIZED (
-        SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1
-    )"""
-
 ADAMIC_ADAR_TOPK = 50
 
-
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both-direction near-dup edge list (src, dst)."""
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-
-
-@op(
-    "neardup_adamic_adar",
-    oracle=f"""
-    WITH {_GRAPH_CTES}, w AS (
-        -- ln(deg) weight in micro-units, rounded ONCE; deg >= 2 is
-        -- lossless (a degree-1 vertex cannot be a wedge middle)
-        SELECT node, CAST(round(1000000 / ln(deg)) AS BIGINT) AS w_micro
+# The Adamic-Adar scoring after `w AS (`: 1/ln(deg) middle-vertex
+# weights, wedge candidates and the top-k pairs that are not yet edges.
+_AA_BODY = f"""        SELECT node, CAST(round(1000000 / ln(deg)) AS BIGINT) AS w_micro
         FROM deg WHERE deg >= 2
     ), wedge AS (
         SELECT e1.dst AS doc_a, e2.dst AS doc_b, w.w_micro
@@ -90,7 +64,16 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.doc_a IS NULL
     ORDER BY c.aa_micro DESC, c.doc_a, c.doc_b
     LIMIT {ADAMIC_ADAR_TOPK}
-    """,
+"""
+
+
+@op(
+    "neardup_adamic_adar",
+    oracle=f"""
+    WITH {_GRAPH_CTES}, w AS (
+        -- ln(deg) weight in micro-units, rounded ONCE; deg >= 2 is
+        -- lossless (a degree-1 vertex cannot be a wedge middle)
+{_AA_BODY}    """,
     tags=("graph", "dedup", "link-prediction"),
 )
 def neardup_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,7 +92,7 @@ def neardup_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree cap on middles (a celebrity vertex contributes deg^2 wedges
     but ~0 weight at 1/ln(deg)) — the plan shape is unchanged.
     Weights are micro-unit integers rounded once, sums exact."""
-    edges = _edges(spark, sf_dir).cache()
+    edges = _neardup_edges(spark, sf_dir).cache()
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     w = deg.filter(F.col("deg") >= 2).select(
         F.col("src").alias("node"),
@@ -202,7 +185,7 @@ def contamination_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     never |V|x|V|; lineage truncated per round with localCheckpoint
     like pagerank_near_dup.  Hop counts are exact integers."""
     seeds = benchmark_contamination(spark, sf_dir).select("doc_id")
-    edges = _edges(spark, sf_dir).cache()
+    edges = _neardup_edges(spark, sf_dir).cache()
     reach = seeds.select(
         F.col("doc_id").alias("node"), F.lit(0).cast("bigint").alias("h")
     ).localCheckpoint()
@@ -259,7 +242,7 @@ def neardup_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-size lang join; the iterated fixpoint version is this op
     in the pagerank_near_dup loop skeleton.  Counts exact."""
     langs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    edges = _edges(spark, sf_dir)
+    edges = _neardup_edges(spark, sf_dir)
     votes = (
         edges.join(
             langs.select(F.col("doc_id").alias("dst"), F.col("lang").alias("nb_lang")),
@@ -298,26 +281,7 @@ def neardup_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # op's own SELECT, minus the ORDER/LIMIT wrapper it shares).
 _AA_TOPK_SQL = f"""
     WITH {_GRAPH_CTES}, w AS (
-        SELECT node, CAST(round(1000000 / ln(deg)) AS BIGINT) AS w_micro
-        FROM deg WHERE deg >= 2
-    ), wedge AS (
-        SELECT e1.dst AS doc_a, e2.dst AS doc_b, w.w_micro
-        FROM edges e1
-        JOIN edges e2 ON e2.src = e1.src AND e1.dst < e2.dst
-        JOIN w ON w.node = e1.src
-    ), cand AS (
-        SELECT doc_a, doc_b,
-               CAST(count(*) AS BIGINT) AS n_common,
-               CAST(sum(w_micro) AS BIGINT) AS aa_micro
-        FROM wedge GROUP BY 1, 2
-    )
-    SELECT c.doc_a, c.doc_b, c.n_common, c.aa_micro
-    FROM cand c
-    LEFT JOIN pairs p ON p.doc_a = c.doc_a AND p.doc_b = c.doc_b
-    WHERE p.doc_a IS NULL
-    ORDER BY c.aa_micro DESC, c.doc_a, c.doc_b
-    LIMIT {ADAMIC_ADAR_TOPK}
-"""
+{_AA_BODY}"""
 
 
 @op(

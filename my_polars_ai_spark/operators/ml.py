@@ -22,6 +22,7 @@ from my_polars_ai_spark.operators.base import (
     oracle_ratio_round,
     ratio_round,
 )
+from my_polars_ai_spark.operators.relational import _nation_lines
 from my_polars_ai_spark.sources.tables import load_table as _t
 
 OPS: dict[str, Op] = {}
@@ -409,15 +410,9 @@ def groupwise_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers (quantity is integral, price in cents), and the
     final rational rounds by the shared sign-split half-up integer
     division, so even a fitted coefficient hash-matches the oracle."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
     dec = "decimal(38,0)"
     v = (
-        li.join(F.broadcast(s.select("s_suppkey", "s_nationkey")),
-                li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n.select("n_nationkey", "n_name")),
-              F.col("s_nationkey") == F.col("n_nationkey"))
+        _nation_lines(spark, sf_dir)
         .select(
             "n_name",
             F.col("l_quantity").cast(dec).alias("x"),

@@ -1452,6 +1452,20 @@ def histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy(qty_bin, price_bin).agg(F.count(F.lit(1)).alias("n"))
 
 
+def _nation_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem with its supplier's nation key and n_name attached, both
+    dims broadcast into the fact scan."""
+    li = _t(spark, sf_dir, "lineitem")
+    s = _t(spark, sf_dir, "supplier")
+    n = _t(spark, sf_dir, "nation")
+    return li.join(
+        F.broadcast(s.select("s_suppkey", "s_nationkey")), li.l_suppkey == s.s_suppkey
+    ).join(
+        F.broadcast(n.select("n_nationkey", "n_name")),
+        F.col("s_nationkey") == F.col("n_nationkey"),
+    )
+
+
 @op(
     "weighted_median_per_group",
     oracle="""
@@ -1493,15 +1507,9 @@ def weighted_median_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     the selected value is deterministic and hash-checkable. Per-group
     state is the sort — at 100 TB groups are nation-sized partitions,
     the same contract as every keyed window here."""
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
     dec = "decimal(38,0)"
     v = (
-        li.join(F.broadcast(s.select("s_suppkey", "s_nationkey")),
-                li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n.select("n_nationkey", "n_name")),
-              F.col("s_nationkey") == F.col("n_nationkey"))
+        _nation_lines(spark, sf_dir)
         .select(
             "n_name",
             (F.col("l_extendedprice").cast("decimal(28,6)") * 100)

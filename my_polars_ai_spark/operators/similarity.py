@@ -32,6 +32,7 @@ from my_polars_ai_spark.operators.base import (
     session_memo,
     signed_ratio_round,
 )
+from my_polars_ai_spark.operators.dedup import _min_label_components, _undirected
 from my_polars_ai_spark.sources.tables import load_table as _t
 
 OPS: dict[str, Op] = {}
@@ -57,6 +58,44 @@ def _dot(a, b) -> Column:
 
 def _norm(a) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _cos(a, b) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """Each query's TOP_K neighbors of a (q_id, neighbor_id, cos) frame:
+    cosine desc, ties to the lower id, cos rounded after ranking."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("q_id", "neighbor_id", F.round("cos", ROUND_RATIO).alias("cos"), "rank")
+    )
+
+
+def _score_neighbors(pairs: DataFrame) -> DataFrame:
+    """(q_id, neighbor_id, cos) of query-by-corpus rows (q_id, qv,
+    vec_id, v), the query itself excluded."""
+    return pairs.filter(F.col("vec_id") != F.col("q_id")).select(
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        _cos(F.col("qv"), F.col("v")).alias("cos"),
+    )
+
+
+def _topk_sql(src: str, pad: str = "") -> str:
+    """``), ranked AS (`` and the final SELECT: each query's TOP_K rows
+    of ``src`` by cosine desc, ties to the lower id (the oracle side of
+    _top_k), every line after the first indented by ``pad``."""
+    return f"""), ranked AS (
+    SELECT q_id, neighbor_id, cos,
+           row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
+    FROM {src}
+)
+SELECT q_id, neighbor_id, round(cos, {ROUND_RATIO}) AS cos, rank
+FROM ranked WHERE rank <= {TOP_K}""".replace("\n", "\n" + pad)
 
 
 @op(
@@ -92,13 +131,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
                list_cosine_similarity(q.qv, e.embedding::DOUBLE[]) AS cos
         FROM q CROSS JOIN embeddings e
         WHERE e.vec_id != q.q_id
-    ), ranked AS (
-        SELECT q_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-        FROM scored
-    )
-    SELECT q_id, neighbor_id, round(cos, {ROUND_RATIO}) AS cos, rank
-    FROM ranked WHERE rank <= {TOP_K}
+    {_topk_sql("scored", "    ")}
     """,
     tags=("similarity", "knn"),
 )
@@ -112,21 +145,7 @@ def cosine_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     )
-    scored = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "neighbor_id", F.round("cos", ROUND_RATIO).alias("cos"), "rank")
-    )
+    return _top_k(_score_neighbors(corpus.crossJoin(F.broadcast(queries))))
 
 
 def _hyperplane_sign(v: Column, plane: int) -> Column:
@@ -146,6 +165,56 @@ def _hyperplane_sign(v: Column, plane: int) -> Column:
     return (F.aggregate(signed, F.lit(0.0), lambda acc, x: acc + x) > 0).cast("int")
 
 
+def _lsh_buckets(corpus: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` plus (tbl, bucket) of a (vec_id, v) corpus: one row per
+    vector per LSH table, the bucket being the table's
+    PLANES_PER_TABLE hyperplane sign bits."""
+    tables = []
+    for t in range(N_TABLES):
+        bucket = sum(
+            (
+                _hyperplane_sign(F.col("v"), t * PLANES_PER_TABLE + p) * (1 << p)
+                for p in range(PLANES_PER_TABLE)
+            ),
+            F.lit(0),
+        ).alias("bucket")
+        tables.append(corpus.select(*cols, F.lit(t).alias("tbl"), bucket))
+    bucketed = tables[0]
+    for t_df in tables[1:]:
+        bucketed = bucketed.unionByName(t_df)
+    return bucketed
+
+
+def _md5_codebook(corpus: DataFrame, n: int) -> list[tuple[int, list[float]]]:
+    """The n corpus vectors ranked first by (md5(vec_id), vec_id), as
+    (index, vector) pairs: a seeded sample collected driver-side, so a
+    codebook is a pure function of the data on both engines. The top-n
+    is TakeOrderedAndProject, bounded by n, not a global sort."""
+    seeds = (
+        corpus.withColumn("h", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("h", "vec_id")
+        .limit(n)
+        .collect()
+    )
+    seeds = sorted(seeds, key=lambda r: (r.h, r.vec_id))
+    return [(i, list(r.v)) for i, r in enumerate(seeds)]
+
+
+def _dist_to(lv: Column) -> Column:
+    """Euclidean distance of ``v`` to ``lv``, rounded at ROUND_RATIO so
+    ulp drift cannot flip an argmin."""
+    return F.round(
+        F.sqrt(
+            F.aggregate(
+                F.zip_with(F.col("v"), lv, lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+        ),
+        ROUND_RATIO,
+    )
+
+
 def _sign_expr_sql(plane: int) -> str:
     """DuckDB twin of _hyperplane_sign: sign bit of v . h_plane."""
     return (
@@ -162,7 +231,9 @@ def _bucket_expr_sql(table: int) -> str:
     )
 
 
-_ANN_ORACLE = f"""
+# The float corpus and its (tbl, bucket) rows: the oracle side of
+# _lsh_buckets.
+_LSH_BUCKETS_CTES = f"""
 WITH corpus AS (
     SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ), buckets AS (
@@ -173,7 +244,9 @@ WITH corpus AS (
                 ELSE {_bucket_expr_sql(2)}
            END AS bucket
     FROM corpus CROSS JOIN (SELECT unnest(range({N_TABLES})) AS tbl) t
-), q AS (
+)"""
+
+_ANN_ORACLE = f"""{_LSH_BUCKETS_CTES}, q AS (
     SELECT vec_id AS q_id, tbl, bucket FROM buckets WHERE vec_id < {N_QUERIES}
 ), cand AS (
     SELECT DISTINCT q.q_id, b.vec_id AS neighbor_id
@@ -185,13 +258,7 @@ WITH corpus AS (
     FROM cand c
     JOIN corpus ca ON ca.vec_id = c.q_id
     JOIN corpus cb ON cb.vec_id = c.neighbor_id
-), ranked AS (
-    SELECT q_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT q_id, neighbor_id, round(cos, {ROUND_RATIO}) AS cos, rank
-FROM ranked WHERE rank <= {TOP_K}
+{_topk_sql("scored")}
 """
 
 
@@ -211,19 +278,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached: the corpus feeds every LSH table projection plus the query set
     corpus = e.select("vec_id", _as_double(F.col("embedding")).alias("v")).cache()
     # (vec_id, v, table, bucket) — one row per table per vector.
-    tables = []
-    for t in range(N_TABLES):
-        bucket = sum(
-            (
-                _hyperplane_sign(F.col("v"), t * PLANES_PER_TABLE + p) * (1 << p)
-                for p in range(PLANES_PER_TABLE)
-            ),
-            F.lit(0),
-        ).alias("bucket")
-        tables.append(corpus.select("vec_id", "v", F.lit(t).alias("tbl"), bucket))
-    bucketed = tables[0]
-    for t_df in tables[1:]:
-        bucketed = bucketed.unionByName(t_df)
+    bucketed = _lsh_buckets(corpus, "vec_id", "v")
     queries = (
         bucketed.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), "tbl", "bucket")
@@ -237,14 +292,9 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = candidates.select(
         "q_id",
         F.col("vec_id").alias("neighbor_id"),
-        (_dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cos"),
+        _cos(F.col("qv"), F.col("v")).alias("cos"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "neighbor_id", F.round("cos", ROUND_RATIO).alias("cos"), "rank")
-    )
+    return _top_k(scored)
 
 
 N_CELLS = 16  # IVF coarse-quantizer cells
@@ -290,13 +340,7 @@ WITH {_ivf_ctes()}, probed AS (
            list_cosine_similarity(q.qv, a.v) AS cos
     FROM probed p JOIN assigned a USING (cell) JOIN qv q USING (q_id)
     WHERE a.vec_id != p.q_id
-), ranked AS (
-    SELECT q_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT q_id, neighbor_id, round(cos, {ROUND_RATIO}) AS cos, rank
-FROM ranked WHERE rank <= {TOP_K}
+{_topk_sql("scored")}
 """
 
 
@@ -316,23 +360,14 @@ def _ivf_ranked_cells(
     so cell assignment adds zero shuffles."""
     e = _t(spark, sf_dir, "embeddings")
     corpus = e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    seeds = (
-        corpus.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(N_CELLS)
-        .collect()
-    )
-    seeds = sorted(seeds, key=lambda r: (r.h, r.vec_id))
-    codebook = [(cell, list(r.v)) for cell, r in enumerate(seeds)]
+    codebook = _md5_codebook(corpus, N_CELLS)
 
     def _lit_vec(values: list[float]) -> Column:
         return F.array(*[F.lit(float(x)) for x in values])
 
     def _cos_to(cv: list[float]) -> Column:
         lv = _lit_vec(cv)
-        return F.round(
-            _dot(F.col("v"), lv) / (_norm(F.col("v")) * _norm(lv)), ROUND_RATIO
-        )
+        return F.round(_cos(F.col("v"), lv), ROUND_RATIO)
 
     # argmax/top-N_PROBE over the literal codebook: array_sort on
     # (-cos, cell) structs — a pure projection, no join, no shuffle
@@ -379,34 +414,24 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.slice(ranked_cells, 1, N_PROBE)["cell"]).alias("cell"),
         )
     )
-    scored = (
-        assigned.join(F.broadcast(probed), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "neighbor_id", F.round("cos", ROUND_RATIO).alias("cos"), "rank")
-    )
+    return _top_k(_score_neighbors(assigned.join(F.broadcast(probed), "cell")))
 
 
 KM_K = 4  # Lloyd's-step clusters
 
 
-_KMEANS_STEP_ORACLE = f"""
+# The float corpus and the KM_K md5-seeded centroids: the oracle side of
+# _md5_codebook.
+_KM_SEEDS_CTES = f"""
 WITH corpus AS MATERIALIZED (
     SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ), seeds AS MATERIALIZED (
     SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cluster,
            v AS cv
     FROM corpus QUALIFY cluster < {KM_K}
-), assigned AS (
+)"""
+
+_KMEANS_STEP_ORACLE = f"""{_KM_SEEDS_CTES}, assigned AS (
     SELECT vec_id, v, cluster FROM (
         SELECT c.vec_id, c.v, s.cluster,
                row_number() OVER (PARTITION BY c.vec_id
@@ -454,32 +479,15 @@ def kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     with map-side partial agg (state = K x 64 rows per task)."""
     e = _t(spark, sf_dir, "embeddings")
     corpus = e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    seeds = (
-        corpus.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(KM_K)
-        .collect()
-    )
-    seeds = sorted(seeds, key=lambda r: (r.h, r.vec_id))
-    codebook = [(cl, list(r.v)) for cl, r in enumerate(seeds)]
-
-    def _dist_to(cv: list[float]) -> Column:
-        lv = F.array(*[F.lit(float(x)) for x in cv])
-        return F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(F.col("v"), lv, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            ROUND_RATIO,
-        )
+    codebook = _md5_codebook(corpus, KM_K)
 
     ranked = F.array_sort(
         F.array(
             *[
-                F.struct(_dist_to(cv).alias("d"), F.lit(cl).alias("cluster"))
+                F.struct(
+                    _dist_to(F.array(*[F.lit(float(x)) for x in cv])).alias("d"),
+                    F.lit(cl).alias("cluster"),
+                )
                 for cl, cv in codebook
             ]
         )
@@ -504,18 +512,7 @@ EMB_DEDUP_THRESHOLD = 0.3  # this synthetic corpus has no true near-dups
 # real result set. On a production corpus set ~0.95+.
 
 
-_EMB_DEDUP_ORACLE = f"""
-WITH corpus AS (
-    SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), buckets AS (
-    SELECT vec_id, v, t.tbl,
-           CASE t.tbl
-                WHEN 0 THEN {_bucket_expr_sql(0)}
-                WHEN 1 THEN {_bucket_expr_sql(1)}
-                ELSE {_bucket_expr_sql(2)}
-           END AS bucket
-    FROM corpus CROSS JOIN (SELECT unnest(range({N_TABLES})) AS tbl) t
-), cand AS (
+_EMB_DEDUP_ORACLE = f"""{_LSH_BUCKETS_CTES}, cand AS (
     SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
     FROM buckets a
     JOIN buckets b ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id
@@ -546,19 +543,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection would use ~0.95+ where LSH recall is also far higher."""
     e = _t(spark, sf_dir, "embeddings")
     corpus = e.select("vec_id", _as_double(F.col("embedding")).alias("v")).cache()
-    tables = []
-    for t in range(N_TABLES):
-        bucket = sum(
-            (
-                _hyperplane_sign(F.col("v"), t * PLANES_PER_TABLE + p) * (1 << p)
-                for p in range(PLANES_PER_TABLE)
-            ),
-            F.lit(0),
-        ).alias("bucket")
-        tables.append(corpus.select("vec_id", F.lit(t).alias("tbl"), bucket))
-    bucketed = tables[0]
-    for t_df in tables[1:]:
-        bucketed = bucketed.unionByName(t_df)
+    bucketed = _lsh_buckets(corpus, "vec_id")
     bucketed = bucketed.cache()
     a = bucketed.select(F.col("vec_id").alias("vec_a"), "tbl", "bucket")
     b = bucketed.select(F.col("vec_id").alias("vec_b"), "tbl", "bucket")
@@ -571,7 +556,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ca = corpus.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
     cb = corpus.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
     paired = cand.join(ca, "vec_a").join(cb, "vec_b")
-    cos = _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
+    cos = _cos(F.col("va"), F.col("vb"))
     return (
         paired.withColumn("cos", cos)
         .filter(F.col("cos") >= EMB_DEDUP_THRESHOLD)
@@ -696,13 +681,7 @@ WITH {_pq_ctes()}, lut AS (
     FROM shortlist s
     JOIN corpus cq ON cq.vec_id = s.q_id
     JOIN corpus cn ON cn.vec_id = s.neighbor_id
-), ranked AS (
-    SELECT q_id, neighbor_id, cos,
-           row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-    FROM exact
-)
-SELECT q_id, neighbor_id, round(cos, {ROUND_RATIO}) AS cos, rank
-FROM ranked WHERE rank <= {TOP_K}
+{_topk_sql("exact")}
 """
 PQ_SHORTLIST = 64  # ADC shortlist size fed to the exact rerank
 
@@ -761,6 +740,30 @@ def _pq_cdist(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     )
     return subs.join(F.broadcast(codebook), "m").select("vec_id", "m", "k", d2.alias("d2"))
 _PQ_ORACLE = _PQ_ORACLE.replace("{PQ_SHORTLIST}", str(PQ_SHORTLIST))
+
+
+def _shortlist_rerank(scored: DataFrame, corpus: DataFrame) -> DataFrame:
+    """The PQ rerank: each query's PQ_SHORTLIST neighbors by ADC total
+    ``approx_dec`` (ties to the lower id) fetch their real ``corpus``
+    vectors, and the exact cosine picks the TOP_K."""
+    wa = Window.partitionBy("q_id").orderBy(F.asc("approx_dec"), F.asc("neighbor_id"))
+    shortlist = (
+        scored.withColumn("arank", F.row_number().over(wa))
+        .filter(F.col("arank") <= PQ_SHORTLIST)
+        .select("q_id", "neighbor_id")
+    )
+    cq = corpus.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
+    cn = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"))
+    exact = (
+        shortlist.join(F.broadcast(cq.filter(F.col("q_id") < N_QUERIES)), "q_id")
+        .join(cn, "neighbor_id")
+        .select(
+            "q_id",
+            "neighbor_id",
+            _cos(F.col("qv"), F.col("nv")).alias("cos"),
+        )
+    )
+    return _top_k(exact)
 
 
 def _pq_codes(cdist: DataFrame) -> DataFrame:
@@ -832,29 +835,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum(F.col("d2").cast("decimal(18,6)")).alias("approx_dec"))
     )
-    wa = Window.partitionBy("q_id").orderBy(F.asc("approx_dec"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= PQ_SHORTLIST)
-        .select("q_id", "neighbor_id")
-    )
-    cq = corpus.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    cn = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"))
-    exact = (
-        shortlist.join(F.broadcast(cq.filter(F.col("q_id") < N_QUERIES)), "q_id")
-        .join(cn, "neighbor_id")
-        .select(
-            "q_id",
-            "neighbor_id",
-            (_dot(F.col("qv"), F.col("nv")) / (_norm(F.col("qv")) * _norm(F.col("nv")))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "neighbor_id", F.round("cos", ROUND_RATIO).alias("cos"), "rank")
-    )
+    return _shortlist_rerank(scored, corpus)
 
 
 @op(
@@ -1172,13 +1153,7 @@ _ANN_QUERY_SQL = f"""
         FROM shortlist s
         JOIN pq_corpus cq ON cq.vec_id = s.q_id
         JOIN pq_corpus cn ON cn.vec_id = s.neighbor_id
-    ), ranked AS (
-        SELECT q_id, neighbor_id, cos,
-               row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rank
-        FROM exact
-    )
-    SELECT q_id, neighbor_id, round(cos, {ROUND_RATIO}) AS cos, rank
-    FROM ranked WHERE rank <= {TOP_K}
+    {_topk_sql("exact", "    ")}
 """
 
 
@@ -1262,34 +1237,7 @@ def _ann_serve_topk(
         .groupBy("q_id", "neighbor_id")
         .agg(F.sum(F.col("d2").cast("decimal(18,6)")).alias("approx_dec"))
     )
-    wa = Window.partitionBy("q_id").orderBy(F.asc("approx_dec"), F.asc("neighbor_id"))
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= PQ_SHORTLIST)
-        .select("q_id", "neighbor_id")
-    )
-    cq = ncorpus.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    cn = ncorpus.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"))
-    exact = (
-        shortlist.join(F.broadcast(cq.filter(F.col("q_id") < N_QUERIES)), "q_id")
-        .join(cn, "neighbor_id")
-        .select(
-            "q_id",
-            "neighbor_id",
-            (
-                _dot(F.col("qv"), F.col("nv"))
-                / (_norm(F.col("qv")) * _norm(F.col("nv")))
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "q_id", "neighbor_id", F.round("cos", ROUND_RATIO).alias("cos"), "rank"
-        )
-    )
+    return _shortlist_rerank(scored, ncorpus)
 
 
 _ANN_CELL_BALANCE_SQL = f"""
@@ -1432,10 +1380,7 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "neighbor_id",
             "prank",
-            (
-                _dot(F.col("qv"), F.col("nv"))
-                / (_norm(F.col("qv")) * _norm(F.col("nv")))
-            ).alias("cos"),
+            _cos(F.col("qv"), F.col("nv")).alias("cos"),
         )
     )
     depths = spark.range(1, N_PROBE + 1).select(
@@ -1778,10 +1723,8 @@ def int8_rerank_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            (_dot(F.col("qv"), F.col("v"))
-             / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cos_exact"),
-            (_dot(F.col("qc"), F.col("c"))
-             / (_norm(F.col("qc")) * _norm(F.col("c")))).alias("cos_int8"),
+            _cos(F.col("qv"), F.col("v")).alias("cos_exact"),
+            _cos(F.col("qc"), F.col("c")).alias("cos_int8"),
         )
     )
     we = Window.partitionBy("q_id").orderBy(F.desc("cos_exact"), F.asc("neighbor_id"))
@@ -1905,11 +1848,7 @@ def embedding_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     attachment make the clustering fully deterministic, so even DBSCAN
     is oracle-checked via the recursive label closure."""
     pairs = OPS["dedup_embedding_cosine"].fn(spark, sf_dir).select("vec_a", "vec_b")
-    edges = (
-        pairs.select(F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"))
-        .union(pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst")))
-        .cache()
-    )
+    edges = _undirected(pairs, "vec_a", "vec_b").cache()
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
     cores = deg.filter(F.col("n") >= DENSITY_MIN_NEIGHBORS).select(
         F.col("src").alias("vec_id")
@@ -1923,27 +1862,7 @@ def embedding_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = cores.select(
         F.col("vec_id").alias("node"), F.col("vec_id").alias("comp")
     ).localCheckpoint()
-    prev_sum = labels.agg(F.sum("comp")).collect()[0][0] or 0
-    for _ in range(50):
-        nbr_min = (
-            core_edges.join(labels, core_edges.src == labels.node)
-            .groupBy("dst")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        labels = (
-            labels.join(nbr_min, labels.node == nbr_min.dst, "left")
-            .select(
-                "node",
-                F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("comp")).collect()[0][0] or 0
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError("DBSCAN components did not converge in 50 rounds")
+    labels = _min_label_components(core_edges, labels, "DBSCAN components")
     comp = labels.select(
         F.col("node").alias("vec_id"), F.col("comp").alias("cluster_id")
     )
@@ -2014,8 +1933,7 @@ def hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             F.col("vec_id").alias("neighbor_id"),
             F.col("label").alias("n_label"),
-            (_dot(F.col("qv"), F.col("v")) / (_norm(F.col("qv")) * _norm(F.col("v"))))
-            .alias("cos"),
+            _cos(F.col("qv"), F.col("v")).alias("cos"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -2027,14 +1945,18 @@ def hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CENTROID_OUTLIER_SQL = """
+# Every embedding component as (vec_id, label, dim) and its exact
+# 1e-8-unit integer xm.
+_POS_XM_CTE = """
     WITH pos AS (
         SELECT vec_id, label,
                generate_subscripts(embedding, 1) AS dim,
                CAST(CAST(CAST(unnest(embedding) AS DOUBLE) AS DECIMAL(20,8))
                     * 100000000 AS HUGEINT) AS xm
         FROM embeddings
-    ), cent AS (
+    )"""
+
+_CENTROID_OUTLIER_SQL = f"""{_POS_XM_CTE}, cent AS (
         SELECT label, dim, sum(xm) AS s, count(*) AS n
         FROM pos GROUP BY label, dim
     ), terms AS (
@@ -2444,10 +2366,8 @@ def matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            (_dot(F.col("qv"), F.col("v"))
-             / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cos_full"),
-            (_dot(F.col("qvp"), F.col("vp"))
-             / (_norm(F.col("qvp")) * _norm(F.col("vp")))).alias("cos_prefix"),
+            _cos(F.col("qv"), F.col("v")).alias("cos_full"),
+            _cos(F.col("qvp"), F.col("vp")).alias("cos_prefix"),
         )
     )
     wf = Window.partitionBy("q_id").orderBy(F.desc("cos_full"), F.asc("neighbor_id"))
@@ -2539,8 +2459,7 @@ def retrieval_metrics_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             F.col("label").alias("n_label"),
             "vec_id",
-            (_dot(F.col("qv"), F.col("v"))
-             / (_norm(F.col("qv")) * _norm(F.col("v")))).alias("cos"),
+            _cos(F.col("qv"), F.col("v")).alias("cos"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -2576,14 +2495,7 @@ def retrieval_metrics_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NCC_SQL = f"""
-    WITH pos AS (
-        SELECT vec_id, label,
-               generate_subscripts(embedding, 1) AS dim,
-               CAST(CAST(CAST(unnest(embedding) AS DOUBLE) AS DECIMAL(20,8))
-                    * 100000000 AS HUGEINT) AS xm
-        FROM embeddings
-    ), cent AS (
+_NCC_SQL = f"""{_POS_XM_CTE}, cent AS (
         SELECT label AS cand, dim, sum(xm) AS s,
                CAST(count(*) AS HUGEINT) AS n
         FROM pos GROUP BY label, dim
@@ -2791,18 +2703,7 @@ EMB_CONTAM_THRESHOLD = 0.3  # like EMB_DEDUP_THRESHOLD: this synthetic
 # corpus has no true near-dups, 0.3 exercises the full pipeline;
 # production decontamination sits at ~0.9+.
 
-_EMB_CONTAM_ORACLE = f"""
-WITH corpus AS (
-    SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), buckets AS (
-    SELECT vec_id, v, t.tbl,
-           CASE t.tbl
-                WHEN 0 THEN {_bucket_expr_sql(0)}
-                WHEN 1 THEN {_bucket_expr_sql(1)}
-                ELSE {_bucket_expr_sql(2)}
-           END AS bucket
-    FROM corpus CROSS JOIN (SELECT unnest(range({N_TABLES})) AS tbl) t
-), cand AS (
+_EMB_CONTAM_ORACLE = f"""{_LSH_BUCKETS_CTES}, cand AS (
     SELECT DISTINCT c.vec_id AS doc_vec, b.vec_id AS bench_vec
     FROM buckets c
     JOIN buckets b ON c.tbl = b.tbl AND c.bucket = b.bucket
@@ -2843,19 +2744,7 @@ def benchmark_embedding_contamination(spark: SparkSession, sf_dir: str) -> DataF
     join per snapshot, never corpus x benchmark."""
     e = _t(spark, sf_dir, "embeddings")
     corpus = e.select("vec_id", _as_double(F.col("embedding")).alias("v")).cache()
-    tables = []
-    for t in range(N_TABLES):
-        bucket = sum(
-            (
-                _hyperplane_sign(F.col("v"), t * PLANES_PER_TABLE + p) * (1 << p)
-                for p in range(PLANES_PER_TABLE)
-            ),
-            F.lit(0),
-        ).alias("bucket")
-        tables.append(corpus.select("vec_id", F.lit(t).alias("tbl"), bucket))
-    bucketed = tables[0]
-    for t_df in tables[1:]:
-        bucketed = bucketed.unionByName(t_df)
+    bucketed = _lsh_buckets(corpus, "vec_id")
     docs = bucketed.filter(F.col("vec_id") >= N_BENCH).select(
         F.col("vec_id").alias("doc_vec"), "tbl", "bucket"
     )
@@ -2870,7 +2759,7 @@ def benchmark_embedding_contamination(spark: SparkSession, sf_dir: str) -> DataF
     cc = corpus.select(F.col("vec_id").alias("doc_vec"), F.col("v").alias("vc"))
     cb = corpus.select(F.col("vec_id").alias("bench_vec"), F.col("v").alias("vb"))
     paired = cand.join(cc, "doc_vec").join(F.broadcast(cb), "bench_vec")
-    cos = _dot(F.col("vc"), F.col("vb")) / (_norm(F.col("vc")) * _norm(F.col("vb")))
+    cos = _cos(F.col("vc"), F.col("vb"))
     return (
         paired.withColumn("cos", cos)
         .filter(F.col("cos") >= EMB_CONTAM_THRESHOLD)
@@ -2998,14 +2887,10 @@ def _sd_bucket_sql() -> str:
     )
 
 
-_SEMDEDUP_ORACLE = f"""
-WITH corpus AS MATERIALIZED (
-    SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), seeds AS MATERIALIZED (
-    SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cluster,
-           v AS cv
-    FROM corpus QUALIFY cluster < {KM_K}
-), assigned AS MATERIALIZED (
+# The SemDeDup sketch: nearest-centroid assignment with the centroid
+# cosine, plus the sign-sketch bucket (the oracle side of
+# _semdedup_sketch).
+_SD_SKETCH_CTES = f"""{_KM_SEEDS_CTES}, assigned AS MATERIALIZED (
     SELECT vec_id, v, cluster,
            round(list_cosine_similarity(v, cv), {ROUND_RATIO}) AS cosc
     FROM (
@@ -3018,7 +2903,9 @@ WITH corpus AS MATERIALIZED (
 ), sk AS MATERIALIZED (
     SELECT vec_id, cluster, cosc, v, {_sd_bucket_sql()} AS bucket
     FROM assigned
-), dup_pairs AS (
+)"""
+
+_SEMDEDUP_ORACLE = f"""{_SD_SKETCH_CTES}, dup_pairs AS (
     SELECT a.vec_id AS keep_id, b.vec_id AS drop_id
     FROM sk a JOIN sk b
       ON a.cluster = b.cluster AND a.bucket = b.bucket
@@ -3091,29 +2978,13 @@ def _semdedup_sketch(spark: SparkSession, sf_dir: str):
     1.95s -> 0.78s per isolated action at sf0.1)."""
     e = _t(spark, sf_dir, "embeddings")
     corpus = e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
-    seeds = (
-        corpus.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(KM_K)
-        .collect()
-    )
-    seeds = sorted(seeds, key=lambda r: (r.h, r.vec_id))
-    codebook = [(cl, list(r.v)) for cl, r in enumerate(seeds)]
+    codebook = _md5_codebook(corpus, KM_K)
 
     def _entry(cl: int, cv: list[float]) -> Column:
         lv = F.array(*[F.lit(float(x)) for x in cv])
-        d = F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(F.col("v"), lv, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            ROUND_RATIO,
-        )
+        d = _dist_to(lv)
         cosc = F.round(
-            _dot(F.col("v"), lv) / (_norm(F.col("v")) * _norm(lv)),
+            _cos(F.col("v"), lv),
             ROUND_RATIO,
         )
         return F.struct(d.alias("d"), F.lit(cl).alias("cluster"), cosc.alias("cosc"))
@@ -3150,7 +3021,7 @@ def _semdedup_dominating(sk: DataFrame) -> DataFrame:
         F.col("cosc").alias("b_cosc"), "cluster", "bucket",
     )
     pair_cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb"))),
+        _cos(F.col("va"), F.col("vb")),
         ROUND_RATIO,
     )
     return (
@@ -3169,27 +3040,7 @@ def _semdedup_dominating(sk: DataFrame) -> DataFrame:
 SEMDEDUP_EPS_GRID = (0.1, 0.2, 0.3, 0.5, 0.8)
 _SD_GRID_SQL = ", ".join(f"({e})" for e in SEMDEDUP_EPS_GRID)
 
-_SD_SWEEP_ORACLE = f"""
-WITH corpus AS MATERIALIZED (
-    SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), seeds AS MATERIALIZED (
-    SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cluster,
-           v AS cv
-    FROM corpus QUALIFY cluster < {KM_K}
-), assigned AS MATERIALIZED (
-    SELECT vec_id, v, cluster,
-           round(list_cosine_similarity(v, cv), {ROUND_RATIO}) AS cosc
-    FROM (
-        SELECT c.vec_id, c.v, s.cluster, s.cv,
-               row_number() OVER (PARTITION BY c.vec_id
-                   ORDER BY round(list_distance(c.v, s.cv), {ROUND_RATIO}) ASC,
-                            s.cluster) AS arank
-        FROM corpus c CROSS JOIN seeds s
-    ) WHERE arank = 1
-), sk AS MATERIALIZED (
-    SELECT vec_id, cluster, cosc, v, {_sd_bucket_sql()} AS bucket
-    FROM assigned
-), best AS (
+_SD_SWEEP_ORACLE = f"""{_SD_SKETCH_CTES}, best AS (
     SELECT b.vec_id AS drop_id,
            max(round(list_cosine_similarity(a.v, b.v), {ROUND_RATIO})) AS best_cos
     FROM sk a JOIN sk b

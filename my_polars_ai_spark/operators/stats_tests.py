@@ -112,7 +112,10 @@ def _two_sample_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KS_SQL = f"""
+# Per distinct order total of the 1-URGENT and 5-LOW arms: the counts
+# c1 and c2 (the oracle side of _two_sample_value_counts, open after c2
+# so a consumer can add columns to ``v``).
+_TWO_SAMPLE_CTES = f"""
     WITH g AS (
         SELECT {_CENTS_SQL} AS cents,
                CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS is1
@@ -121,7 +124,9 @@ _KS_SQL = f"""
     ), v AS (
         SELECT cents,
                CAST(sum(is1) AS HUGEINT) AS c1,
-               CAST(count(*) - sum(is1) AS HUGEINT) AS c2
+               CAST(count(*) - sum(is1) AS HUGEINT) AS c2"""
+
+_KS_SQL = f"""{_TWO_SAMPLE_CTES}
         FROM g GROUP BY cents
     ), w AS (
         SELECT sum(c1) OVER (ORDER BY cents) AS cum1,
@@ -172,16 +177,7 @@ def ks_test_priority_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MW_SQL = f"""
-    WITH g AS (
-        SELECT {_CENTS_SQL} AS cents,
-               CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS is1
-        FROM orders
-        WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-    ), v AS (
-        SELECT cents,
-               CAST(sum(is1) AS HUGEINT) AS c1,
-               CAST(count(*) - sum(is1) AS HUGEINT) AS c2,
+_MW_SQL = f"""{_TWO_SAMPLE_CTES},
                CAST(count(*) AS HUGEINT) AS t
         FROM g GROUP BY cents
     ), w AS (
@@ -1265,16 +1261,7 @@ def mde_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Optimal transport: 1-D Wasserstein distance between two arms
 # ---------------------------------------------------------------------------
 
-_W1_SQL = f"""
-    WITH g AS (
-        SELECT {_CENTS_SQL} AS cents,
-               CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS is1
-        FROM orders
-        WHERE o_orderpriority IN ('1-URGENT', '5-LOW')
-    ), v AS (
-        SELECT cents,
-               CAST(sum(is1) AS HUGEINT) AS c1,
-               CAST(count(*) - sum(is1) AS HUGEINT) AS c2
+_W1_SQL = f"""{_TWO_SAMPLE_CTES}
         FROM g GROUP BY cents
     ), w AS (
         SELECT cents,

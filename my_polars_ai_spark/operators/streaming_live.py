@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from my_polars_ai_spark.operators.base import Op, make_registrar
-from my_polars_ai_spark.operators.timeseries import _ORACLE_SUM4
+from my_polars_ai_spark.operators.timeseries import OPS as _TS_OPS, _gap_flag_sql
 
 OPS: dict[str, Op] = {}
 op = make_registrar(OPS)
@@ -33,14 +33,7 @@ op = make_registrar(OPS)
 
 @op(
     "stream_tumbling_counts",
-    oracle=f"""
-    SELECT date_trunc('hour', ts) AS window_start,
-           event_type,
-           count(*) AS n,
-           {_ORACLE_SUM4} AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=None,  # the batch twin's, wired below
     tags=("streaming", "timeseries", "window"),
 )
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,15 +53,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "stream_session_windows",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 10 MINUTE
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
+    oracle=f"""{_gap_flag_sql("user_id, ts, event_id")}, numbered AS (
         SELECT user_id, ts,
                sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
@@ -120,19 +105,7 @@ def stream_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "stream_sliding_counts",
-    oracle=f"""
-    WITH exploded AS (
-        SELECT unnest([
-                   CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT),
-                   CAST(floor(epoch(ts) / 1800) * 1800 - 1800 AS BIGINT)
-               ]) AS window_start_epoch,
-               value
-        FROM events
-    )
-    SELECT window_start_epoch, count(*) AS n, {_ORACLE_SUM4} AS sum_value
-    FROM exploded
-    GROUP BY 1
-    """,
+    oracle=None,  # the batch twin's, wired below
     tags=("streaming", "timeseries", "window", "sliding"),
 )
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -207,6 +180,8 @@ def _wire_shared_oracles() -> None:
         ("stream_gopher_gate", _GOPHER_SQL),
         ("stream_neardup_screen", _INCREMENTAL_MH_SQL),
         ("stream_trained_classifier", _QGD_TRAINED_SQL),
+        ("stream_tumbling_counts", _TS_OPS["tumbling_window_hourly"].oracle),
+        ("stream_sliding_counts", _TS_OPS["sliding_window_1h_30m"].oracle),
     ):
         base = OPS[name]
         OPS[name] = Op(

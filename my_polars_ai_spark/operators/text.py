@@ -856,9 +856,9 @@ def dup_chunk_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op(
-    "unigram_logprob_score",
-    oracle=f"""
+# Every non-empty token's corpus unigram log-probability in integer
+# micro-nats, per document token.
+_UNIGRAM_LP_CTES = """
     WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
     ), f AS (
@@ -871,7 +871,12 @@ def dup_chunk_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT f.doc_id,
                CAST(round(ln(c.c * 1.0 / n.n_total) * 1000000) AS BIGINT) AS lp_micro
         FROM f JOIN c USING (tok) CROSS JOIN n
-    )
+    )"""
+
+
+@op(
+    "unigram_logprob_score",
+    oracle=f"""{_UNIGRAM_LP_CTES}
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_tokens,
            CAST(-sum(lp_micro) AS BIGINT) AS nll_micro,
@@ -1768,7 +1773,9 @@ def psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAM_LM_SQL = f"""
+# Every document's adjacent word pairs (w1, w2), the pair counts c12 and
+# the context counts c1: the oracle side of _doc_bigrams.
+_BIGRAM_CTES = """
     WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS ts FROM documents
     ), bg AS (
@@ -1779,7 +1786,31 @@ _BIGRAM_LM_SQL = f"""
         SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2
     ), c1 AS (
         SELECT w1, count(*) AS c1 FROM bg GROUP BY 1
-    ), v AS (
+    )"""
+
+
+def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, w1, w2) for every adjacent word pair, from slice +
+    arrays_zip: a narrow map, no positional self-join."""
+    d = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("ts")
+    )
+    n = F.size("ts")
+    return (
+        d.filter(n >= 2)
+        .select(
+            "doc_id",
+            F.explode(
+                F.arrays_zip(
+                    F.slice("ts", F.lit(1), n - 1), F.slice("ts", F.lit(2), n - 1)
+                )
+            ).alias("pr"),
+        )
+        .select("doc_id", F.col("pr.0").alias("w1"), F.col("pr.1").alias("w2"))
+    )
+
+
+_BIGRAM_LM_SQL = f"""{_BIGRAM_CTES}, v AS (
         SELECT count(DISTINCT tok) AS v FROM (
             SELECT unnest(string_split(text, ' ')) AS tok FROM documents
         ) WHERE tok <> ''
@@ -1815,22 +1846,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-bounded aggregates that join back by key (AQE broadcasts
     while they fit, hash-joins beyond); micro-nat rounding keeps the
     transcendental portable."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ts")
-    )
-    n = F.size("ts")
-    bg = (
-        d.filter(n >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("ts", F.lit(1), n - 1), F.slice("ts", F.lit(2), n - 1)
-                )
-            ).alias("pr"),
-        )
-        .select("doc_id", F.col("pr.0").alias("w1"), F.col("pr.1").alias("w2"))
-    )
+    bg = _doc_bigrams(spark, sf_dir)
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     toks = (
@@ -2997,13 +3013,16 @@ def intra_doc_halves_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 RRF_K = 60
 _RRF_DEPTH = 50
 
-_RRF_SQL = f"""
-    WITH {_BM25_CTES}, bm AS (
+
+def _two_rankings_sql(depth: int) -> str:
+    """The BM25 ranking r1 and the query-term-density ranking r2, each
+    cut to its top ``depth`` docs (ties to the lower doc_id)."""
+    return f"""{_BM25_CTES}, bm AS (
         {_bm25_scored_sql(f"round({_BM25_SUM_SQL}, 6)")}
     ), r1 AS (
         SELECT doc_id,
                row_number() OVER (ORDER BY score DESC, doc_id ASC) AS r
-        FROM bm QUALIFY r <= {_RRF_DEPTH}
+        FROM bm QUALIFY r <= {depth}
     ), dens AS (
         SELECT tf.doc_id,
                (2 * 1000000 * sum(tf.tf) + dl.dl) // (2 * dl.dl) AS d_micro
@@ -3011,8 +3030,50 @@ _RRF_SQL = f"""
     ), r2 AS (
         SELECT doc_id,
                row_number() OVER (ORDER BY d_micro DESC, doc_id ASC) AS r
-        FROM dens QUALIFY r <= {_RRF_DEPTH}
-    ), fused AS (
+        FROM dens QUALIFY r <= {depth}
+    )"""
+
+
+def _two_rankings(
+    spark: SparkSession, sf_dir: str, depth: int, bm25_rank: str, density_rank: str
+) -> tuple[DataFrame, DataFrame]:
+    """The Spark side of _two_rankings_sql: (doc_id, ``bm25_rank``) and
+    (doc_id, ``density_rank``). Each ranking takes its top ``depth``
+    via orderBy().limit() (TakeOrderedAndProject) before the
+    row_number, so the unpartitioned window runs over ``depth`` rows."""
+    _toks, dl, _stats, tf, _df, raw = _bm25_parts(spark, sf_dir)
+    bm = raw.select("doc_id", F.round("score", 6).alias("score"))
+    w1 = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    r1 = (
+        bm.orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(depth)
+        .withColumn("r", F.row_number().over(w1))
+        .select("doc_id", F.col("r").alias(bm25_rank))
+    )
+    dens = (
+        tf.groupBy("doc_id")
+        .agg(F.sum("tf").alias("stf"))
+        .join(dl, "doc_id")
+        .select(
+            "doc_id",
+            exact_floor_div(
+                2 * 1_000_000 * F.col("stf").cast("decimal(38,0)") + F.col("dl"),
+                2 * F.col("dl").cast("decimal(38,0)"),
+            ).alias("d_micro"),
+        )
+    )
+    w2 = Window.orderBy(F.desc("d_micro"), F.asc("doc_id"))
+    r2 = (
+        dens.orderBy(F.desc("d_micro"), F.asc("doc_id"))
+        .limit(depth)
+        .withColumn("r", F.row_number().over(w2))
+        .select("doc_id", F.col("r").alias(density_rank))
+    )
+    return r1, r2
+
+
+_RRF_SQL = f"""
+    WITH {_two_rankings_sql(_RRF_DEPTH)}, fused AS (
         SELECT coalesce(r1.doc_id, r2.doc_id) AS doc_id,
                r1.r AS r_bm25, r2.r AS r_density,
                coalesce((2 * 1000000 + ({RRF_K} + r1.r))
@@ -3048,34 +3109,7 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and only the resulting <=50-row lists see a row_number (bounded
     single-partition window over DEPTH rows). Final top-20 is again
     TakeOrderedAndProject."""
-    _toks, dl, _stats, tf, _df, raw = _bm25_parts(spark, sf_dir)
-    bm = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w1 = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    r1 = (
-        bm.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(_RRF_DEPTH)
-        .withColumn("r", F.row_number().over(w1))
-        .select("doc_id", F.col("r").alias("r_bm25"))
-    )
-    dens = (
-        tf.groupBy("doc_id")
-        .agg(F.sum("tf").alias("stf"))
-        .join(dl, "doc_id")
-        .select(
-            "doc_id",
-            exact_floor_div(
-                2 * 1_000_000 * F.col("stf").cast("decimal(38,0)") + F.col("dl"),
-                2 * F.col("dl").cast("decimal(38,0)"),
-            ).alias("d_micro"),
-        )
-    )
-    w2 = Window.orderBy(F.desc("d_micro"), F.asc("doc_id"))
-    r2 = (
-        dens.orderBy(F.desc("d_micro"), F.asc("doc_id"))
-        .limit(_RRF_DEPTH)
-        .withColumn("r", F.row_number().over(w2))
-        .select("doc_id", F.col("r").alias("r_density"))
-    )
+    r1, r2 = _two_rankings(spark, sf_dir, _RRF_DEPTH, "r_bm25", "r_density")
 
     def rrf_term(r):
         k_r = (RRF_K + r).cast("decimal(38,0)")
@@ -3402,21 +3436,7 @@ _RBO_W = tuple(round((1 - _RBO_P) * _RBO_P ** (i - 1), 12) for i in range(1, _RB
 _RBO_W_SQL = "[" + ", ".join(repr(w) for w in _RBO_W) + "]"
 
 _RBO_SQL = f"""
-    WITH {_BM25_CTES}, bm AS (
-        {_bm25_scored_sql(f"round({_BM25_SUM_SQL}, 6)")}
-    ), r1 AS (
-        SELECT doc_id,
-               row_number() OVER (ORDER BY score DESC, doc_id ASC) AS r
-        FROM bm QUALIFY r <= {_RBO_DEPTH}
-    ), dens AS (
-        SELECT tf.doc_id,
-               (2 * 1000000 * sum(tf.tf) + dl.dl) // (2 * dl.dl) AS d_micro
-        FROM tf JOIN dl USING (doc_id) GROUP BY tf.doc_id, dl.dl
-    ), r2 AS (
-        SELECT doc_id,
-               row_number() OVER (ORDER BY d_micro DESC, doc_id ASC) AS r
-        FROM dens QUALIFY r <= {_RBO_DEPTH}
-    ), both_m AS (
+    WITH {_two_rankings_sql(_RBO_DEPTH)}, both_m AS (
         SELECT greatest(r1.r, r2.r) AS m
         FROM r1 JOIN r2 USING (doc_id)
     ), depths AS (
@@ -3450,38 +3470,11 @@ def rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy().limit() (distributed TakeOrderedAndProject) before the
     row_number, so the only unpartitioned window runs over <=50 rows —
     never the query-matching corpus subset."""
-    _toks, dl, _stats, tf, _df, raw = _bm25_parts(spark, sf_dir)
-    bm = raw.select("doc_id", F.round("score", 6).alias("score"))
-    w1 = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    r1 = (
-        bm.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(_RBO_DEPTH)
-        .withColumn("r", F.row_number().over(w1))
-        .select("doc_id", F.col("r").alias("ra"))
-    )
-    dens = (
-        tf.groupBy("doc_id")
-        .agg(F.sum("tf").alias("stf"))
-        .join(dl, "doc_id")
-        .select(
-            "doc_id",
-            exact_floor_div(
-                2 * 1_000_000 * F.col("stf").cast("decimal(38,0)") + F.col("dl"),
-                2 * F.col("dl").cast("decimal(38,0)"),
-            ).alias("d_micro"),
-        )
-    )
-    w2 = Window.orderBy(F.desc("d_micro"), F.asc("doc_id"))
-    r2 = (
-        dens.orderBy(F.desc("d_micro"), F.asc("doc_id"))
-        .limit(_RBO_DEPTH)
-        .withColumn("r", F.row_number().over(w2))
-        .select("doc_id", F.col("r").alias("rb"))
-    )
+    r1, r2 = _two_rankings(spark, sf_dir, _RBO_DEPTH, "ra", "rb")
     both_m = r1.join(r2, "doc_id").select(
         F.greatest("ra", "rb").alias("m")
     ).cache()
-    depths = _toks.sparkSession.range(1, _RBO_DEPTH + 1).select(
+    depths = spark.range(1, _RBO_DEPTH + 1).select(
         F.col("id").cast("int").alias("i")
     )
     xd = depths.join(F.broadcast(both_m), F.col("m") <= F.col("i"), "left").groupBy(
@@ -3868,16 +3861,22 @@ def _bpe_round_sql(k: int) -> str:
     )"""
 
 
-_BPE_TRAIN_SQL = (
-    """
+# The BPE word table w0 (each distinct token as parenthesized symbols)
+# and every merge round's CTEs.
+_BPE_ROUNDS_SQL = """
     WITH w0 AS (
         SELECT tok, count(*) AS freq,
                regexp_replace(tok, '(.)', '(\\1)', 'g') AS seq
         FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
         WHERE tok != ''
         GROUP BY tok
-    ), """
-    + ", ".join(_bpe_round_sql(k) for k in range(1, BPE_MERGE_ROUNDS + 1))
+    ), """ + ", ".join(
+    _bpe_round_sql(k) for k in range(1, BPE_MERGE_ROUNDS + 1)
+)
+
+
+_BPE_TRAIN_SQL = (
+    _BPE_ROUNDS_SQL
     + "\n    "
     + "\n    UNION ALL ".join(
         f"SELECT CAST({k} AS INT) AS merge_round, a AS sym_a, b AS sym_b,"
@@ -3971,15 +3970,7 @@ def _bpe_train_state(spark: SparkSession, sf_dir: str):
 
 
 _BPE_ENCODE_SQL = (
-    """
-    WITH w0 AS (
-        SELECT tok, count(*) AS freq,
-               regexp_replace(tok, '(.)', '(\\1)', 'g') AS seq
-        FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        WHERE tok != ''
-        GROUP BY tok
-    ), """
-    + ", ".join(_bpe_round_sql(k) for k in range(1, BPE_MERGE_ROUNDS + 1))
+    _BPE_ROUNDS_SQL
     + f""", pieces AS (
         SELECT tok,
                len(regexp_extract_all(seq, '\\(([^)]*)\\)', 1)) AS np
@@ -4494,18 +4485,7 @@ def repeated_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KN_D = 0.75  # the standard Kneser-Ney absolute discount
 
-_KN_SQL = f"""
-    WITH t AS (
-        SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ), bg AS (
-        SELECT doc_id, ts[i] AS w1, ts[i + 1] AS w2
-        FROM t, unnest(range(1, len(ts))) AS u(i)
-        WHERE len(ts) >= 2
-    ), c12 AS (
-        SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2
-    ), c1 AS (
-        SELECT w1, count(*) AS c1 FROM bg GROUP BY 1
-    ), n1p AS (
+_KN_SQL = f"""{_BIGRAM_CTES}, n1p AS (
         SELECT w1, count(*) AS n1p FROM c12 GROUP BY 1
     ), cont AS (
         SELECT w2, count(*) AS cont FROM c12 GROUP BY 1
@@ -4551,22 +4531,7 @@ def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram to integer micro-nats (identical double expression both
     engines), then per-doc scores are exact integer sums — the
     unigram/bigram LM discipline, one smoothing rung up."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("ts")
-    )
-    n = F.size("ts")
-    bg = (
-        d.filter(n >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("ts", F.lit(1), n - 1), F.slice("ts", F.lit(2), n - 1)
-                )
-            ).alias("pr"),
-        )
-        .select("doc_id", F.col("pr.0").alias("w1"), F.col("pr.1").alias("w2"))
-    )
+    bg = _doc_bigrams(spark, sf_dir)
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")).cache()
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     n1p = c12.groupBy("w1").agg(F.count(F.lit(1)).alias("n1p"))
@@ -4813,20 +4778,7 @@ def isotonic_calibration_pav(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CCNET_SPLIT_SQL = f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ), f AS (
-        SELECT doc_id, tok FROM toks WHERE tok != ''
-    ), c AS (
-        SELECT tok, count(*) AS c FROM f GROUP BY 1
-    ), n AS (
-        SELECT count(*) AS n_total FROM f
-    ), lp AS (
-        SELECT f.doc_id,
-               CAST(round(ln(c.c * 1.0 / n.n_total) * 1000000) AS BIGINT) AS lp_micro
-        FROM f JOIN c USING (tok) CROSS JOIN n
-    ), doc AS (
+_CCNET_SPLIT_SQL = f"""{_UNIGRAM_LP_CTES}, doc AS (
         SELECT doc_id,
                CAST(count(*) AS BIGINT) AS n_tokens,
                {oracle_ratio_round('-sum(lp_micro)', 'count(*)*1000000')} AS avg_nll

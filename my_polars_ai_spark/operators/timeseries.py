@@ -53,6 +53,41 @@ _ORACLE_AVG4 = (
 )
 
 
+def _gap_flag_sql(cols: str) -> str:
+    """``WITH flagged``: ``cols`` of every event plus ``new_session`` = 1
+    where the user's previous event is missing or more than 10 minutes
+    older — the oracle side of ``F.session_window(ts, "10 minutes")``."""
+    return f"""
+    WITH flagged AS (
+        SELECT {cols},
+               CASE WHEN lag(ts) OVER w IS NULL
+                         OR ts - lag(ts) OVER w > INTERVAL 10 MINUTE
+                    THEN 1 ELSE 0 END AS new_session
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    )"""
+
+
+# The flagged events numbered by their running session id ``sid``,
+_SESSION_SID_CTES = _gap_flag_sql("user_id, ts, event_id") + """, numbered AS (
+        SELECT user_id, ts,
+               sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                      ROWS BETWEEN UNBOUNDED PRECEDING
+                                      AND CURRENT ROW) AS sid
+        FROM flagged
+    )"""
+# ... and each session's [s_start, s_end) as +1/-1 boundaries.
+_SESSION_BOUNDS_CTES = _SESSION_SID_CTES + """, sessions AS (
+        SELECT user_id, sid, min(ts) AS s_start,
+               max(ts) + INTERVAL 10 MINUTE AS s_end
+        FROM numbered GROUP BY user_id, sid
+    ), bounds AS (
+        SELECT s_start AS ts, 1 AS delta FROM sessions
+        UNION ALL
+        SELECT s_end, -1 FROM sessions
+    )"""
+
+
 def _sum4_value():
     return F.round(F.sum(F.col("value").cast(_DEC)), 4).cast("double")
 
@@ -127,15 +162,7 @@ def sliding_window_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "session_window_10m",
-    oracle=f"""
-    WITH flagged AS (
-        SELECT user_id, ts, value, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 10 MINUTE
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
+    oracle=f"""{_gap_flag_sql("user_id, ts, value, event_id")}, numbered AS (
         SELECT user_id, ts, value,
                sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
@@ -283,9 +310,8 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op(
-    "retention_cohorts",
-    oracle="""
+# Each user's first-activity week and every week they were active.
+_COHORT_CTES = """
     WITH firsts AS (
         SELECT user_id,
                CAST(date_trunc('week', min(CAST(ts AS DATE))) AS DATE) AS cohort_week
@@ -294,7 +320,25 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT DISTINCT user_id,
                CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS active_week
         FROM events
+    )"""
+
+
+def _cohort_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The Spark side of _COHORT_CTES: (user_id, cohort_week) and the
+    distinct (user_id, active_week) rows."""
+    e = _t(spark, sf_dir, "events")
+    firsts = e.groupBy("user_id").agg(
+        F.date_trunc("week", F.min(F.to_date("ts"))).cast("date").alias("cohort_week")
     )
+    activity = e.select(
+        "user_id", F.date_trunc("week", F.to_date("ts")).cast("date").alias("active_week")
+    ).distinct()
+    return firsts, activity
+
+
+@op(
+    "retention_cohorts",
+    oracle=f"""{_COHORT_CTES}
     SELECT f.cohort_week,
            CAST(datediff('day', f.cohort_week, a.active_week) // 7 AS INTEGER)
                AS week_offset,
@@ -311,13 +355,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct active weeks) joined back on the same key, so the second
     shuffle co-locates with the first; offsets are integer day arithmetic
     (both engines truncate weeks to ISO Monday)."""
-    e = _t(spark, sf_dir, "events")
-    firsts = e.groupBy("user_id").agg(
-        F.date_trunc("week", F.min(F.to_date("ts"))).cast("date").alias("cohort_week")
-    )
-    activity = e.select(
-        "user_id", F.date_trunc("week", F.to_date("ts")).cast("date").alias("active_week")
-    ).distinct()
+    firsts, activity = _cohort_frames(spark, sf_dir)
     return (
         activity.join(firsts, "user_id")
         .groupBy(
@@ -456,21 +494,7 @@ def rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "session_bounce_rate",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 10 MINUTE
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-        SELECT user_id, ts,
-               sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW) AS sid
-        FROM flagged
-    ), sessions AS (
+    oracle=f"""{_SESSION_SID_CTES}, sessions AS (
         SELECT user_id, sid,
                CAST(date_trunc('day', min(ts)) AS DATE) AS day,
                count(*) AS n_events
@@ -514,15 +538,7 @@ PATH_MAX_EVENTS = 5
 
 @op(
     "session_path_counts",
-    oracle=f"""
-    WITH flagged AS (
-        SELECT user_id, ts, event_id, event_type,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 10 MINUTE
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
+    oracle=f"""{_gap_flag_sql("user_id, ts, event_id, event_type")}, numbered AS (
         SELECT user_id, ts, event_id, event_type,
                sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                       ROWS BETWEEN UNBOUNDED PRECEDING
@@ -735,31 +751,27 @@ def volume_spike_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hourly_session_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ts, delta, bucket): +1 at every 10-minute-gap session's start and
+    -1 at its end, with the hour bucket of the boundary (the Spark side
+    of _SESSION_BOUNDS_CTES, bucketed for the two-pass prefix sum)."""
+    sessions = (
+        _t(spark, sf_dir, "events")
+        .groupBy("user_id", F.session_window("ts", "10 minutes").alias("sw"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("sw.start").alias("s_start"), F.col("sw.end").alias("s_end"))
+    )
+    bounds = sessions.select(
+        F.col("s_start").alias("ts"), F.lit(1).alias("delta")
+    ).unionByName(
+        sessions.select(F.col("s_end").alias("ts"), F.lit(-1).alias("delta"))
+    )
+    return bounds.withColumn("bucket", F.date_trunc("hour", "ts"))
+
+
 @op(
     "max_concurrent_sessions",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 10 MINUTE
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-        SELECT user_id, ts,
-               sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW) AS sid
-        FROM flagged
-    ), sessions AS (
-        SELECT user_id, sid, min(ts) AS s_start,
-               max(ts) + INTERVAL 10 MINUTE AS s_end
-        FROM numbered GROUP BY user_id, sid
-    ), bounds AS (
-        SELECT s_start AS ts, 1 AS delta FROM sessions
-        UNION ALL
-        SELECT s_end, -1 FROM sessions
-    ), running AS (
+    oracle=f"""{_SESSION_BOUNDS_CTES}, running AS (
         SELECT ts,
                sum(delta) OVER (ORDER BY ts, delta
                                 ROWS BETWEEN UNBOUNDED PRECEDING
@@ -784,18 +796,7 @@ def max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-scale data. Boundary tie rule: ends sort before starts at the
     same instant (delta ascending), so back-to-back sessions never
     double-count."""
-    sessions = (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id", F.session_window("ts", "10 minutes").alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("sw.start").alias("s_start"), F.col("sw.end").alias("s_end"))
-    )
-    bounds = sessions.select(
-        F.col("s_start").alias("ts"), F.lit(1).alias("delta")
-    ).unionByName(
-        sessions.select(F.col("s_end").alias("ts"), F.lit(-1).alias("delta"))
-    )
-    bucketed = bounds.withColumn("bucket", F.date_trunc("hour", "ts"))
+    bucketed = _hourly_session_bounds(spark, sf_dir)
     # pass 1: one delta-sum per bucket; running OFFSET over the bounded
     # bucket table (exclusive frame: offset = everything before my bucket)
     per_bucket = bucketed.groupBy("bucket").agg(F.sum("delta").alias("bsum"))
@@ -1067,16 +1068,7 @@ def dow_adjusted_spike_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LN2 = 0.6931471805599453  # literal on BOTH sides — never engine ln(2)
 
-_RETENTION_FIT_SQL = f"""
-    WITH firsts AS (
-        SELECT user_id,
-               CAST(date_trunc('week', min(CAST(ts AS DATE))) AS DATE) AS cohort_week
-        FROM events GROUP BY user_id
-    ), activity AS (
-        SELECT DISTINCT user_id,
-               CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS active_week
-        FROM events
-    ), ret AS (
+_RETENTION_FIT_SQL = f"""{_COHORT_CTES}, ret AS (
         SELECT f.cohort_week,
                CAST(datediff('day', f.cohort_week, a.active_week) // 7 AS INTEGER)
                    AS x,
@@ -1123,13 +1115,7 @@ def retention_halflife_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-life derives from the ALREADY-ROUNDED slope with a literal
     ln2 on both engines — so even a curve fit hash-matches. Composes
     retention_cohorts; aggregations stay on the cohort grid."""
-    e = _t(spark, sf_dir, "events")
-    firsts = e.groupBy("user_id").agg(
-        F.date_trunc("week", F.min(F.to_date("ts"))).cast("date").alias("cohort_week")
-    )
-    activity = e.select(
-        "user_id", F.date_trunc("week", F.to_date("ts")).cast("date").alias("active_week")
-    ).distinct()
+    firsts, activity = _cohort_frames(spark, sf_dir)
     ret = (
         activity.join(firsts, "user_id")
         .groupBy(
@@ -1545,7 +1531,9 @@ def churn_week_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KM_SQL = """
+# Per churn week (the week of a customer's last order): churned d and
+# at-risk r — the textbook cross-join statement of churn_week_counts.
+_CHURN_COUNTS_CTES = """
     WITH cust AS (
         SELECT o_custkey,
                CAST(date_trunc('week', min(CAST(o_orderdate AS DATE))) AS DATE)
@@ -1562,7 +1550,9 @@ _KM_SQL = """
                         THEN 1 ELSE 0 END) AS r
         FROM weeks w CROSS JOIN cust c
         GROUP BY w.w
-    ), f AS (
+    )"""
+
+_KM_SQL = f"""{_CHURN_COUNTS_CTES}, f AS (
         SELECT w, d, r,
                CASE WHEN r > d
                     THEN CAST(round(ln((r - d) * 1.0 / r) * 1000000) AS BIGINT)
@@ -1621,24 +1611,7 @@ def kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NA_SQL = """
-    WITH cust AS (
-        SELECT o_custkey,
-               CAST(date_trunc('week', min(CAST(o_orderdate AS DATE))) AS DATE)
-                   AS first_w,
-               CAST(date_trunc('week', max(CAST(o_orderdate AS DATE))) AS DATE)
-                   AS last_w
-        FROM orders GROUP BY 1
-    ), weeks AS (
-        SELECT DISTINCT last_w AS w FROM cust
-    ), counts AS (
-        SELECT w.w,
-               sum(CASE WHEN c.last_w = w.w THEN 1 ELSE 0 END) AS d,
-               sum(CASE WHEN c.first_w <= w.w AND c.last_w >= w.w
-                        THEN 1 ELSE 0 END) AS r
-        FROM weeks w CROSS JOIN cust c
-        GROUP BY w.w
-    ), f AS (
+_NA_SQL = f"""{_CHURN_COUNTS_CTES}, f AS (
         SELECT w, d, r,
                (2*1000000*CAST(d AS HUGEINT) + r) // (2*CAST(r AS HUGEINT))
                    AS hz_micro,
@@ -2057,29 +2030,7 @@ def dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "concurrency_duration_profile",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 10 MINUTE
-                    THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-        SELECT user_id, ts,
-               sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                      ROWS BETWEEN UNBOUNDED PRECEDING
-                                      AND CURRENT ROW) AS sid
-        FROM flagged
-    ), sessions AS (
-        SELECT user_id, sid, min(ts) AS s_start,
-               max(ts) + INTERVAL 10 MINUTE AS s_end
-        FROM numbered GROUP BY user_id, sid
-    ), bounds AS (
-        SELECT s_start AS ts, 1 AS delta FROM sessions
-        UNION ALL
-        SELECT s_end, -1 FROM sessions
-    ), running AS (
+    oracle=f"""{_SESSION_BOUNDS_CTES}, running AS (
         SELECT sum(delta) OVER (ORDER BY ts, delta
                                 ROWS BETWEEN UNBOUNDED PRECEDING
                                 AND CURRENT ROW) AS live,
@@ -2107,18 +2058,7 @@ def concurrency_duration_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-scale rows. Durations are exact integer microseconds;
     zero-length states from tied boundaries contribute 0 to every
     level, so tie order cannot change any total."""
-    sessions = (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id", F.session_window("ts", "10 minutes").alias("sw"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("sw.start").alias("s_start"), F.col("sw.end").alias("s_end"))
-    )
-    bounds = sessions.select(
-        F.col("s_start").alias("ts"), F.lit(1).alias("delta")
-    ).unionByName(
-        sessions.select(F.col("s_end").alias("ts"), F.lit(-1).alias("delta"))
-    )
-    bucketed = bounds.withColumn("bucket", F.date_trunc("hour", "ts"))
+    bucketed = _hourly_session_bounds(spark, sf_dir)
     per_bucket = bucketed.groupBy("bucket").agg(
         F.sum("delta").alias("bsum"), F.min("ts").alias("bmin")
     )
@@ -2372,9 +2312,13 @@ def twap_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Markov matrix power: 3-step reach probability via relational matmul
 # ---------------------------------------------------------------------------
 
-_MK3_SQL = """
+def _transition_sql(cols: str) -> str:
+    """``WITH o``: ``cols`` of every event plus the user's previous
+    event type; then the (a -> b) transition counts ``c`` and each
+    source's row total ``r``."""
+    return f"""
     WITH o AS (
-        SELECT user_id, event_type,
+        SELECT {cols},
                lag(event_type) OVER (PARTITION BY user_id
                                      ORDER BY ts, event_id) AS prev_type
         FROM events
@@ -2384,7 +2328,10 @@ _MK3_SQL = """
         FROM o WHERE prev_type IS NOT NULL GROUP BY 1, 2
     ), r AS (
         SELECT a, sum(n) AS rt FROM c GROUP BY 1
-    ), p AS (
+    )"""
+
+
+_MK3_SQL = f"""{_transition_sql("user_id, event_type")}, p AS (
         SELECT c.a, c.b, (2 * 1000000 * c.n + r.rt) // (2 * r.rt) AS pm
         FROM c JOIN r USING (a)
     ), p2 AS (
@@ -2436,19 +2383,7 @@ def markov_3step_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MKH_SQL = """
-    WITH o AS (
-        SELECT event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_type
-        FROM events
-    ), c AS (
-        SELECT prev_type AS a, event_type AS b,
-               CAST(count(*) AS HUGEINT) AS n
-        FROM o WHERE prev_type IS NOT NULL GROUP BY 1, 2
-    ), r AS (
-        SELECT a, sum(n) AS rt FROM c GROUP BY 1
-    ), term AS (
+_MKH_SQL = f"""{_transition_sql("event_type")}, term AS (
         SELECT c.n,
                -CAST(round(ln(CAST(c.n AS DOUBLE) / CAST(r.rt AS DOUBLE))
                            * 1000000) AS BIGINT) AS nl

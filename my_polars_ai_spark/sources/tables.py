@@ -5,9 +5,11 @@ partitioned/bucketed tables behind a catalog, but the access pattern is
 identical: ``spark.read.parquet`` with Catalyst doing column pruning and
 predicate pushdown into the scan.
 
-``DIM_TABLES`` marks relations that stay small at any scale factor
-(region/nation are fixed-cardinality; supplier grows slowly) — joins
-against them should broadcast, never shuffle the fact side.
+``DIM_TABLES`` marks relations that stay small at any scale factor:
+region and nation are fixed-cardinality (5 and 25 rows), so joins
+against them should broadcast, never shuffle the fact side. supplier
+is not one of them: it has 10,000 rows per scale factor (10 at sf0.001,
+1,000 at sf0.1, about 10^9 at 100 TB).
 """
 
 from __future__ import annotations
@@ -29,8 +31,8 @@ TABLES = (
     "embeddings",
 )
 
-# Fixed/slow-growing cardinality at any SF -> always broadcast-join these.
-DIM_TABLES = frozenset({"region", "nation", "supplier"})
+# Fixed cardinality at any SF -> always broadcast-join these.
+DIM_TABLES = frozenset({"region", "nation"})
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -71,8 +73,16 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _table_handle(spark: SparkSession, sf_dir: str, name: str):
     """One read per (session, sf_dir, table) while the file stamp holds:
     the listing and the footer schema inference run once, not on every
-    op build."""
-    record_read(f"{sf_dir}/{name}.parquet")
+    op build.
+
+    The fill first refreshes every cache entry over the file. An op
+    that ``.cache()``s a frame outside a session memo leaves a
+    CacheManager entry that nothing unpersists, and Spark matches the
+    rebuilt plan to that entry by path, so after a rewrite it would
+    serve the old file's rows."""
+    path = f"{sf_dir}/{name}.parquet"
+    record_read(path)
+    spark.catalog.refreshByPath(path)
     return _read(spark, sf_dir, name), ()
 
 
@@ -86,8 +96,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
     session returns the SAME DataFrame with no listing and no schema-inference job (~95 ms per read at
     sf0.1 on 4 cores); a rewritten or extended table gets a fresh read,
     and the superseded handle is dropped. A path that cannot be stamped
-    (a remote URI, a missing table) is read on every call. The session
+    (a remote URI, a missing table) is read, and its cache entries
+    refreshed, on every call. The session
     conf pins below run on every call, hit or miss.
+
+    A fresh read first refreshes the CacheManager entries over the file
+    (``spark.catalog.refreshByPath``), so no ``.cache()``d frame serves
+    a rewritten table's old rows. The CacheManager is shared by every
+    session of the SparkContext: a first load in a new session also
+    refreshes other live sessions' entries over that path, and each of
+    those entries refills once, lazily, on its next use.
 
     ``spread`` is decided per call, on top of the shared read: a parquet
     scan splits a file into byte ranges of at most

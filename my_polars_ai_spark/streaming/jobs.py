@@ -37,21 +37,23 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Run the streaming query to completion over the available files and
-    return the materialized result as a batch DataFrame."""
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
+def _run_available(writer) -> None:
+    """Start the configured stream ``writer`` on everything available
+    now and block until the query has drained it."""
+    q = writer.trigger(availableNow=True).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Run the streaming query to completion over the available files and
+    return the materialized result as a batch DataFrame."""
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    _run_available(
+        stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    )
     return stream_df.sparkSession.table(name)
 
 
@@ -453,16 +455,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str, store_dir: str)
             json.dump({"current": f"epoch={batch_id}"}, fh)
         os.replace(tmp, os.path.join(store_dir, "_POINTER.json"))
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _run_available(agg.writeStream.outputMode("complete").foreachBatch(upsert))
 
     with open(os.path.join(store_dir, "_POINTER.json")) as fh:
         current = json.load(fh)["current"]
@@ -521,16 +514,7 @@ def stream_manifest_ingest(spark: SparkSession, sf_dir: str, table_dir: str) -> 
             mode="append", commit_id=batch_id,
         )
 
-    q = (
-        bucketed.writeStream.outputMode("append")
-        .foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _run_available(bucketed.writeStream.outputMode("append").foreachBatch(ingest))
     return state.get("manifest", {})
 
 
@@ -579,16 +563,11 @@ def stream_dlq_split(
             .parquet(os.path.join(store_dir, "dlq", f"epoch={batch_id}"))
         )
 
-    q = (
-        events.writeStream.foreachBatch(split)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(store_dir, "_chk"))
-        .start()
+    _run_available(
+        events.writeStream.foreachBatch(split).option(
+            "checkpointLocation", os.path.join(store_dir, "_chk")
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     main = spark.read.parquet(os.path.join(store_dir, "main", "epoch=*"))
     dlq = spark.read.parquet(os.path.join(store_dir, "dlq", "epoch=*"))
     return main, dlq
@@ -648,11 +627,10 @@ def stream_neardup_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         MINHASH_THRESHOLD,
         N_BANDS,
         N_PERMS,
+        _band_structs,
         _doc_tokens,
         portable_hash60,
     )
-
-    rows_per_band = N_PERMS // N_BANDS
 
     # ---- static corpus index (at 100 TB: a maintained table, not a
     # recompute; parquet is the only persisted state in this harness) --
@@ -665,21 +643,7 @@ def stream_neardup_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("nb"),
         F.array_sort(F.collect_set("tok")).alias("toks_b"),
     )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{i}").cast("string")
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            ).alias("band_sig"),
-        )
-        for b in range(N_BANDS)
-    ]
+    band_structs = _band_structs(N_PERMS, N_BANDS)
     corpus_index = (
         sig.select(
             F.col("doc_id").alias("doc_old"),
@@ -744,15 +708,7 @@ def stream_neardup_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         results.extend(out.collect())
 
-    q = (
-        new_bands.writeStream.foreachBatch(_screen)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _run_available(new_bands.writeStream.foreachBatch(_screen))
     return spark.createDataFrame(
         results, "doc_id bigint, n_dup_partners bigint, best_jaccard double"
     )

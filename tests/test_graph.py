@@ -7,9 +7,9 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+from my_polars_ai_spark.operators.dedup import _neardup_edges
 from my_polars_ai_spark.operators.graph import (
     BLAST_HOPS,
-    _edges,
     contamination_blast_radius,
     neardup_adamic_adar,
     neardup_label_consistency,
@@ -19,7 +19,7 @@ from my_polars_ai_spark.operators.text import benchmark_contamination
 
 def _adj(spark, sf_dir):
     adj = defaultdict(set)
-    for r in _edges(spark, sf_dir).collect():
+    for r in _neardup_edges(spark, sf_dir).collect():
         adj[r.src].add(r.dst)
     return adj
 
