@@ -115,7 +115,7 @@ def auc_langid_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band",
         F.coalesce(F.sum("bt").over(w_off), F.lit(0).cast(_D38)).alias("off"),
     )
-    w = v.join(F.broadcast(offsets), "band").select(
+    w = v.join(offsets, "band").select(
         "c1",
         "c2",
         "t",
@@ -379,8 +379,8 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
     )
     contrib = (
-        tokm.crossJoin(F.broadcast(langs))
-        .crossJoin(F.broadcast(gl))
+        tokm.crossJoin(langs)
+        .crossJoin(gl)
         .join(
             tl.withColumnRenamed("lang", "cand"),
             ["tok", "cand"],
@@ -394,8 +394,8 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     base = (
         d.select("doc_id", F.col("lang").alias("actual_lang"))
-        .crossJoin(F.broadcast(langs))
-        .crossJoin(F.broadcast(gl))
+        .crossJoin(langs)
+        .crossJoin(gl)
         .join(contrib, ["doc_id", "cand"], "left")
         .select(
             "doc_id",
@@ -486,7 +486,7 @@ def decision_stump_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band",
         F.sum("p").over(wc).alias("pl"),
         F.sum("q").over(wc).alias("ql"),
-    ).crossJoin(F.broadcast(tot))
+    ).crossJoin(tot)
     pl, ql = F.col("pl"), F.col("ql")
     pr, qr = F.col("pt") - pl, F.col("qt") - ql
     nl, nr = pl + ql, pr + qr
@@ -994,8 +994,8 @@ def ipf_raking_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").alias("nn"), F.countDistinct("lang").cast(_D38).alias("l")
     )
     return (
-        cell.join(F.broadcast(marg), "lang")
-        .crossJoin(F.broadcast(tot))
+        cell.join(marg, "lang")
+        .crossJoin(tot)
         .select(
             "lang",
             "source",
@@ -1084,7 +1084,7 @@ def binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("hi").alias("qhi"),
     )
     scored = (
-        code.crossJoin(F.broadcast(q))
+        code.crossJoin(q)
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -1158,8 +1158,8 @@ def qi_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
     c = (
-        cu.join(F.broadcast(n), cu.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        cu.join(n, cu.c_nationkey == n.n_nationkey)
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("n_name", "r_name", "segment")
     )
     k0 = c.groupBy("n_name", "r_name", "segment").agg(
@@ -1274,7 +1274,7 @@ def ucb1_variant_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     bonus = F.sqrt(
         2.0 * F.col("ln_nn_micro") / (1000000.0 * F.col("n").cast("double"))
     )
-    return v.crossJoin(F.broadcast(t)).select(
+    return v.crossJoin(t).select(
         "event_type",
         F.col("n").cast("long").alias("n"),
         F.col("wins").cast("long").alias("wins"),
@@ -1419,7 +1419,7 @@ def woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bi").alias("bt"),
         F.count(F.lit(1)).cast(_D38).alias("nb"),
     )
-    w = b.crossJoin(F.broadcast(t))
+    w = b.crossJoin(t)
     mn_g = F.round(
         F.log((F.col("gi").cast("double") + 1.0) / (F.col("gt") + F.col("nb")).cast("double"))
         * 1_000_000
@@ -1513,7 +1513,7 @@ def stratified_ate_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = ok.agg(F.sum("nb").alias("n_total"))
     eff_num = F.col("st") * F.col("nc") - F.col("sc") * F.col("nt")
-    return ok.crossJoin(F.broadcast(t)).select(
+    return ok.crossJoin(t).select(
         F.col("band").cast("long").alias("band"),
         F.col("nt").cast("long").alias("n_treated"),
         F.col("nc").cast("long").alias("n_control"),
@@ -1562,7 +1562,7 @@ def suppressed_release_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cell = (
-        cu.join(F.broadcast(n), cu.c_nationkey == n.n_nationkey)
+        cu.join(n, cu.c_nationkey == n.n_nationkey)
         .groupBy("n_name", F.col("c_mktsegment").alias("segment"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1631,8 +1631,8 @@ def ess_after_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").alias("nn"), F.countDistinct("lang").cast(_D38).alias("l")
     )
     w = (
-        cell.join(F.broadcast(marg), "lang")
-        .crossJoin(F.broadcast(tot))
+        cell.join(marg, "lang")
+        .crossJoin(tot)
         .select(
             "n",
             exact_floor_div(
@@ -1852,7 +1852,7 @@ def corpus_health_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("nl").cast("double") / F.col("n").cast("double")) * 1_000_000
     ).cast("long").cast(_D38)
     lent = (
-        langs.crossJoin(F.broadcast(lt))
+        langs.crossJoin(lt)
         .agg(
             F.sum(F.col("nl") * (-mn)).alias("ent_num"),
             F.max("n").alias("n"),
@@ -1861,14 +1861,14 @@ def corpus_health_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     srcs = d.groupBy("source").agg(F.count(F.lit(1)).cast(_D38).alias("ns"))
     st = srcs.agg(F.sum("ns").alias("n"))
     hhi = (
-        srcs.crossJoin(F.broadcast(st))
+        srcs.crossJoin(st)
         .agg(F.sum(F.col("ns") * F.col("ns")).alias("ss"), F.max("n").alias("n"))
     )
     toks = d.agg(F.sum("n_tok").cast("long").alias("n_tokens"))
     return (
-        dup.crossJoin(F.broadcast(lent))
-        .crossJoin(F.broadcast(hhi.select(F.col("ss"), F.col("n").alias("hn"))))
-        .crossJoin(F.broadcast(toks))
+        dup.crossJoin(lent)
+        .crossJoin(hhi.select(F.col("ss"), F.col("n").alias("hn")))
+        .crossJoin(toks)
         .select(
             F.col("n_all").cast("long").alias("n_docs"),
             "n_tokens",
@@ -2136,7 +2136,7 @@ def caliper_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("pri") == "1-URGENT", F.col("lead")).otherwise(0)).cast(_D38).alias("st"),
         F.sum(F.when(F.col("pri") == "5-LOW", F.col("lead")).otherwise(0)).cast(_D38).alias("sc"),
     )
-    return tots.crossJoin(F.broadcast(m)).select(
+    return tots.crossJoin(m).select(
         "n_treated",
         "n_control",
         "n_matched",
@@ -2305,7 +2305,7 @@ def quality_classifier_gd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = spark.range(QGD_DIM).select(F.col("id").cast("bigint").alias("b"))
     j = (
         spine.join(F.broadcast(grad), "b", "left")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             F.col("b"),
             F.coalesce(F.col("n_tokens"), F.lit(0)).cast("bigint").alias("n_tokens"),
@@ -2641,7 +2641,7 @@ def _qgd_update(w: DataFrame, g: DataFrame, n: DataFrame) -> DataFrame:
     weight."""
     return (
         w.join(g, "b", "left")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "b",
             (
@@ -2783,7 +2783,7 @@ def qgd_weights_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("model_md5")
     )
-    return rec.crossJoin(F.broadcast(model)).select(
+    return rec.crossJoin(model).select(
         "b",
         "w_micro",
         F.md5(
@@ -2940,7 +2940,7 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     pe = sa * sb + (n - sa) * (n - sb)
     num = n * agr - pe
     den = n * n - pe
-    return pairs.crossJoin(F.broadcast(s)).select(
+    return pairs.crossJoin(s).select(
         "filter_a",
         "filter_b",
         n.cast("bigint").alias("n_docs"),

@@ -866,8 +866,8 @@ def near_dup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from my_polars_ai_spark.operators.base import exact_floor_div
 
     return (
-        agg.crossJoin(F.broadcast(tri))
-        .crossJoin(F.broadcast(n_edges))
+        agg.crossJoin(tri)
+        .crossJoin(n_edges)
         .select(
             "n_nodes",
             "n_edges",
@@ -1210,7 +1210,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Document frequency per token: vocab-bounded, broadcast back onto
     # the (doc, token) pairs to order each doc's tokens rare-first.
     df_tab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    ranked = toks.join(F.broadcast(df_tab), "tok")
+    ranked = toks.join(df_tab, "tok")
     arrs = ranked.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(F.struct("df", "tok"))).alias("ts"),
         F.count(F.lit(1)).alias("n"),
@@ -1526,7 +1526,7 @@ def neardup_pair_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared = (
         pairs.join(ta, "doc_a")
         .join(tb, ["doc_b", "tok"])
-        .join(F.broadcast(df_tab), "tok")
+        .join(df_tab, "tok")
     )
     w = Window.partitionBy("doc_a", "doc_b").orderBy(F.asc("df"), F.asc("tok"))
     return (

@@ -480,7 +480,7 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").alias("total"), F.count(F.lit(1)).alias("n_keys")
     )
     return (
-        counts.crossJoin(F.broadcast(tot))
+        counts.crossJoin(tot)
         .select(
             "l_suppkey",
             "n",
@@ -527,7 +527,7 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
     med = e.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("med"))
     mad = (
-        e.join(F.broadcast(med), "event_type")
+        e.join(med, "event_type")
         .groupBy("event_type", "med")
         .agg(F.expr("percentile(abs(value - med), 0.5)").alias("mad"))
     )
@@ -726,7 +726,7 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hits = (
         probe.join(
-            F.broadcast(bitmap),
+            bitmap,
             (F.col("bitpos") / 63).cast("bigint") == F.col("word"),
             "left",
         )
@@ -747,17 +747,17 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     passed = hits.filter(F.col("n_set") == BLOOM_K).select("l_partkey")
     n_probed = li.agg(F.count(F.lit(1)).alias("n_probed"))
     n_pass = (
-        li.join(F.broadcast(passed), "l_partkey", "leftsemi")
+        li.join(passed, "l_partkey", "leftsemi")
         .agg(F.count(F.lit(1)).alias("n_bloom_pass"))
     )
     n_true = (
         _t(spark, sf_dir, "lineitem")
-        .join(F.broadcast(keys), F.col("l_partkey") == F.col("key"), "leftsemi")
+        .join(keys, F.col("l_partkey") == F.col("key"), "leftsemi")
         .agg(F.count(F.lit(1)).alias("n_true"))
     )
     return (
-        n_probed.crossJoin(F.broadcast(n_pass))
-        .crossJoin(F.broadcast(n_true))
+        n_probed.crossJoin(n_pass)
+        .crossJoin(n_true)
         .select(
             "n_probed",
             "n_bloom_pass",
@@ -1006,7 +1006,7 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     checks = [
         metric(
-            o.join(F.broadcast(c.select("c_custkey")),
+            o.join(c.select("c_custkey"),
                    o.o_custkey == c.c_custkey, "left_anti"),
             "orders", "orphan_custkey"),
         metric(
@@ -1014,11 +1014,11 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     li.l_orderkey == o.o_orderkey, "left_anti"),
             "lineitem", "orphan_orderkey"),
         metric(
-            li.join(F.broadcast(p.select("p_partkey")),
+            li.join(p.select("p_partkey"),
                     li.l_partkey == p.p_partkey, "left_anti"),
             "lineitem", "orphan_partkey"),
         metric(
-            li.join(F.broadcast(s.select("s_suppkey")),
+            li.join(s.select("s_suppkey"),
                     li.l_suppkey == s.s_suppkey, "left_anti"),
             "lineitem", "orphan_suppkey"),
         metric(
@@ -1424,7 +1424,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = o.select(F.substring(cents.cast("string"), 1, 1).alias("digit"))
     tot = d.agg(F.count(F.lit(1)).alias("n"))
     return (
-        d.crossJoin(F.broadcast(tot))
+        d.crossJoin(tot)
         .groupBy("digit")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -1483,7 +1483,7 @@ def wow_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         signed_ratio_round(cur_c - prev_c, prev_c)
     )
     return cur.join(
-        F.broadcast(prev), F.col("prev.day") == F.date_sub(F.col("cur.day"), 7), "left"
+        prev, F.col("prev.day") == F.date_sub(F.col("cur.day"), 7), "left"
     ).select(
         F.col("cur.day").alias("day"),
         F.col("cur.rev_cents").alias("rev_cents"),
@@ -1542,7 +1542,7 @@ def hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_custkey").alias("node"),
             exact_floor_div(F.col("c_custkey"), F.lit(10)).cast("long").alias("parent"),
         )
-        .join(F.broadcast(nodes), F.col("parent") == F.col("pnode"), "left")
+        .join(nodes, F.col("parent") == F.col("pnode"), "left")
         .select("node", "parent", F.col("pnode").isNotNull().alias("has_parent"))
     )
     state = c.select(
@@ -1652,7 +1652,7 @@ def sketch_merge_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     days = ud.select("day").distinct()
     words = spark.range(SKETCH_WORDS).select(F.col("id").cast("int").alias("word"))
-    grid = days.crossJoin(F.broadcast(words))
+    grid = days.crossJoin(words)
     cum = grid.join(daily, ["day", "word"], "left").select(
         "day", "word",
         F.bit_or("w").over(
@@ -1724,10 +1724,10 @@ def cascade_delete_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_hash60(F.concat(F.lit("del:"), F.col("c_custkey").cast("string"))) % 20 == 0
     )
     del_orders = o.join(
-        F.broadcast(del_cust), o.o_custkey == del_cust.c_custkey, "leftsemi"
+        del_cust, o.o_custkey == del_cust.c_custkey, "leftsemi"
     ).select("o_orderkey")
     del_li = li.join(del_orders, li.l_orderkey == del_orders.o_orderkey, "leftsemi")
-    del_ev = e.join(F.broadcast(del_cust), e.user_id == del_cust.c_custkey, "leftsemi")
+    del_ev = e.join(del_cust, e.user_id == del_cust.c_custkey, "leftsemi")
 
     def metric(df: DataFrame, table: str) -> DataFrame:
         return _labeled_count(df, "n_rows_deleted", table_name=table)
@@ -1781,7 +1781,7 @@ def dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("s"),
     )
     tot = per.agg(F.sum("n").alias("tn"), F.sum("s").alias("ts"))
-    return per.crossJoin(F.broadcast(tot)).select(
+    return per.crossJoin(tot).select(
         F.col("dow").cast("int").alias("dow"),
         F.col("n").cast("long").alias("n_orders"),
         F.col("s").cast("long").alias("rev_cents"),
@@ -2341,7 +2341,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(1, 5):
             s = s + (F.col(col) > F.col(f"{prefix}{i}")).cast("int")
         return s
-    return cust.crossJoin(F.broadcast(b)).select(
+    return cust.crossJoin(b).select(
         F.col("o_custkey").alias("custkey"),
         F.col("recency_days").cast("long").alias("recency_days"),
         F.col("frequency").cast("long").alias("frequency"),
@@ -2700,7 +2700,7 @@ def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile(F.col("c").cast("double"), F.lit(0.33)), 6).alias("q1"),
             F.round(F.percentile(F.col("c").cast("double"), F.lit(0.67)), 6).alias("q2"),
         )
-        return h.crossJoin(F.broadcast(b)).select(
+        return h.crossJoin(b).select(
             "o_custkey",
             F.when(F.col("c") > F.col("q2"), "high")
             .when(F.col("c") > F.col("q1"), "mid")
@@ -2797,7 +2797,7 @@ def cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").alias("sxv"),
         F.sum("y").alias("syv"),
     )
-    adj = v.crossJoin(F.broadcast(theta)).select(
+    adj = v.crossJoin(theta).select(
         "variant",
         "nv",
         "syv",
@@ -2971,7 +2971,7 @@ def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = cust.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("xs"))
     terms = (
         cust.filter(F.col("x") > 0)
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "x",
             F.round(
@@ -2986,7 +2986,7 @@ def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gterms = (
         grp.filter(F.col("xg") > 0)
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "xg",
             F.round(
@@ -3007,8 +3007,8 @@ def theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_num = gterms.agg(
         F.sum(F.col("xg") * F.col("lnr_micro")).alias("b_num")
     )
-    sums = t_num.crossJoin(F.broadcast(b_num)).crossJoin(
-        F.broadcast(tot.select("xs"))
+    sums = t_num.crossJoin(b_num).crossJoin(
+        tot.select("xs")
     )
     den = F.col("xs") * F.lit(1000000).cast(d38)
     return sums.select(
@@ -3269,7 +3269,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).cast(d38)
     return (
-        g.crossJoin(F.broadcast(tot))
+        g.crossJoin(tot)
         .select(
             "c_nationkey",
             "c_mktsegment",
@@ -3361,7 +3361,7 @@ def cohort_payback_month(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("month_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = monthly.join(F.broadcast(sizes), "cohort_month").select(
+    cum = monthly.join(sizes, "cohort_month").select(
         "cohort_month",
         "month_idx",
         "n_users",
@@ -3422,7 +3422,7 @@ def loo_nation_mean_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("s"),
     )
     t = g.agg(F.sum("n").alias("nn"), F.sum("s").alias("ss"))
-    return g.crossJoin(F.broadcast(t)).select(
+    return g.crossJoin(t).select(
         "n_name",
         F.col("n").cast("long").alias("n_customers"),
         signed_ratio_round(F.col("ss") - F.col("s"), F.col("nn") - F.col("n"), 2).alias(

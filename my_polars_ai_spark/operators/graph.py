@@ -330,7 +330,7 @@ def adamic_adar_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     d = _t(spark, sf_dir, "documents")
     toks = (
-        d.join(F.broadcast(docs), "doc_id", "leftsemi")
+        d.join(docs, "doc_id", "leftsemi")
         .select("doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok"))
         .filter(F.col("tok") != "")
         .cache()

@@ -103,7 +103,7 @@ def impute_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean_row = spend.agg(F.avg("avg_spend").alias("__mean"))
     return (
-        spend.crossJoin(F.broadcast(mean_row))
+        spend.crossJoin(mean_row)
         .select(
             "c_custkey",
             F.round(F.coalesce("avg_spend", "__mean"), ROUND_RATIO).alias("avg_spend_imputed"),
@@ -185,7 +185,7 @@ def roc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("label")).over(w).alias("cum_fp"),
         F.row_number().over(w).alias("rn"),
     ).filter(F.col("rn") % 100 == 0)
-    return ranked.crossJoin(F.broadcast(totals)).select(
+    return ranked.crossJoin(totals).select(
         "rn",
         F.round(F.col("cum_tp") / F.col("__p"), ROUND_RATIO).alias("tpr"),
         F.round(F.col("cum_fp") / F.col("__n"), ROUND_RATIO).alias("fpr"),
@@ -289,7 +289,7 @@ def roc_points_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("tp_b").cast("long").alias("p_total"),
         F.sum("fp_b").cast("long").alias("n_total"),
     )
-    return cum.crossJoin(F.broadcast(tot)).select(
+    return cum.crossJoin(tot).select(
         (F.col("bucket") * 4).cast("double").alias("threshold"),
         ratio_round(F.col("cum_tp"), F.col("p_total")).alias("tpr"),
         ratio_round(F.col("cum_fp"), F.col("n_total")).alias("fpr"),
@@ -363,7 +363,7 @@ def feature_minmax_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x_c"),
     )
     bounds = cents.agg(F.min("x_c").alias("lo"), F.max("x_c").alias("hi"))
-    return cents.crossJoin(F.broadcast(bounds)).select(
+    return cents.crossJoin(bounds).select(
         "o_orderkey",
         ratio_round(F.col("x_c") - F.col("lo"), F.col("hi") - F.col("lo")).alias("scaled"),
     )
@@ -489,9 +489,9 @@ def chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = F.col("row_tot") * F.col("col_tot") * F.col("grand")
     contrib = exact_floor_div(2 * p * diff * diff + den, 2 * den)
     return (
-        o.join(F.broadcast(r), "lang")
-        .join(F.broadcast(c), "source")
-        .crossJoin(F.broadcast(t))
+        o.join(r, "lang")
+        .join(c, "source")
+        .crossJoin(t)
         .select(
             "lang", "source",
             F.col("n_obs").cast("long").alias("n_obs"),
@@ -545,9 +545,9 @@ def gini_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast(dec).alias("cents")
     )
     ranked = (
-        spend.join(F.broadcast(c.select("c_custkey", "c_nationkey")),
+        spend.join(c.select("c_custkey", "c_nationkey"),
                    spend.o_custkey == c.c_custkey)
-        .join(F.broadcast(n.select("n_nationkey", "n_name")),
+        .join(n.select("n_nationkey", "n_name"),
               F.col("c_nationkey") == F.col("n_nationkey"))
         .select(
             "n_name", "cents",
@@ -619,7 +619,7 @@ def spearman_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = _t(spark, sf_dir, "nation")
     dec = "decimal(38,0)"
     m = (
-        o.join(F.broadcast(c.select("c_custkey", "c_nationkey")),
+        o.join(c.select("c_custkey", "c_nationkey"),
                o.o_custkey == c.c_custkey)
         .groupBy("c_nationkey", "o_custkey")
         .agg(
@@ -627,7 +627,7 @@ def spearman_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast(dec).alias("cents"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .join(F.broadcast(nat.select("n_nationkey", "n_name")),
+        .join(nat.select("n_nationkey", "n_name"),
               F.col("c_nationkey") == F.col("n_nationkey"))
     )
 

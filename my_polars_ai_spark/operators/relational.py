@@ -8,8 +8,8 @@ examples/from_csv.py:12-14), scalar-agg example
 surface reachable from the sandbox (reference polarsai/__init__.py:439-440).
 
 Scale notes (100 TB discipline):
-- Dimension joins (nation/region/supplier) are explicitly broadcast — the
-  fact side never shuffles for them.
+- Dimension joins (nation/region) broadcast by size: the planner picks
+  the broadcast, so the fact side never shuffles for them.
 - Fact-fact joins (orders ⨝ lineitem, customer ⨝ orders) shuffle on the
   join key; AQE picks sort-merge vs shuffled-hash and handles skew.
 - Aggregations rely on Catalyst's partial (map-side) aggregation; no
@@ -70,7 +70,7 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
+        .join(nation, customer.c_nationkey == nation.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.round(F.sum(_revenue()), ROUND_MONEY).alias("revenue"),
@@ -547,7 +547,7 @@ def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _t(spark, sf_dir, "region")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .rollup("r_name", "n_name")
         .agg(
             F.round(F.sum("c_acctbal"), ROUND_MONEY).alias("sum_bal"),
@@ -647,8 +647,8 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(F.round(F.sum(_revenue()), ROUND_MONEY).alias("revenue"))
     )
@@ -764,7 +764,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
             F.round(F.sum(_revenue().cast(dec)), ROUND_MONEY)
@@ -812,7 +812,7 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
     rev = _revenue().cast(dec)
     sums = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             (F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0).cast(dec)))
              * 1000000).cast("decimal(38,0)").alias("promo_micro"),
@@ -864,7 +864,7 @@ def tpch_q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            & F.col("p_size").between(20, 50) & F.col("l_quantity").between(20, 40))
     )
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .filter(cond)
         .agg(
             F.round(F.sum(_revenue().cast("decimal(28,6)")), ROUND_MONEY)
@@ -916,8 +916,8 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = rev.agg(F.max("total_revenue_micro").alias("max_micro"))
     s = _t(spark, sf_dir, "supplier")
     return (
-        rev.join(F.broadcast(m), rev.total_revenue_micro == m.max_micro)
-        .join(F.broadcast(s), rev.l_suppkey == s.s_suppkey)
+        rev.join(m, rev.total_revenue_micro == m.max_micro)
+        .join(s, rev.l_suppkey == s.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue_micro")
     )
 
@@ -1020,12 +1020,12 @@ def tpch_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = _t(spark, sf_dir, "nation")
     idle = (
-        pos.crossJoin(F.broadcast(a))
+        pos.crossJoin(a)
         .filter(F.col("bal_micro") * F.col("n") > F.col("s"))
         .join(o, pos.c_custkey == o.o_custkey, "leftanti")
     )
     return (
-        idle.join(F.broadcast(n), idle.c_nationkey == n.n_nationkey)
+        idle.join(n, idle.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
@@ -1052,14 +1052,15 @@ def tpch_q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg"),
 )
 def join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi inner join with an explicit broadcast of the dim side
+    """Equi inner join of orders with its customer and nation dims, the
+    planner choosing which side to broadcast by size
     (reference examples/with_multiple_dataframes.py:8-27 join shape)."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("n_name", "o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -1344,7 +1345,7 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
     )
     small = (
-        li.join(F.broadcast(p.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
+        li.join(p.select("p_partkey"), li.l_partkey == F.col("p_partkey"))
         .join(per_part, "l_partkey")
         .filter(5 * F.col("l_quantity").cast(dec) * F.col("n") < F.col("sum_qty"))
         .agg(
@@ -1404,8 +1405,8 @@ def revenue_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg((F.sum(rev) * 1000000).cast("decimal(38,0)").alias("rev_micro"))
     )
@@ -1459,9 +1460,9 @@ def _nation_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     return li.join(
-        F.broadcast(s.select("s_suppkey", "s_nationkey")), li.l_suppkey == s.s_suppkey
+        s.select("s_suppkey", "s_nationkey"), li.l_suppkey == s.s_suppkey
     ).join(
-        F.broadcast(n.select("n_nationkey", "n_name")),
+        n.select("n_nationkey", "n_name"),
         F.col("s_nationkey") == F.col("n_nationkey"),
     )
 
@@ -1735,7 +1736,7 @@ def brand_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     rev = (
-        li.join(F.broadcast(p.select("p_partkey", "p_brand")),
+        li.join(p.select("p_partkey", "p_brand"),
                 li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "l_suppkey")
         .agg(
@@ -1999,10 +2000,10 @@ def star_denormalize_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .select(
             "l_orderkey",
             "l_linenumber",

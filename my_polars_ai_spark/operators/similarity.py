@@ -145,7 +145,7 @@ def cosine_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.filter(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     )
-    return _top_k(_score_neighbors(corpus.crossJoin(F.broadcast(queries))))
+    return _top_k(_score_neighbors(corpus.crossJoin(queries)))
 
 
 def _hyperplane_sign(v: Column, plane: int) -> Column:
@@ -284,7 +284,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), "tbl", "bucket")
     )
     candidates = (
-        bucketed.join(F.broadcast(queries), ["tbl", "bucket"])
+        bucketed.join(queries, ["tbl", "bucket"])
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "qv", "vec_id", "v")
         .dropDuplicates(["q_id", "vec_id"])
@@ -414,7 +414,7 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.slice(ranked_cells, 1, N_PROBE)["cell"]).alias("cell"),
         )
     )
-    return _top_k(_score_neighbors(assigned.join(F.broadcast(probed), "cell")))
+    return _top_k(_score_neighbors(assigned.join(probed, "cell")))
 
 
 KM_K = 4  # Lloyd's-step clusters
@@ -755,7 +755,7 @@ def _shortlist_rerank(scored: DataFrame, corpus: DataFrame) -> DataFrame:
     cq = corpus.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     cn = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv"))
     exact = (
-        shortlist.join(F.broadcast(cq.filter(F.col("q_id") < N_QUERIES)), "q_id")
+        shortlist.join(cq.filter(F.col("q_id") < N_QUERIES), "q_id")
         .join(cn, "neighbor_id")
         .select(
             "q_id",
@@ -1223,7 +1223,7 @@ def _ann_serve_topk(
     )
     decoded = (
         manifest.select("vec_id", "cell", "pq_codes")
-        .join(F.broadcast(probed), "cell")
+        .join(probed, "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -1289,7 +1289,7 @@ def ann_cell_balance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_vectors")
     )
     tot = counts.agg(F.sum("n_vectors").cast("long").alias("total"))
-    return counts.crossJoin(F.broadcast(tot)).select(
+    return counts.crossJoin(tot).select(
         F.col("cell").cast("int").alias("cell"),
         "n_vectors",
         ratio_round(
@@ -1369,9 +1369,9 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         manifest.select("vec_id", "cell")
-        .join(F.broadcast(probed), "cell")
+        .join(probed, "cell")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .join(F.broadcast(qv), "q_id")
+        .join(qv, "q_id")
         .join(
             corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")),
             F.col("vec_id") == F.col("neighbor_id"),
@@ -1386,7 +1386,7 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     depths = spark.range(1, N_PROBE + 1).select(
         F.col("id").cast("int").alias("probe_depth")
     )
-    fanned = cand.join(F.broadcast(depths), F.col("prank") <= F.col("probe_depth"))
+    fanned = cand.join(depths, F.col("prank") <= F.col("probe_depth"))
     w = Window.partitionBy("probe_depth", "q_id").orderBy(
         F.desc("cos"), F.asc("neighbor_id")
     )
@@ -1398,7 +1398,7 @@ def ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = OPS["cosine_topk_brute"].fn(spark, sf_dir).select("q_id", "neighbor_id")
     # both sides fan over the SAME depths frame — explicit aliases keep
     # the join columns unambiguous (no silent trivially-true predicate)
-    truth = brute.crossJoin(F.broadcast(depths)).alias("tr")
+    truth = brute.crossJoin(depths).alias("tr")
     hits = truth.join(
         ivf_topk.alias("iv"),
         (F.col("iv.probe_depth") == F.col("tr.probe_depth"))
@@ -1718,7 +1718,7 @@ def int8_rerank_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast the bounded query set over one corpus pass; score the
     # exact-float and symmetric-int8 cosine in the same projection
     scored = (
-        qz.crossJoin(F.broadcast(queries))
+        qz.crossJoin(queries)
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -1926,7 +1926,7 @@ def hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
     )
     scored = (
-        corpus.crossJoin(F.broadcast(queries))
+        corpus.crossJoin(queries)
         .filter(F.col("label") != F.col("q_label"))
         .select(
             "q_id",
@@ -2008,7 +2008,7 @@ def centroid_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff = (
         F.col("n").cast("decimal(38,0)") * F.col("xm") - F.col("s")
     )
-    terms = pos.join(F.broadcast(cent), ["label", "dim"]).select(
+    terms = pos.join(cent, ["label", "dim"]).select(
         "vec_id", "label", "n", (diff * diff).alias("t")
     )
     agg = terms.groupBy("vec_id", "label").agg(
@@ -2092,8 +2092,8 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(F.col("na2").cast("double")) * F.sqrt(F.col("nb2").cast("double"))
     )
     return (
-        dots.join(F.broadcast(na), "label_a")
-        .join(F.broadcast(nb), "label_b")
+        dots.join(na, "label_a")
+        .join(nb, "label_b")
         .select("label_a", "label_b", F.round(cos, ROUND_RATIO).alias("cos"))
     )
 
@@ -2361,7 +2361,7 @@ def matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vp").alias("qvp"),
     )
     scored = (
-        corpus.crossJoin(F.broadcast(queries))
+        corpus.crossJoin(queries)
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -2452,7 +2452,7 @@ def retrieval_metrics_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
     )
     scored = (
-        corpus.crossJoin(F.broadcast(q))
+        corpus.crossJoin(q)
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -2633,7 +2633,7 @@ def pca_power_iteration_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration control, same contract as dedup_cluster_canonical)."""
     v1 = _pca_v1(spark, sf_dir)
     m = v1.agg(F.max(F.abs(F.col("w"))).alias("ma"))
-    return v1.crossJoin(F.broadcast(m)).select(
+    return v1.crossJoin(m).select(
         F.col("dim").cast("int").alias("dim"),
         F.when(F.col("ma") > 0, signed_ratio_round(F.col("w"), F.col("ma"))).alias(
             "v1_rel"
@@ -2672,7 +2672,7 @@ def _pca_v1(spark: SparkSession, sf_dir: str):
         ).cast("decimal(38,0)").alias("v"),
     )
     p = (
-        pos.join(F.broadcast(v0), "dim")
+        pos.join(v0, "dim")
         .groupBy("vec_id")
         .agg(F.sum(F.col("xm") * F.col("v")).alias("pv"))
     )
@@ -2684,12 +2684,12 @@ def _pca_v1(spark: SparkSession, sf_dir: str):
     s = pos.groupBy("dim").agg(
         F.sum("xm").alias("sa"), F.count(F.lit(1)).cast("decimal(38,0)").alias("n")
     )
-    u = s.join(F.broadcast(v0), "dim").agg(
+    u = s.join(v0, "dim").agg(
         F.sum(F.col("sa") * F.col("v")).alias("uu")
     )
     v1 = (
         s.join(t, "dim")
-        .crossJoin(F.broadcast(u))
+        .crossJoin(u)
         .select("dim", (F.col("n") * F.col("tv") - F.col("sa") * F.col("uu")).alias("w"))
         .cache()
     )
@@ -2752,13 +2752,13 @@ def benchmark_embedding_contamination(spark: SparkSession, sf_dir: str) -> DataF
         F.col("vec_id").alias("bench_vec"), "tbl", "bucket"
     )
     cand = (
-        docs.join(F.broadcast(bench), ["tbl", "bucket"])
+        docs.join(bench, ["tbl", "bucket"])
         .select("doc_vec", "bench_vec")
         .distinct()
     )
     cc = corpus.select(F.col("vec_id").alias("doc_vec"), F.col("v").alias("vc"))
     cb = corpus.select(F.col("vec_id").alias("bench_vec"), F.col("v").alias("vb"))
-    paired = cand.join(cc, "doc_vec").join(F.broadcast(cb), "bench_vec")
+    paired = cand.join(cc, "doc_vec").join(cb, "bench_vec")
     cos = _cos(F.col("vc"), F.col("vb"))
     return (
         paired.withColumn("cos", cos)
@@ -2851,7 +2851,7 @@ def kcenter_coreset_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         top = (
             corpus.filter(~F.col("vec_id").isin(ids))
-            .crossJoin(F.broadcast(cen))
+            .crossJoin(cen)
             .select("vec_id", d2.alias("d2"))
             .groupBy("vec_id")
             .agg(F.min("d2").alias("radius_sq"))
@@ -3111,7 +3111,7 @@ def semdedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     tot = sk.agg(F.count(F.lit(1)).cast("bigint").alias("n_vec"))
-    row = sums.crossJoin(F.broadcast(tot))
+    row = sums.crossJoin(tot)
     stage_structs = [
         F.struct(
             F.lit(float(e)).alias("eps"),

@@ -102,7 +102,7 @@ def _two_sample_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("b1").over(w_off), zero).alias("off1"),
         F.coalesce(F.sum("b2").over(w_off), zero).alias("off2"),
     )
-    return v.join(F.broadcast(offsets), "band").select(
+    return v.join(offsets, "band").select(
         "cents",
         "c1",
         "c2",
@@ -159,7 +159,7 @@ def ks_test_priority_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _two_sample_value_counts(spark, sf_dir).cache()
     n = v.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
     d = (
-        v.crossJoin(F.broadcast(n))
+        v.crossJoin(n)
         .select(
             "n1",
             "n2",
@@ -362,7 +362,7 @@ def brown_forsythe_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = base.groupBy("grp").agg(
         F.round(F.expr("percentile(cents, 0.5)") * 2).cast(_D38).alias("m2")
     )
-    dev = base.join(F.broadcast(med), "grp").select(
+    dev = base.join(med, "grp").select(
         "grp", F.abs(2 * F.col("cents") - F.col("m2")).alias("d")
     )
     return _anova_f_frame(dev, F.col("grp"), F.col("d"))
@@ -465,7 +465,7 @@ def one_hot_segment_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s in _SEGMENTS
     ]
     return (
-        c.join(F.broadcast(nat), c.c_nationkey == nat.n_nationkey)
+        c.join(nat, c.c_nationkey == nat.n_nationkey)
         .groupBy("n_name")
         .agg(*inds, F.count(F.lit(1)).cast("long").alias("n_customers"))
     )
@@ -507,7 +507,7 @@ def target_encode_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
     cents = (F.col("l_extendedprice").cast("decimal(28,6)") * 100).cast(_D38)
     g = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .select(F.col("p_brand").alias("brand"), cents.alias("cents"))
         .groupBy("brand")
         .agg(
@@ -519,7 +519,7 @@ def target_encode_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.col("tn") * F.col("s") + _TE_M * F.col("ts")
     den = F.col("tn") * (F.col("n") + _TE_M)
     return (
-        g.crossJoin(F.broadcast(t))
+        g.crossJoin(t)
         .select(
             "brand",
             F.col("n").cast("long").alias("n_lineitems"),
@@ -614,7 +614,7 @@ def kfold_stratified_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast(_D38).alias("n_docs")
     )
     t = c.groupBy("lang").agg(F.sum("n_docs").alias("lang_total"))
-    return c.join(F.broadcast(t), "lang").select(
+    return c.join(t, "lang").select(
         "lang",
         "fold",
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -1007,7 +1007,7 @@ def kendall_tau_nation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     bal_c = (F.col("c_acctbal").cast("decimal(28,6)") * 100).cast(_D38)
     m = (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(nat), c.c_nationkey == nat.n_nationkey)
+        .join(nat, c.c_nationkey == nat.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.sum(rev_c).alias("rev"),
@@ -1102,7 +1102,7 @@ def bh_fdr_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = h.agg(F.max("hit").alias("max_hit"))
     return (
-        h.crossJoin(F.broadcast(mx))
+        h.crossJoin(mx)
         .select(
             "grp_a",
             "grp_b",
@@ -1308,7 +1308,7 @@ def wasserstein_1d_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     next_bmin = bands.select(
         "band", F.lead("bmin").over(w_b).alias("next_bmin")
     )
-    w = v.join(F.broadcast(next_bmin), "band").select(
+    w = v.join(next_bmin, "band").select(
         "cents",
         "cum1",
         "cum2",
@@ -1319,7 +1319,7 @@ def wasserstein_1d_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = v.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
     t = (
         w.filter(F.col("next_cents").isNotNull())
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .agg(
             F.sum(
                 F.abs(F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1"))
@@ -1545,7 +1545,7 @@ def neyman_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("n") * F.col("sd_micro")).alias("denom"),
         F.sum("n").alias("nn"),
     )
-    return w.crossJoin(F.broadcast(tot)).select(
+    return w.crossJoin(tot).select(
         "source",
         F.col("n").cast("long").alias("n_rows"),
         ratio_round(F.col("sm"), F.col("n")).alias("mean_chars"),

@@ -206,7 +206,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         _census_attach(tf, "tok", "df")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "doc_id",
             "tok",
@@ -379,9 +379,9 @@ def _bm25_parts(spark: SparkSession, sf_dir: str):
         F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
     )
     scored = (
-        tf.join(F.broadcast(df), "tok")
+        tf.join(df, "tok")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(F.sum(term_score).alias("score"))
     )
@@ -522,13 +522,13 @@ def remove_boilerplate_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = d.agg(F.count(F.lit(1)).alias("n"))
     boiler = (
-        dfreq.crossJoin(F.broadcast(nd))
+        dfreq.crossJoin(nd)
         .filter(F.col("df") * 1.0 > BOILERPLATE_DF * F.col("n"))
         .agg(F.coalesce(F.collect_list("tok"), F.array()).alias("bl"))
     )
     kept = F.filter("ts", lambda x: ~F.array_contains(F.col("bl"), x))
     return (
-        docs.crossJoin(F.broadcast(boiler))
+        docs.crossJoin(boiler)
         .select(
             "doc_id",
             F.array_join(kept, " ").alias("clean_text"),
@@ -707,9 +707,9 @@ def token_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_ab") * 1.0 * F.col("n_docs") / (F.col("df_a") * 1.0 * F.col("df_b"))
     )
     return (
-        pairs.join(F.broadcast(da), "tok_a")
-        .join(F.broadcast(db), "tok_b")
-        .crossJoin(F.broadcast(n))
+        pairs.join(da, "tok_a")
+        .join(db, "tok_b")
+        .crossJoin(n)
         .select("tok_a", "tok_b", "c_ab", F.round(pmi, ROUND_RATIO).alias("pmi"))
     )
 
@@ -911,7 +911,7 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         toks.join(counts, "tok")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select("doc_id", lp_micro)
     )
     return scored.groupBy("doc_id").agg(
@@ -1126,7 +1126,7 @@ def rebalance_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per.agg(F.sum("n_docs").alias("total"))
     cap_n = exact_floor_div(F.col("total") * REBALANCE_CAP_PCT, F.lit(100))
     keep_n = F.least(F.col("n_docs"), cap_n)
-    return per.crossJoin(F.broadcast(tot)).select(
+    return per.crossJoin(tot).select(
         "source",
         F.col("n_docs").cast("long").alias("n_docs"),
         keep_n.cast("long").alias("keep_n"),
@@ -1253,7 +1253,7 @@ def source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("decimal(38,0)")
     w = per.select("source", "n_docs", w_micro.alias("w_micro"))
     t = w.agg(F.sum("w_micro").alias("tot"))
-    return w.crossJoin(F.broadcast(t)).select(
+    return w.crossJoin(t).select(
         "source",
         F.col("n_docs").cast("long").alias("n_docs"),
         F.col("w_micro").cast("long").alias("w_micro"),
@@ -1455,10 +1455,10 @@ def heavy_hitters_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = occ.agg(F.count(F.lit(1)).alias("n"))
     return (
-        occ.join(F.broadcast(cand), "tok")
+        occ.join(cand, "tok")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .filter(F.col("cnt") * _HH_K > F.col("n"))
         .select("tok", "cnt")
     )
@@ -1517,7 +1517,7 @@ def global_shuffle_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket", F.coalesce(F.sum("c").over(w_off), F.lit(0)).alias("off")
     )
     return (
-        numbered.join(F.broadcast(offsets), "bucket")
+        numbered.join(offsets, "bucket")
         .select("doc_id", (F.col("off") + F.col("rn")).alias("global_pos"))
     )
 
@@ -1728,10 +1728,10 @@ def psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     nb_t = d.agg(F.count(F.lit(1)).alias("nb"))
     bins = spark.range(PSI_BINS).select(F.col("id").cast("int").alias("bin"))
     grid = (
-        na_t.crossJoin(F.broadcast(bins))
+        na_t.crossJoin(bins)
         .join(ca_t, ["source", "bin"], "left")
-        .join(F.broadcast(cb_t), "bin", "left")
-        .crossJoin(F.broadcast(nb_t))
+        .join(cb_t, "bin", "left")
+        .crossJoin(nb_t)
         .select(
             "source",
             "na",
@@ -1863,7 +1863,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     lp = (
         bg.join(c12, ["w1", "w2"])
         .join(c1, "w1")
-        .crossJoin(F.broadcast(v))
+        .crossJoin(v)
         .select("doc_id", lp_micro)
     )
     return lp.groupBy("doc_id").agg(
@@ -2003,16 +2003,16 @@ def count_min_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(dcol.cast("string"), F.lit(":"), tok)
     ) % CMS_WIDTH
     cells = (
-        occ.crossJoin(F.broadcast(d_tab))
+        occ.crossJoin(d_tab)
         .groupBy("d", cell_of(F.col("d"), F.col("tok")).alias("cell"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
     vocab = occ.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    probes = vocab.crossJoin(F.broadcast(d_tab)).select(
+    probes = vocab.crossJoin(d_tab).select(
         "tok", "exact_cnt", "d", cell_of(F.col("d"), F.col("tok")).alias("cell")
     )
     est = (
-        probes.join(F.broadcast(cells), ["d", "cell"])
+        probes.join(cells, ["d", "cell"])
         .groupBy("tok", "exact_cnt")
         .agg(F.min("c").alias("est_cnt"))
     )
@@ -2080,9 +2080,9 @@ def mutual_info_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
     )
     terms = (
-        cxy.join(F.broadcast(cx), "lang")
-        .join(F.broadcast(cy), "source")
-        .crossJoin(F.broadcast(n))
+        cxy.join(cx, "lang")
+        .join(cy, "source")
+        .crossJoin(n)
         .select("c", "n", lnr_micro.alias("lnr_micro"))
     )
     from my_polars_ai_spark.operators.base import signed_ratio_round
@@ -2145,7 +2145,7 @@ def token_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("vocab_rank"),
         F.sum("c").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
     )
-    return r.crossJoin(F.broadcast(n)).select(
+    return r.crossJoin(n).select(
         F.col("vocab_rank").cast("long").alias("vocab_rank"),
         "tok",
         F.col("c").cast("long").alias("occurrences"),
@@ -2541,9 +2541,9 @@ def distinctive_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("n_all") - F.col("n_s") - (F.col("c_all") - F.col("c")) + 1
     )
     scored = (
-        cs.join(F.broadcast(st), "source")
-        .join(F.broadcast(ct), "tok")
-        .crossJoin(F.broadcast(tot))
+        cs.join(st, "source")
+        .join(ct, "tok")
+        .crossJoin(tot)
         .select(
             "source",
             "tok",
@@ -2637,7 +2637,7 @@ def pack_windows_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.coalesce(F.sum("btok").over(w_off), F.lit(0).cast("decimal(38,0)")).alias("off"),
     )
-    pos = t.join(F.broadcast(offsets), "bucket").select(
+    pos = t.join(offsets, "bucket").select(
         "source",
         "n_tok",
         (F.col("off") + F.col("in_cum") - F.col("n_tok")).alias("start"),
@@ -2695,7 +2695,7 @@ def lang_sampling_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.sqrt(F.col("n").cast("double")) * 1000000.0).cast("decimal(38,0)"),
     )
     t = s.agg(F.sum("n").alias("tn"), F.sum("sq").alias("tsq"))
-    return s.crossJoin(F.broadcast(t)).select(
+    return s.crossJoin(t).select(
         "lang",
         F.col("n").cast("long").alias("n_docs"),
         ratio_round(F.col("n"), F.col("tn")).alias("p_share"),
@@ -2828,8 +2828,8 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     co = (
         a.join(b, ["tok"])
         .filter(F.col("sa") != F.col("sb"))
-        .join(F.broadcast(na), "sa")
-        .join(F.broadcast(nb), "sb")
+        .join(na, "sa")
+        .join(nb, "sb")
     )
     ln_arg = (2 * F.col("ac") * F.col("nb")).cast("double") / (
         F.col("ac") * F.col("nb") + F.col("bc") * F.col("na")
@@ -3229,7 +3229,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("p1_id"), F.col("rel").alias("p1_rel")
     )
     m1 = (
-        cand.crossJoin(F.broadcast(p1))
+        cand.crossJoin(p1)
         .filter(F.col("doc_id") != F.col("p1_id"))
         .join(
             sim.select(F.col("da").alias("doc_id"), F.col("db").alias("p1_id"), "s_micro"),
@@ -3244,8 +3244,8 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("max_sim").alias("p2_sim"),
     )
     m2 = (
-        cand.crossJoin(F.broadcast(p1))
-        .crossJoin(F.broadcast(p2))
+        cand.crossJoin(p1)
+        .crossJoin(p2)
         .filter((F.col("doc_id") != F.col("p1_id")) & (F.col("doc_id") != F.col("p2_id")))
         .join(sim.withColumnRenamed("da", "doc_id"), "doc_id")
         .filter((F.col("db") == F.col("p1_id")) | (F.col("db") == F.col("p2_id")))
@@ -3477,7 +3477,7 @@ def rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
     depths = spark.range(1, _RBO_DEPTH + 1).select(
         F.col("id").cast("int").alias("i")
     )
-    xd = depths.join(F.broadcast(both_m), F.col("m") <= F.col("i"), "left").groupBy(
+    xd = depths.join(both_m, F.col("m") <= F.col("i"), "left").groupBy(
         "i"
     ).agg(F.count("m").alias("x"))
     wlit = F.element_at(F.array(*[F.lit(w) for w in _RBO_W]), F.col("i"))
@@ -3486,7 +3486,7 @@ def rbo_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(wlit * F.col("x") * 1_000_000.0 / F.col("i")).cast("long").alias("t")
     )
     return terms.agg(F.sum("t").cast("long").alias("rbo_micro")).crossJoin(
-        F.broadcast(n_common)
+        n_common
     ).select("n_common", "rbo_micro")
 
 
@@ -3628,7 +3628,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_in = Window.partitionBy("q_micro").orderBy("doc_id").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    r = q.join(F.broadcast(cumh), "q_micro").select(
+    r = q.join(cumh, "q_micro").select(
         "doc_id",
         "n_tok",
         "q_micro",
@@ -3717,7 +3717,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lr = (
         raw.join(target, "b", "left")
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .select(
             "b",
             F.round(
@@ -3819,7 +3819,7 @@ def filter_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "filter_name string, stage int",
     )
     joined = stages.join(
-        F.broadcast(kills), F.col("first_fail") >= F.col("stage"), "left"
+        kills, F.col("first_fail") >= F.col("stage"), "left"
     )
     return joined.groupBy("filter_name", "stage").agg(
         F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_evaluated"),
@@ -4554,7 +4554,7 @@ def kneser_ney_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c1, "w1")
         .join(n1p, "w1")
         .join(cont, "w2")
-        .crossJoin(F.broadcast(tt))
+        .crossJoin(tt)
         .select("doc_id", lp_micro)
     )
     return lp.groupBy("doc_id").agg(
@@ -4822,7 +4822,7 @@ def ccnet_perplexity_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = toks.agg(F.count(F.lit(1)).alias("n_total"))
     lp = (
         toks.join(counts, "tok")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "doc_id",
             F.round(F.log(F.col("c") * 1.0 / F.col("n_total")) * 1000000)
@@ -5156,7 +5156,7 @@ def epoch_allocation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("src_tokens").cast("bigint").alias("total_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_sources"),
     )
-    j = src.crossJoin(F.broadcast(tot))
+    j = src.crossJoin(tot)
     target = exact_floor_div(
         EPOCH_BUDGET_X * F.col("total_tokens"), F.col("n_sources")
     ).cast("bigint")
@@ -5871,7 +5871,7 @@ def domain_excess_loss_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     count): a bounded aggregate, two 1-row broadcast totals, zero
     corpus re-scans."""
     e, t = _domain_excess(spark, sf_dir)
-    return e.crossJoin(F.broadcast(t)).select(
+    return e.crossJoin(t).select(
         "source",
         "n_tokens",
         "avg_nll_micro",
@@ -5913,7 +5913,7 @@ def _domain_excess(spark: SparkSession, sf_dir: str):
         .alias("lp_micro")
     )
     per_src = (
-        wc.crossJoin(F.broadcast(n))
+        wc.crossJoin(n)
         .select("source", lp_micro)
         .groupBy("source")
         .agg(
@@ -5925,7 +5925,7 @@ def _domain_excess(spark: SparkSession, sf_dir: str):
     )
     m = per_src.agg(F.min("avg_nll_micro").alias("min_nll"))
     e = (
-        per_src.crossJoin(F.broadcast(m))
+        per_src.crossJoin(m)
         .select(
             "source",
             "n_tokens",
@@ -6037,8 +6037,8 @@ def doremi_sampling_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_floor_div(F.sum("n_tokens"), F.lit(DOREMI_BUDGET_DEN)).alias("b")
     )
     sp = (
-        e.crossJoin(F.broadcast(t))
-        .crossJoin(F.broadcast(bu))
+        e.crossJoin(t)
+        .crossJoin(bu)
         .select(
             "source",
             "n_tokens",
@@ -6085,7 +6085,7 @@ def doremi_sampling_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = ag.agg(F.sum("tokens_kept").alias("kept_total"))
     return (
         sp.join(ag, "source")
-        .crossJoin(F.broadcast(tk))
+        .crossJoin(tk)
         .select(
             "source",
             "n_docs",
@@ -6194,8 +6194,8 @@ def source_gram_jaccard_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = sizes.select(F.col("source").alias("source_a"), F.col("n").alias("grams_a"))
     sb = sizes.select(F.col("source").alias("source_b"), F.col("n").alias("grams_b"))
     return (
-        inter.join(F.broadcast(sa), "source_a")
-        .join(F.broadcast(sb), "source_b")
+        inter.join(sa, "source_a")
+        .join(sb, "source_b")
         .select(
             "source_a",
             "source_b",
@@ -6306,7 +6306,7 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d38 = "decimal(38,0)"
     joined = src_cdf.join(
-        F.broadcast(pool_cdf),
+        pool_cdf,
         pool_cdf["pcum"].cast(d38) * src_cdf["n_s"]
         >= src_cdf["cum"].cast(d38) * pool_cdf["n"],
     )

@@ -485,7 +485,7 @@ def rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("report_day"),
     )
     return (
-        expanded.join(F.broadcast(days), "report_day")
+        expanded.join(days, "report_day")
         .groupBy("report_day")
         .agg(F.count_distinct("user_id").alias("wau"))
         .select(F.col("report_day").alias("day"), "wau")
@@ -811,7 +811,7 @@ def max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     running = (
-        bucketed.join(F.broadcast(offsets), "bucket")
+        bucketed.join(offsets, "bucket")
         .select(
             "ts",
             (F.col("offset") + F.sum("delta").over(w_in)).alias("live"),
@@ -1051,7 +1051,7 @@ def dow_adjusted_spike_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj_micro = exact_floor_div(2 * 1000000 * num + den, 2 * den)
     adj = (
         d.join(F.broadcast(dw), "dow")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "day",
             F.col("dow").cast("int").alias("dow"),
@@ -1221,8 +1221,8 @@ def wau_overlap_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = sizes.select(F.col("week").alias("week_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("week").alias("week_b"), F.col("n").alias("n_b"))
     return (
-        inter.join(F.broadcast(sa), "week_a")
-        .join(F.broadcast(sb), "week_b")
+        inter.join(sa, "week_a")
+        .join(sb, "week_b")
         .select(
             "week_a",
             "week_b",
@@ -1325,7 +1325,7 @@ def spc_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
     )
-    calc = wk.crossJoin(F.broadcast(tot)).select(
+    calc = wk.crossJoin(tot).select(
         "week",
         "n",
         signed_micro(F.col("s"), F.col("n")).cast("long").alias("xbar_micro"),
@@ -1460,7 +1460,7 @@ def cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = daily.agg(F.count(F.lit(1)).alias("n_all"), F.sum("x").alias("s_all"))
     d38 = "decimal(38,0)"
-    dev = daily.crossJoin(F.broadcast(tot)).select(
+    dev = daily.crossJoin(tot).select(
         "day",
         (F.col("x").cast(d38) * F.col("n_all") - F.col("s_all")).alias("dd"),
         exact_floor_div(F.col("s_all"), F.lit(10)).alias("k"),
@@ -1908,7 +1908,7 @@ def yoy_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.add_months(F.col("month"), 12).alias("month"),
         F.col("cents").alias("cents_prior_year"),
     )
-    j = m.join(F.broadcast(prev), "month", "left")
+    j = m.join(prev, "month", "left")
     from my_polars_ai_spark.operators.base import signed_ratio_round
 
     return j.select(
@@ -2598,7 +2598,7 @@ def conformal_daily_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("ae").isNotNull())
     q = e.agg(F.expr("percentile(CAST(ae AS DOUBLE), 0.95)").alias("q95"))
     return (
-        e.crossJoin(F.broadcast(q))
+        e.crossJoin(q)
         .groupBy("q95")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_scored_days"),

@@ -12,9 +12,9 @@ polarsai/__init__.py:439-440); TPC-H is the canonical basis set covering
 that space's relational shapes.
 
 Scale notes (100 TB discipline):
-- Every dim side (part 2k, supplier 100, nation, region, 1-row scalar
-  aggregates) is explicitly broadcast; fact-fact joins shuffle on their
-  keys and AQE owns the physical strategy.
+- Dim sides (nation, region, 1-row scalar aggregates) broadcast by
+  size, chosen by the planner rather than hinted; fact-fact joins
+  shuffle on their keys and AQE owns the physical strategy.
 - The EXISTS/NOT EXISTS pairs (Q21) decorrelate to LEFT SEMI / LEFT ANTI
   hash joins — never a correlated per-row subquery.
 - Aggregate-then-join ordering everywhere a HAVING precedes a join
@@ -110,15 +110,15 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eu = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        s.join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     pf = _t(spark, sf_dir, "part").filter(
         (F.col("p_type") == "LARGE") & F.col("p_size").between(10, 25)
     ).select("p_partkey")
     eu_cost = cost.join(F.broadcast(eu), cost.l_suppkey == eu.s_suppkey).join(
-        F.broadcast(pf), cost.l_partkey == pf.p_partkey, "leftsemi"
+        pf, cost.l_partkey == pf.p_partkey, "leftsemi"
     )
     best = eu_cost.groupBy("l_partkey").agg(F.min("cost_micro").alias("best_micro"))
     return (
@@ -185,10 +185,10 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
@@ -255,12 +255,12 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol = _revenue().cast(_DEC)
     sums = (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(r), F.col("cn_region") == F.col("r_regionkey"))
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
+        .join(cn, F.col("c_nationkey") == F.col("cn_key"))
+        .join(r, F.col("cn_region") == F.col("r_regionkey"))
+        .join(sn, F.col("s_nationkey") == F.col("sn_key"))
         .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
         .agg(
             _rev_micro(
@@ -313,10 +313,10 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     profit = _revenue() - 0.5 * F.col("p_retailprice") * F.col("l_quantity")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("int").alias("o_year"),
@@ -358,14 +358,14 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     val = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"), "leftsemi")
+        li.join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"), "leftsemi")
         .groupBy("l_partkey")
         .agg(_rev_micro().cast("long").alias("value_micro"))
     )
     tot = val.agg(F.sum("value_micro").alias("total_micro"))
     return (
-        val.crossJoin(F.broadcast(tot))
+        val.crossJoin(tot)
         .filter(F.col("value_micro") * 10000 > F.col("total_micro"))
         .select(F.col("l_partkey").alias("p_partkey"), "value_micro")
     )
@@ -483,8 +483,8 @@ def tpch_q16_supplier_part_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey"
     )
     return (
-        ps.join(F.broadcast(p), ps.l_partkey == p.p_partkey)
-        .join(F.broadcast(bad), ps.l_suppkey == bad.s_suppkey, "leftanti")
+        ps.join(p, ps.l_partkey == p.p_partkey)
+        .join(bad, ps.l_suppkey == bad.s_suppkey, "leftanti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -528,7 +528,7 @@ def tpch_q20_top_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     shipped = (
-        li.join(F.broadcast(red), li.l_partkey == red.p_partkey, "leftsemi")
+        li.join(red, li.l_partkey == red.p_partkey, "leftsemi")
         .groupBy("l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("bigint")).alias("red_qty"))
         .filter(F.col("red_qty") > 300)
@@ -537,9 +537,9 @@ def tpch_q20_top_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
-        shipped.join(F.broadcast(s), shipped.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        shipped.join(s, shipped.l_suppkey == s.s_suppkey)
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("s_name", "s_acctbal", "red_qty")
     )
 
@@ -610,7 +610,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        waiting.join(F.broadcast(s), waiting.l_suppkey == s.s_suppkey)
+        waiting.join(s, waiting.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
@@ -677,7 +677,7 @@ def basket_lift_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.join(F.broadcast(pa_c), "brand_a")
         .join(F.broadcast(pb_c), "brand_b")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "brand_a",
             "brand_b",

@@ -303,8 +303,8 @@ def percent_rank_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = rows.agg(F.count(F.lit(1)).alias("n_total"))
     return (
-        rows.join(F.broadcast(cum), "bucket")
-        .crossJoin(F.broadcast(tot))
+        rows.join(cum, "bucket")
+        .crossJoin(tot)
         .select(
             "c_custkey",
             "bucket",

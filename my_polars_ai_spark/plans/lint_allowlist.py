@@ -101,7 +101,7 @@ _BNLJ_SCALAR_OPS = (
     "epoch_allocation_plan", "quality_classifier_gd_step",
     "semdedup_threshold_sweep",
     # r9: the convergence twin of quality_classifier_gd_step — same
-    # 1-row crossJoin(F.broadcast(n)) doc-count total
+    # 1-row crossJoin(n) doc-count total
     # (classic_ml.py, quality_classifier_gd_convergence), unrolled 3x
     "quality_classifier_gd_convergence",
     # r9: the trained-scorer consumer unrolls the same 3 steps (3x the
@@ -128,7 +128,7 @@ _BNLJ_PROBE_OPS = (
     "ivf_probe_recall_curve",
     # r15: the exact-vs-int8 rerank audit scores one corpus pass
     # against the bounded N_QUERIES broadcast — the same
-    # crossJoin(F.broadcast(queries)) probe shape as
+    # crossJoin(queries) probe shape as
     # cosine_topk_brute, with the int8 code arrays built in the same
     # projection (similarity.py, int8_rerank_fidelity)
     "int8_rerank_fidelity",

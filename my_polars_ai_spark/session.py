@@ -68,7 +68,11 @@ DEFAULT_CONFS: dict[str, str] = {
     # explicit so a misconfigured cluster can't silently disable them.
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",
-    # Joins with small dims should broadcast; AQE can also convert at runtime.
+    # Broadcast policy: the planner broadcasts a join side whose estimated
+    # size is under the static threshold, and AQE converts a shuffled join
+    # at runtime once a stage's measured output is under its own. Operators
+    # leave the choice to them; an F.broadcast hint stays only where
+    # removing it measurably changes the op's plan.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
     # Runtime filters (spark.sql.optimizer.runtime.bloomFilter.enabled /

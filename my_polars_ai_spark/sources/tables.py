@@ -4,12 +4,6 @@ Tables are plain parquet files; at 100 TB these would be
 partitioned/bucketed tables behind a catalog, but the access pattern is
 identical: ``spark.read.parquet`` with Catalyst doing column pruning and
 predicate pushdown into the scan.
-
-``DIM_TABLES`` marks relations that stay small at any scale factor:
-region and nation are fixed-cardinality (5 and 25 rows), so joins
-against them should broadcast, never shuffle the fact side. supplier
-is not one of them: it has 10,000 rows per scale factor (10 at sf0.001,
-1,000 at sf0.1, about 10^9 at 100 TB).
 """
 
 from __future__ import annotations
@@ -30,9 +24,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Fixed cardinality at any SF -> always broadcast-join these.
-DIM_TABLES = frozenset({"region", "nation"})
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

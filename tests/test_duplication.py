@@ -1,4 +1,4 @@
-"""Ratchet on copied code in the package.
+"""Ratchets on copied code and on forced broadcast hints in the package.
 
 A fix to one copy of a duplicated oracle CTE or Spark pipeline silently
 misses the others, so each such fragment has one definition in the
@@ -16,6 +16,9 @@ The measure:
 - walk the files in sorted path order; every line of a counted window
   that already occurred earlier (in this file or an earlier one) is
   redundant.
+
+The second ratchet counts ``F.broadcast(...)`` calls (an AST walk) and
+fails above ``MAX_BROADCAST_HINTS``; its test states the rule.
 """
 
 from __future__ import annotations
@@ -73,4 +76,42 @@ def test_redundant_lines_do_not_grow():
     assert total <= MAX_REDUNDANT_LINES, (
         f"{total} redundant lines (bound {MAX_REDUNDANT_LINES}); give the new "
         f"copy one definition in the module that owns it. Most: {worst}"
+    )
+
+
+# Every hint left changes some op's plan when removed (CHANGES.md lists
+# each with that op).
+MAX_BROADCAST_HINTS = 37
+
+
+def broadcast_hints(root: Path = PACKAGE) -> dict[str, int]:
+    """``F.broadcast(...)`` calls per file (relative path), by an AST walk."""
+    counts: dict[str, int] = {}
+    for path in sorted(root.rglob("*.py")):
+        n = sum(
+            1
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "broadcast"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        )
+        if n:
+            counts[str(path.relative_to(root))] = n
+    return counts
+
+
+def test_broadcast_hint_count():
+    """A forced broadcast hint stays only where removing it changes an
+    op's plan. Everywhere else the planner chooses the join strategy by
+    estimated size (and AQE by measured size), under the thresholds
+    ``session.DEFAULT_CONFS`` sets, so a new hint needs a plan diff
+    (``tools/dump_plans.py --diff``) that shows what it changes, and a
+    deliberate bump here."""
+    counts = broadcast_hints()
+    total = sum(counts.values())
+    assert total <= MAX_BROADCAST_HINTS, (
+        f"{total} F.broadcast hints (bound {MAX_BROADCAST_HINTS}); drop the "
+        f"new hint unless removing it changes the op's plan. Per file: {counts}"
     )
