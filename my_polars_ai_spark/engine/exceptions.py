@@ -23,14 +23,6 @@ class MethodNotImplementedError(SparkAIError):
     """A provider method has not been implemented."""
 
 
-class UnsupportedModelError(SparkAIError):
-    """The requested LLM model is not supported by the provider."""
-
-    def __init__(self, model_name: str):
-        self.model = model_name
-        super().__init__(f"Unsupported model: {model_name}")
-
-
 class BadImportError(SparkAIError):
     """Generated code imported a library outside the whitelist."""
 

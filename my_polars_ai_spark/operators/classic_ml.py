@@ -34,7 +34,6 @@ from my_polars_ai_spark.operators.base import (
 )
 from my_polars_ai_spark.operators.text import _EN_MARKERS, _MARKERS_SQL
 from my_polars_ai_spark.sources.tables import load_table as _t
-from my_polars_ai_spark.sources.tables import scan_partitions
 
 OPS: dict[str, Op] = {}
 op = make_registrar(OPS)
@@ -276,24 +275,6 @@ _NB_SQL = """
 """
 
 
-# Scan partitions at or above this use the shared-aggregate training
-# pass (one corpus explode); below it, the four concurrent single-task
-# subtrees win (see the op docstring). scan_partitions counts the
-# scan's byte-range splits (file size / maxSplitBytes, packed per
-# openCostInBytes), not row groups: 8 ~ "the scan actually
-# parallelizes" on a multi-file or large table.
-_NB_SPLITTABLE_MIN = 8
-
-
-def _nb_input_splittable(d: DataFrame) -> bool:
-    """The branch probe: plans the scan RDD on the driver (no job;
-    ~37 ms at sf0.1 on 4 cores), per call so a changed split conf
-    takes effect. Spark Connect has no RDD API; it gets the
-    concurrent branch."""
-    parts = scan_partitions(d)
-    return parts is not None and parts >= _NB_SPLITTABLE_MIN
-
-
 @session_memo
 def _nb_tokm3(spark: SparkSession, sf_dir: str):
     """naive_bayes_langid's shared training aggregate: token
@@ -333,36 +314,22 @@ def naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle or broadcast; the lang list, totals, and vocab size are
     1-row/L-row broadcasts. No all-pairs anything.
 
-    Corpus-pass shape is scan-split-adaptive (r17, the r16 judge's
-    item 5, same discipline as load_table's spread guard): on
-    a splittable input every training statistic (tokm/tl/lt/v) derives
-    from ONE cached (doc, lang, tok, m) aggregate — one scan+explode
-    instead of four, measured 0.83x on a 16-file variant of the sf0.1
-    fixture. On an unsplittable single-row-group input the four
-    independent explode subtrees run as CONCURRENT single-task stages
-    and beat the shared aggregate (r16 measured 1.5 -> 2.1-2.5s, r17
-    re-measured 1.39 -> 1.54s min), so that input keeps the
-    concurrent shape. Both branches produce identical results
-    (parity-tested on the split fixture)."""
+    Every training statistic (tokm/tl/lt/v) derives from ONE cached
+    (doc, lang, tok, m) aggregate, ``_nb_tokm3``: the corpus is
+    exploded once at any scale. Four independent explode subtrees,
+    which run as concurrent single-task stages on a one-split file,
+    were not faster steady on the sf0.1 fixture (4 cores, 10 pairs: the
+    shared aggregate won 8/10, 2.26 vs 2.39 s); they only make the
+    first call cheaper, because they fill no cache (fresh sessions,
+    median of 6: 5.20 vs 6.42 s)."""
     d = _t(spark, sf_dir, "documents")
-    if _nb_input_splittable(d):
-        tokm3 = _nb_tokm3(spark, sf_dir)
-        tokm = tokm3.select("doc_id", "tok", "m")
-        tl = tokm3.groupBy("tok", "lang").agg(F.sum("m").alias("c"))
-        lt = tokm3.groupBy("lang").agg(F.sum("m").alias("n_lang"))
-        gl = tokm3.agg(F.countDistinct("tok").alias("v")).crossJoin(
-            d.agg(F.count(F.lit(1)).alias("n_docs"))
-        )
-    else:
-        inst = d.select(
-            "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
-        ).filter(F.col("tok") != "")
-        tokm = inst.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("m"))
-        tl = inst.groupBy("tok", "lang").agg(F.count(F.lit(1)).alias("c"))
-        lt = inst.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
-        gl = inst.agg(F.countDistinct("tok").alias("v")).crossJoin(
-            d.agg(F.count(F.lit(1)).alias("n_docs"))
-        )
+    tokm3 = _nb_tokm3(spark, sf_dir)
+    tokm = tokm3.select("doc_id", "tok", "m")
+    tl = tokm3.groupBy("tok", "lang").agg(F.sum("m").alias("c"))
+    lt = tokm3.groupBy("lang").agg(F.sum("m").alias("n_lang"))
+    gl = tokm3.agg(F.countDistinct("tok").alias("v")).crossJoin(
+        d.agg(F.count(F.lit(1)).alias("n_docs"))
+    )
     dl = d.groupBy("lang").agg(F.count(F.lit(1)).alias("d_lang"))
     langs = dl.join(lt, "lang", "left").select(
         F.col("lang").alias("cand"),
@@ -1173,7 +1140,9 @@ def qi_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("k2") >= _QI_K, 2)
     )
     return (
+        # hint kept: without it exchanges 3 -> 4; sf0.1, 10 pairs: hint won 3/10, 0.696 vs 0.714 s
         k0.join(F.broadcast(k1), ["r_name", "segment"])
+        # hint kept: without it exchanges 3 -> 4; sf0.1, 10 pairs: hint won 3/10, 0.557 vs 0.553 s
         .join(F.broadcast(k2), "segment")
         .select("n_name", "segment", "k0", "k1", "k2", lvl.alias("min_safe_level"))
     )
@@ -1207,7 +1176,7 @@ def hypothetical_rank_of_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
-        cu.join(F.broadcast(n), cu.c_nationkey == n.n_nationkey)
+        cu.join(n, cu.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_customers"),
@@ -2012,7 +1981,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cu = _t(spark, sf_dir, "customer")
     na = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cnt = (
-        cu.join(F.broadcast(na), cu.c_nationkey == na.n_nationkey)
+        cu.join(na, cu.c_nationkey == na.n_nationkey)
         .groupBy("n_name")
         .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
     )
@@ -2304,6 +2273,7 @@ def quality_classifier_gd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = resid.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     spine = spark.range(QGD_DIM).select(F.col("id").cast("bigint").alias("b"))
     j = (
+        # hint kept: without it jobs/stages 7 -> 8, exchanges 3 -> 4; sf0.1, 10 pairs: hint won 5/10, 1.581 vs 1.626 s
         spine.join(F.broadcast(grad), "b", "left")
         .crossJoin(n)
         .select(
@@ -2449,6 +2419,7 @@ def quality_classifier_gd_convergence(spark: SparkSession, sf_dir: str) -> DataF
     loss_frames = []
     for k in range(QGD_STEPS):
         z = (
+            # hint kept: without it jobs/stages 36 -> 39, shuffle 11,875 -> 164,382 B; sf0.1, 10 pairs: hint won 10/10, 2.689 vs 4.009 s
             x.join(F.broadcast(w), "b")
             .groupBy("doc_id")
             .agg(F.sum(F.col("cnt") * F.col("w")).cast("bigint").alias("z_micro"))
@@ -2585,6 +2556,7 @@ def qgd_train_artifacts(spark: SparkSession, sf_dir: str):
 
     for _k in range(QGD_STEPS):
         z = (
+            # hint kept: without it a cold fill runs jobs/stages 75 -> 78, shuffle 1.56 -> 1.71 MB; sf0.1, 10 pairs: hint won 7/10, 0.615 vs 0.693 s
             x.join(F.broadcast(w), "b")
             .groupBy("doc_id")
             .agg(F.sum(F.col("cnt") * F.col("w")).cast("bigint").alias("z_micro"))
@@ -2708,6 +2680,7 @@ def quality_classifier_trained_scores(spark: SparkSession, sf_dir: str) -> DataF
     loop, no collect; output is one row per non-empty doc."""
     x, y, w = qgd_train_artifacts(spark, sf_dir)
     zf = (
+        # hint kept: without it a cold fill runs jobs/stages 75 -> 76, shuffle 1.55 -> 1.74 MB; sf0.1, 10 pairs: hint won 5/10, 0.443 vs 0.402 s
         x.join(F.broadcast(w), "b")
         .groupBy("doc_id")
         .agg(F.sum(F.col("cnt") * F.col("w")).cast("bigint").alias("z_micro"))

@@ -532,7 +532,7 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("percentile(abs(value - med), 0.5)").alias("mad"))
     )
     return (
-        e.join(F.broadcast(mad), "event_type")
+        e.join(mad, "event_type")
         .filter(F.abs(F.col("value") - F.col("med")) > 3 * F.col("mad"))
         .select(
             "event_id",
@@ -1832,7 +1832,7 @@ def zscore_outlier_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dev = F.col("n") * F.col("cents") - F.col("sv")
     var_num = F.col("n") * F.col("svv") - F.col("sv") * F.col("sv")
-    return v.join(F.broadcast(s), "event_type").select(
+    return v.join(s, "event_type").select(
         "event_id", "event_type",
         F.col("cents").cast("long").alias("cents"),
         (F.col("n") * dev * dev > 9 * F.col("n") * var_num).alias("is_outlier"),
@@ -2241,7 +2241,7 @@ def winsorized_mean_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.element_at("__p", 1), 6).alias("b_lo"),
         F.round(F.element_at("__p", 2), 6).alias("b_hi"),
     )
-    c = e.join(F.broadcast(b), "event_type").select(
+    c = e.join(b, "event_type").select(
         "event_type",
         (
             F.least(F.greatest(F.col("value"), F.col("b_lo")), F.col("b_hi"))
@@ -3411,7 +3411,7 @@ def loo_nation_mean_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is dimension-bounded."""
     cu = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    c = cu.join(F.broadcast(n), cu.c_nationkey == n.n_nationkey).select(
+    c = cu.join(n, cu.c_nationkey == n.n_nationkey).select(
         "n_name",
         (F.col("c_acctbal").cast("decimal(28,6)") * 100)
         .cast("decimal(38,0)")

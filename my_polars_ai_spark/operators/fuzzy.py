@@ -124,7 +124,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
     r = e.sparkSession.createDataFrame(rates, "et string, pct int")
     return (
-        e.join(F.broadcast(r), e.event_type == r.et)
+        e.join(r, e.event_type == r.et)
         .filter(portable_hash60(F.col("event_id").cast("string")) % 100 < F.col("pct"))
         .select("event_id", "user_id", "event_type")
     )
@@ -304,7 +304,7 @@ def record_linkage_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     cand = (
-        dirty_b.join(F.broadcast(master), "blk")
+        dirty_b.join(master, "blk")
         .withColumn("dist", F.levenshtein("dirty_name", "p_name"))
         .filter(F.col("dist") <= 2)
     )

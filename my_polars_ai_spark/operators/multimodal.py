@@ -175,9 +175,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     container), then a REAL parser reads magic/dimensions/pixels back out
     and derives typed features. Both stages are Arrow-batched mapInPandas
     over binary columns; nothing collects to the driver."""
-    # decode is the narrow hot path and the fixture file is one split —
-    # fan out so mapInPandas runs one Arrow stream per core
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = _t(spark, sf_dir, "documents")
     payloads = d.select("doc_id", "text").mapInPandas(
         _encode_ppm_batches, schema="doc_id bigint, payload binary"
     )
@@ -364,6 +362,7 @@ def audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an exact integer, so even the UDF pipeline is hash-compared
     against the oracle, which re-derives the same samples in SQL. Frame
     count scales with clip length, never corpus size."""
+    # spread kept: sf0.1, 10 pairs: won 10/10, 1.20 vs 1.88 s without; +1 job/stage, +1 exchange, +27 KB shuffle
     d = _t(spark, sf_dir, "documents", spread=True)
     payloads = d.select("doc_id").mapInPandas(
         _synth_pcm_batches, schema="doc_id bigint, payload binary"
@@ -1023,7 +1022,7 @@ def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated index formula. Swapping the numpy body for PIL/torchvision
     changes nothing about the plan; at 100 TB this is a narrow per-image
     map with zero shuffles."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = _t(spark, sf_dir, "documents")
     payloads = d.select("doc_id", "text").mapInPandas(
         _encode_ppm_batches, schema="doc_id bigint, payload binary"
     )

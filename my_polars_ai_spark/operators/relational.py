@@ -546,7 +546,7 @@ def rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
         .rollup("r_name", "n_name")
         .agg(
@@ -645,7 +645,7 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
         .join(n, s.s_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
@@ -1943,7 +1943,7 @@ def abc_part_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_in = Window.partitionBy("b").orderBy(F.desc("revl"), F.asc("l_partkey"))
     w_run = w_in.rowsBetween(Window.unboundedPreceding, 0)
-    r = prb.join(F.broadcast(cumh), "b").select(
+    r = prb.join(cumh, "b").select(
         "l_partkey",
         "revl",
         (F.col("n_higher") + F.row_number().over(w_in)).alias("rnk"),
@@ -2114,7 +2114,7 @@ def median_two_pass_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_in = Window.partitionBy("b").orderBy("c")
     g = (
-        rows.join(F.broadcast(cum), "b")
+        rows.join(cum, "b")
         .withColumn("gr", F.col("below") + F.row_number().over(w_in))
     )
     k1 = F.expr("(n_all - 1) DIV 2 + 1")

@@ -687,7 +687,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("part") == "train").cast("int")).cast("long").alias("n_train"),
         F.sum((F.col("part") == "test").cast("int")).cast("long").alias("n_test"),
     )
-    return totals.crossJoin(F.broadcast(leak)).select(
+    return totals.crossJoin(leak).select(
         "n_train",
         "n_test",
         F.col("pairs").cast("long").alias("leaked_pairs"),
@@ -815,7 +815,7 @@ def robust_scale_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("iqr4") > 0,
         signed_ratio_round(4 * F.col("cents") - F.col("med4"), F.col("iqr4")),
     )
-    return base.join(F.broadcast(q), "segment").select(
+    return base.join(q, "segment").select(
         "c_custkey", "segment", scaled.alias("scaled")
     )
 
@@ -1454,8 +1454,8 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         ratio_round(F.sum("cents"), F.count(F.lit(1))).alias("mean_cents"),
     )
     return (
-        pt.crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
+        pt.crossJoin(lo)
+        .crossJoin(hi)
         .select(
             "n_orders",
             F.lit(_B_REPLICAS).cast("long").alias("n_replicas"),

@@ -1050,7 +1050,7 @@ def dow_adjusted_spike_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = (F.col("s_dow") * F.col("n_all")).cast(d38)
     adj_micro = exact_floor_div(2 * 1000000 * num + den, 2 * den)
     adj = (
-        d.join(F.broadcast(dw), "dow")
+        d.join(dw, "dow")
         .crossJoin(tot)
         .select(
             "day",
@@ -2078,7 +2078,7 @@ def concurrency_duration_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_lead = Window.partitionBy("bucket").orderBy("ts", "delta")
     running = (
-        bucketed.join(F.broadcast(bucket_meta), "bucket")
+        bucketed.join(bucket_meta, "bucket")
         .select(
             (F.col("offset") + F.sum("delta").over(w_in)).alias("live"),
             (

@@ -96,7 +96,9 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exact integer micro-units). The correlated MIN subquery
     decorrelates into aggregate-then-self-equi-join on the exact
     integer cost — ties surface identically on both engines. Supplier/
-    nation/region collapse to a tiny broadcast dim; the part filter
+    nation/region collapse to the European-supplier dim, which the
+    planner broadcasts by size (it grows with the scale factor, so it
+    carries no hint); the part filter
     semi-joins the cost table BEFORE the per-part minimum so only
     relevant groups aggregate. Top-100 by (acctbal, partkey, name) is a
     total order -> TakeOrderedAndProject."""
@@ -117,7 +119,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pf = _t(spark, sf_dir, "part").filter(
         (F.col("p_type") == "LARGE") & F.col("p_size").between(10, 25)
     ).select("p_partkey")
-    eu_cost = cost.join(F.broadcast(eu), cost.l_suppkey == eu.s_suppkey).join(
+    eu_cost = cost.join(eu, cost.l_suppkey == eu.s_suppkey).join(
         pf, cost.l_partkey == pf.p_partkey, "leftsemi"
     )
     best = eu_cost.groupBy("l_partkey").agg(F.min("cost_micro").alias("best_micro"))
@@ -675,7 +677,9 @@ def basket_lift_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pa_c = per.select(F.col("p_brand").alias("brand_a"), F.col("n_b").alias("na"))
     pb_c = per.select(F.col("p_brand").alias("brand_b"), F.col("n_b").alias("nb"))
     return (
+        # hint kept: without it exchanges 11 -> 12; sf0.1, 10 pairs: hint won 6/10, 2.354 vs 2.401 s
         pairs.join(F.broadcast(pa_c), "brand_a")
+        # hint kept: without it exchanges 11 -> 12; sf0.1, 10 pairs: hint won 4/10, 2.302 vs 2.284 s
         .join(F.broadcast(pb_c), "brand_b")
         .crossJoin(n)
         .select(

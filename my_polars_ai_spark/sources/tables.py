@@ -103,12 +103,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
     ``spark.sql.files.maxPartitionBytes``, so a small file is one input
     split and caps every pre-shuffle stage at one task. With ``spread``,
     a scan that plans fewer partitions than ``defaultParallelism`` is
-    round-robin repartitioned to it. Use it where the narrow phase
-    dominates (UDF decode, per-row parsing, tokenize/md5 gram hashing).
-    It costs one shuffle, so leave it off for ops whose first step is a
-    groupBy/join: AQE re-partitions there anyway. A scan that already
-    parallelizes gets no extra shuffle, and on Spark Connect, where the
-    scan cannot be probed, the table is returned as read.
+    round-robin repartitioned to it. It costs one shuffle, so a call
+    sets it only where paired timings show a gain (``tools/time_op.py
+    --no-spread``; sf0.1, 4 cores, 10 pairs, spread won 10/10 in each):
+    the audio frame UDF (audio_frame_features 1.20 vs 1.88 s without)
+    and the tokenize/md5 gram-hashing passes (repeated_span_stats 1.05
+    vs 1.51 s, repeated_span_excision 1.36 vs 1.89 s,
+    ngram_novelty_score 1.02 vs 1.56 s). It lost, and was dropped, on
+    the Arrow-batched image decode (multimodal_decode 0.84 vs 0.45 s
+    without, image_resize_stats 0.74 vs 0.42 s, 0/10 each) and on the
+    token pass of the ``_domain_excess`` memo fill (first call in a
+    fresh session 4.44 vs 3.74 s without, won 1/6; steady 3/10). Leave
+    it off for ops whose first step is a groupBy/join: AQE
+    re-partitions there anyway. A scan that already parallelizes gets
+    no extra shuffle, and on Spark Connect, where the scan cannot be
+    probed, the table is returned as read.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -134,9 +143,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view for the SQL API / the engine."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -218,7 +218,7 @@ def _enrich_agg(events: DataFrame, dim: DataFrame) -> DataFrame:
     from my_polars_ai_spark.operators.timeseries import _sum4_value
 
     return (
-        events.join(F.broadcast(dim), "user_id")
+        events.join(dim, "user_id")
         .groupBy(F.window("ts", "1 hour").alias("w"), "tier")
         .agg(F.count(F.lit(1)).alias("n"), _sum4_value().alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "tier", "n", "sum_value")
@@ -235,11 +235,12 @@ def enrich_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join — the standard production shape for
     decorating an event stream with dimension attributes before a
-    windowed aggregation. The static side is broadcast to every task and
-    the join is STATELESS (no watermark state, unlike stream-stream
-    joins); only the downstream windowed agg keeps state, bounded by the
-    watermark. At scale the dim refreshes per micro-batch via the normal
-    batch-table resolution — no code change."""
+    windowed aggregation. The static side (one row per user, so it grows
+    with the corpus) is joined by size, and the join is STATELESS (no
+    watermark state, unlike stream-stream joins); only the downstream
+    windowed agg keeps state, bounded by the watermark. At scale the dim
+    refreshes per micro-batch via the normal batch-table resolution — no
+    code change."""
     events = read_events_stream(spark, sf_dir).withWatermark("ts", "30 minutes")
     agg = _enrich_agg(events, _user_tier_dim(spark, sf_dir))
     return _drain_to_memory(agg, "complete")

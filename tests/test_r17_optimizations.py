@@ -69,42 +69,44 @@ def _split_confs(spark, nbytes: int, open_cost: int | None = None):
             spark.conf.set(k, v)
 
 
-def test_naive_bayes_branches_agree_on_splittable_input(spark, sf_dir, tmp_path):
-    """naive_bayes_langid picks its training-pass shape from the scan
-    split count (r17): >= _NB_SPLITTABLE_MIN splits -> one shared
-    cached (doc, lang, tok, m) aggregate; below -> four concurrent
-    explode subtrees. Splitting the same documents table into 8 files
-    must flip the branch without changing a single output row."""
+def _split_documents(sf_dir: str, doc_dir) -> None:
+    """Write the fixture's documents table as 8 parquet files."""
     import pyarrow.parquet as pq
 
-    from my_polars_ai_spark.operators import classic_ml
-    from my_polars_ai_spark.operators.classic_ml import (
-        _NB_SPLITTABLE_MIN,
-        _nb_input_splittable,
-    )
-    from my_polars_ai_spark.sources.tables import load_table
-
-    split_dir = tmp_path / "sf_split"
-    doc_dir = split_dir / "documents.parquet"
     doc_dir.mkdir(parents=True)
     t = pq.read_table(f"{sf_dir}/documents.parquet")
-    k = _NB_SPLITTABLE_MIN
-    n = t.num_rows
+    k, n = 8, t.num_rows
     for i in range(k):
         lo, hi = i * n // k, (i + 1) * n // k
         pq.write_table(t.slice(lo, hi - lo), str(doc_dir / f"part-{i:04d}.parquet"))
 
-    fn = classic_ml.OPS["naive_bayes_langid"].fn
-    # 1 GiB splits keep the single file in one split at any fixture
-    # size and core count; 64 KiB splits with a 64 KiB per-file open
-    # cost plan each of the 8 files as its own split (or more)
-    with _split_confs(spark, 1 << 30):
-        assert not _nb_input_splittable(load_table(spark, sf_dir, "documents"))
-        single = {tuple(r) for r in fn(spark, sf_dir).collect()}
+
+def test_naive_bayes_matches_duckdb_on_split_input(spark, sf_dir, tmp_path):
+    """naive_bayes_langid over the documents table split into 8 files,
+    each planned as its own scan split, equals its DuckDB oracle over
+    the same files (the registry sweep checks the single-file fixture)
+    and trains through the shared (doc, lang, tok, m) memo."""
+    import duckdb
+
+    from my_polars_ai_spark.operators import classic_ml
+    from my_polars_ai_spark.plans import oracle
+    from my_polars_ai_spark.sources.tables import load_table, scan_partitions
+
+    split_dir = tmp_path / "sf_split"
+    _split_documents(sf_dir, split_dir / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{split_dir}/documents.parquet/*.parquet'")
+    cur = con.execute(classic_ml._NB_SQL)
+    want, cols = cur.fetchall(), [d[0] for d in cur.description]
+    con.close()
+
+    # 64 KiB splits with a 64 KiB per-file open cost plan each of the 8
+    # files as its own split (or more)
     with _split_confs(spark, 1 << 16):
-        assert _nb_input_splittable(load_table(spark, str(split_dir), "documents"))
-        split = {tuple(r) for r in fn(spark, str(split_dir)).collect()}
-    assert split == single
+        assert scan_partitions(load_table(spark, str(split_dir), "documents")) >= 8
+        df = classic_ml.OPS["naive_bayes_langid"].fn(spark, str(split_dir))
+        issues = oracle.compare(df, want, cols)
+    assert not issues, issues
     assert (spark, str(split_dir)) in classic_ml._nb_tokm3.entries
 
 
@@ -173,29 +175,18 @@ def test_triplet_windows_read_cache_layout_without_exchange_or_sort(spark, sf_di
 
 def test_split_probe_follows_split_confs_on_a_reused_handle(spark, sf_dir, tmp_path):
     """load_table hands out one memoized DataFrame per table, and
-    PySpark caches ``.rdd`` per DataFrame; the branch probe must still
-    re-plan the scan under the current split confs."""
-    import pyarrow.parquet as pq
+    PySpark caches ``.rdd`` per DataFrame; the split probe that
+    ``load_table(spread=True)`` runs must still re-plan the scan under
+    the current split confs."""
+    from my_polars_ai_spark.sources.tables import load_table, scan_partitions
 
-    from my_polars_ai_spark.operators.classic_ml import (
-        _NB_SPLITTABLE_MIN,
-        _nb_input_splittable,
-    )
-    from my_polars_ai_spark.sources.tables import load_table
+    _split_documents(sf_dir, tmp_path / "documents.parquet")
 
-    doc_dir = tmp_path / "documents.parquet"
-    doc_dir.mkdir()
-    t = pq.read_table(f"{sf_dir}/documents.parquet")
-    k, n = _NB_SPLITTABLE_MIN, t.num_rows
-    for i in range(k):
-        lo, hi = i * n // k, (i + 1) * n // k
-        pq.write_table(t.slice(lo, hi - lo), str(doc_dir / f"part-{i:04d}.parquet"))
-
-    # a 1 GiB max split with a 1-byte open cost packs all 8 files into
-    # one split; 64 KiB for both plans each file as its own split
+    # a 1 GiB max split with a 1-byte open cost packs the 8 files into
+    # fewer splits; 64 KiB for both plans each file as its own split
     d = load_table(spark, str(tmp_path), "documents")
     with _split_confs(spark, 1 << 30, open_cost=1):
-        assert not _nb_input_splittable(d)
+        assert scan_partitions(d) < 8
     with _split_confs(spark, 1 << 16):
         assert load_table(spark, str(tmp_path), "documents") is d
-        assert _nb_input_splittable(d)
+        assert scan_partitions(d) >= 8

@@ -283,12 +283,10 @@ def test_pandas_on_spark_interop(spark, sf_dir):
 
 def test_load_table_spread_skips_repartition_without_rdd_api(spark, sf_dir, monkeypatch):
     """Spark Connect has no RDD API, so the scan-split probe gives None:
-    ``load_table(spread=True)`` then returns the scan as read, and naive
-    Bayes takes its concurrent branch. With the RDD API, the single-file
-    fixture is spread to defaultParallelism."""
+    ``load_table(spread=True)`` then returns the scan as read. With the
+    RDD API, the single-file fixture is spread to defaultParallelism."""
     from pyspark.errors import PySparkNotImplementedError
 
-    from my_polars_ai_spark.operators.classic_ml import _nb_input_splittable
     from my_polars_ai_spark.sources.tables import load_table, scan_partitions
 
     def logical_plan(df):
@@ -307,7 +305,6 @@ def test_load_table_spread_skips_repartition_without_rdd_api(spark, sf_dir, monk
     read = load_table(spark, sf_dir, "documents", spread=True)
     assert scan_partitions(read) is None
     assert "Repartition" not in logical_plan(read)
-    assert _nb_input_splittable(read) is False
 
 
 def test_load_table_reuses_one_handle_per_session(spark, tmp_path, jobs_started):

@@ -6,7 +6,8 @@ Usage: PYTHONPATH=. python tools/dump_plans.py [--vanilla] <sf_dir> <out.json | 
 The dump builds every op, or only the ops named, each after
 ``clearCache()``: ``df.explain("simple")``, the physical plan before
 execution, with the per-run names stripped (expression ids,
-``plan_id=``, ``mem_<hex>`` sinks, lambda-variable suffixes). It writes
+``plan_id=``, ``mem_<hex>`` sinks, lambda-variable suffixes) and
+metadata strings printed in full. It writes
 ``{op: plan}`` to one JSON file, or with ``-`` prints each plan under
 its joins and exchange count. The session is ``get_spark``'s
 (``SPARK_GRAFT_CPUS`` cores), or with ``--vanilla`` a bare
@@ -44,6 +45,8 @@ def dump(sf_dir: str, out: str, names: list[str], vanilla: bool) -> None:
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate() if vanilla else get_spark("dump_plans")
+    # uncut FileScan DataFilters: a cut falls wherever the lambda-variable counter has got to
+    spark.conf.set("spark.sql.maxMetadataStringLength", str(1 << 20))
     ops = all_ops()
     plans = {}
     for name in names or sorted(ops):
